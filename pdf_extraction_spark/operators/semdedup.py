@@ -122,30 +122,10 @@ def semantic_assign(spark: SparkSession, sf: str, centroids=None,
     )
 
 
-def semantic_members(spark: SparkSession, sf: str, centroids=None,
-                     embeddings: DataFrame | None = None,
-                     quality: DataFrame | None = None,
-                     tau: float = SEM_TAU):
-    """Shared pipeline: returns (assigned, members) where assigned =
-    (vec_id, sem_cluster) for every vector and members = (vec_id,
-    sem_cluster, group_id, best_id) for every member of a non-singleton
-    semantic-duplicate group.
-
-    ``centroids`` (optional, k × dim) is the k ∝ n ESCALATION SEAM: the
-    oracle path uses the default first-sem_k_for(n) deterministic
-    centroids (bit-reproducible in SQL), while a large deployment passes
-    `similarity.ivf_train`-produced k-means centroids (k ~ n /
-    target_cluster_width, e.g. k=256+ — same one-matmul-per-batch
-    assignment UDF) so Σ|cluster|² stays bounded as the corpus grows —
-    demonstrated with measured pair volumes in
-    tests/test_semdedup.py::test_k_escalation_bounds_pair_volume.
-    ``embeddings`` (optional) overrides the sf-dir embeddings table with a
-    caller-provided (vec_id, embedding) frame — the curation chain feeds
-    feature-hashed text embeddings through this seam. ``quality``
-    (optional, (vec_id, n_chars)) overrides the keeper-quality source the
-    same way; ``tau`` the duplicate-cosine threshold."""
-    assigned = semantic_assign(spark, sf, centroids=centroids,
-                               embeddings=embeddings)
+def scored_pairs(assigned: DataFrame, tau: float = SEM_TAU) -> DataFrame:
+    """(va, vb, cos) for every within-cluster pair va < vb of ``assigned``
+    (vec_id, sem_cluster, embedding) whose quantized cosine, rounded to 6
+    places, is at least ``tau``."""
     # r7 (guide §4.1/§4.2 — ship columns once, compute batched): the
     # cluster-keyed self-join + per-pair cosine UDF moved every embedding
     # across the Arrow boundary ONCE PER PAIR (Σ|c|² ≈ n·SEM_WIDTH pairs ×
@@ -183,9 +163,35 @@ def semantic_members(spark: SparkSession, sf: str, centroids=None,
         .groupBy("sem_cluster")
         .applyInPandas(_score, "va long, vb long, cos double")
     )
+    return scored.select("va", "vb", F.round("cos", 6).alias("cos")).filter(F.col("cos") >= tau)
+
+
+def semantic_members(spark: SparkSession, sf: str, centroids=None,
+                     embeddings: DataFrame | None = None,
+                     quality: DataFrame | None = None,
+                     tau: float = SEM_TAU):
+    """Shared pipeline: returns (assigned, members) where assigned =
+    (vec_id, sem_cluster) for every vector and members = (vec_id,
+    sem_cluster, group_id, best_id) for every member of a non-singleton
+    semantic-duplicate group.
+
+    ``centroids`` (optional, k × dim) is the k ∝ n ESCALATION SEAM: the
+    oracle path uses the default first-sem_k_for(n) deterministic
+    centroids (bit-reproducible in SQL), while a large deployment passes
+    `similarity.ivf_train`-produced k-means centroids (k ~ n /
+    target_cluster_width, e.g. k=256+ — same one-matmul-per-batch
+    assignment UDF) so Σ|cluster|² stays bounded as the corpus grows —
+    demonstrated with measured pair volumes in
+    tests/test_semdedup.py::test_k_escalation_bounds_pair_volume.
+    ``embeddings`` (optional) overrides the sf-dir embeddings table with a
+    caller-provided (vec_id, embedding) frame — the curation chain feeds
+    feature-hashed text embeddings through this seam. ``quality``
+    (optional, (vec_id, n_chars)) overrides the keeper-quality source the
+    same way; ``tau`` the duplicate-cosine threshold."""
+    assigned = semantic_assign(spark, sf, centroids=centroids,
+                               embeddings=embeddings)
     pairs = (
-        scored.select("va", "vb", F.round("cos", 6).alias("cos"))
-        .filter(F.col("cos") >= tau)
+        scored_pairs(assigned, tau)
         .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b"))
         # the contraction loop re-reads the pair set every round
         .localCheckpoint(eager=True)

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from typing import Dict, FrozenSet, List, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.sources.tables import TableIO
@@ -46,6 +46,20 @@ LEDGER_SCHEMA = (
     "run_id string, bucket int, status string, attempt int, n_turns bigint, "
     "checksum string, n_buckets int, input_fp string"
 )
+
+
+def row_hash() -> Column:
+    """The per-row hash whose ``bit_xor`` over a bucket is its checksum."""
+    return F.xxhash64("conv_id", "turn_idx", F.sha2(F.col("extracted_text"), 256))
+
+
+def stats_of(rows) -> List[Dict]:
+    """Ledger stats dicts from aggregate rows with bucket / n_turns /
+    checksum fields."""
+    return [
+        {"bucket": int(r["bucket"]), "n_turns": int(r["n_turns"]), "checksum": int(r["checksum"])}
+        for r in rows
+    ]
 
 
 class LedgerParamsMismatch(RuntimeError):
@@ -135,23 +149,13 @@ class Ledger:
         """Per-bucket n_turns + order-insensitive checksum of written rows."""
         rows = (
             written.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_turns"),
-                F.bit_xor(
-                    F.xxhash64("conv_id", "turn_idx", F.sha2(F.col("extracted_text"), 256))
-                ).alias("checksum"),
-            )
+            .agg(F.count("*").alias("n_turns"), F.bit_xor(row_hash()).alias("checksum"))
             .collect()  # ≤ buckets-per-wave rows
         )
-        return [
-            {"bucket": int(r["bucket"]), "n_turns": int(r["n_turns"]), "checksum": int(r["checksum"])}
-            for r in rows
-        ]
+        return stats_of(rows)
 
     def _append(self, tuples: List[tuple]) -> None:
-        df = self.io.spark.createDataFrame(tuples, LEDGER_SCHEMA).withColumn(
-            "ts", F.current_timestamp()
-        )
+        df = self.io.frame(tuples, LEDGER_SCHEMA).withColumn("ts", F.current_timestamp())
         self.io.write(df, LEDGER_TABLE, mode="append")
 
     def mark_done(self, stats: List[Dict], attempt: int = 1) -> None:

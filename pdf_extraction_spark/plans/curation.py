@@ -373,12 +373,12 @@ def curate_corpus(
             stage_rows.append(("semantic_dedup", n_semdedup))
         stage_rows.append((f"derep_{derep}", n_derep))
         io.write(
-            spark.createDataFrame(stage_rows, "stage string, n_docs bigint"),
+            io.frame(stage_rows, "stage string, n_docs bigint"),
             "curation_stats", mode="overwrite",
         )
         if audit_leakage:
             io.write(
-                spark.createDataFrame(
+                io.frame(
                     [(split, v["n_held_docs_leaking"],
                       v["n_train_docs_implicated"], v["n_shared_grams"])
                      for split, v in sorted(stats["leakage"].items())],

@@ -162,7 +162,7 @@ def _bloom_meta(io: TableIO, n_batch: int) -> int:
         meta = int(io.read("bloom_meta").collect()[0]["m_bits"])
     if stamp is not None and stamp != meta:
         io.write(
-            io.spark.createDataFrame([(stamp,)], "m_bits bigint"),
+            io.frame([(stamp,)], "m_bits bigint"),
             "bloom_meta", mode="overwrite",
         )
         return stamp
@@ -170,7 +170,7 @@ def _bloom_meta(io: TableIO, n_batch: int) -> int:
         return meta
     m_bits = max(BLOOM_MIN_BITS, BLOOM_BITS_PER_KEY * n_batch * BLOOM_HEADROOM)
     io.write(
-        io.spark.createDataFrame([(m_bits,)], "m_bits bigint"),
+        io.frame([(m_bits,)], "m_bits bigint"),
         "bloom_meta", mode="overwrite",
     )
     return m_bits
@@ -441,7 +441,7 @@ def rebuild_bloom(spark: SparkSession, root: str) -> dict:
 
     io.rewrite(rebuilt, "bloom", partition_by=["batch_id"], verify=verify)
     io.write(
-        spark.createDataFrame([(m_bits,)], "m_bits bigint"),
+        io.frame([(m_bits,)], "m_bits bigint"),
         "bloom_meta", mode="overwrite",
     )
     words = io.read("bloom").count()

@@ -88,9 +88,11 @@ def op_metrics_rows(df, run_id: str, stage: str) -> List[Dict[str, Any]]:
     """Executed-plan metrics flattened to ``op_metrics`` table rows — the
     operator-grain twin of the reference's per-job stats rows
     (app/db/batch_jobs.py:127-183). Call AFTER an action on ``df`` (the
-    pipeline executes its per-run summary aggregation via collect() for
-    exactly this reason — a write goes through its own QueryExecution and
-    leaves the DataFrame's plan metrics at zero). Absent metrics stay NULL
+    pipeline collects its run aggregate — the last wave's lineage stats and
+    the route metrics in one ``GROUPING SETS`` plan — and records that plan
+    under ``stage="run_metrics"``; a write would go through its own
+    QueryExecution and leave the DataFrame's plan metrics at zero). The
+    rows are written with ``TableIO.frame``. Absent metrics stay NULL
     (e.g. a Scan node has no shuffle columns), so per-node alert queries
     can distinguish 'not applicable' from 'zero'."""
     rows: List[Dict[str, Any]] = []

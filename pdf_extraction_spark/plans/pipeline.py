@@ -14,9 +14,12 @@ Stages (SURVEY.md §7):
      batch yields status='failed' rows instead of killing tasks (reference
      PartialExtractionError semantics, app/services/pdf_extractor.py:588-633).
   5. wave commit        — buckets are processed in bounded waves; each wave
-     writes data partitions (dynamic overwrite → idempotent re-run) and then
-     appends its lineage rows. A crash between waves loses at most one
-     uncommitted wave; resume re-runs only missing buckets.
+     writes data partitions (dynamic overwrite → idempotent re-run). Every
+     wave but the last then reads its buckets back and appends their
+     lineage rows before the next wave starts; the last wave's lineage
+     rows come from the run aggregate of stage 6. A crash between waves
+     loses at most one uncommitted wave; resume re-runs only missing
+     buckets.
      DEFAULT n_waves=1: each wave is a full input scan when the input is not
      bucket-partitioned (the bucket filter can't push down a computed
      column), so multi-wave commit is only worth it when (a) the input IS
@@ -24,12 +27,18 @@ Stages (SURVEY.md §7):
      manifest level — or (b) the run is long enough that losing a whole run
      to a cluster failure costs more than the extra scans. Within one wave,
      Spark task retries already absorb transient failures.
-  6. metrics            — one groupBy aggregation per run (replaces the
-     reference's row-at-a-time batch_jobs counters,
-     app/db/batch_jobs.py:86-183).
+  6. run aggregate      — ONE read-back of every bucket this run wrote,
+     aggregated by ``GROUPING SETS ((bucket), (route))``: the bucket rows
+     are the last wave's lineage (n_turns + checksum of the on-disk rows),
+     the route rows are the run's metrics (replaces the reference's
+     row-at-a-time batch_jobs counters, app/db/batch_jobs.py:86-183), and
+     its executed plan is recorded in ``op_metrics``. Lineage, metrics and
+     op_metrics rows are written from driver-built Arrow tables
+     (``TableIO.frame``): JVM-only tasks, one file per write.
 
 Scale notes (100 TB / 10^12 turns): no driver-side data movement — the only
-collect is the ledger's bucket-status list (≤ n_buckets rows of metadata).
+collects are the ledger's bucket-status list and the run aggregate
+(≤ n_buckets + routes rows of metadata).
 The extraction stage is map-only (no shuffle beyond the explicit
 repartition, which doubles as the write-partitioning). Output is
 bucket-partitioned so downstream conv_id joins/groupBys can pre-prune.
@@ -45,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.core.extractor import extract_turn
-from pdf_extraction_spark.plans.checkpoint import Ledger
+from pdf_extraction_spark.plans.checkpoint import Ledger, row_hash, stats_of
 from pdf_extraction_spark.sources.tables import TableIO
 
 SPANS_TYPE = (
@@ -58,6 +67,12 @@ EXTRACTED_SCHEMA = (
     f"extracted_text string, spans {SPANS_TYPE}, quality_score double, "
     "doc_kind string, classify_method string, route string, status string, "
     "error string, extract_ms double"
+)
+
+METRICS_SCHEMA = (
+    "run_id string, route string, n_turns bigint, n_ok bigint, n_partial bigint, "
+    "n_failed bigint, avg_quality double, p95_extract_ms double, "
+    "throughput_turns_per_sec double"
 )
 
 _PASS_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
@@ -171,10 +186,9 @@ def run_extraction(
     total_turns = 0
     failed_buckets: List[int] = []
     ran_buckets: List[int] = []
+    last_wave: List[int] = []  # ledgered from the run aggregate, not per wave
     waves = [todo[i::n_waves] for i in range(min(n_waves, len(todo)))]
-    for wave in waves:
-        if not wave:
-            continue
+    for i, wave in enumerate(waves):
         wave_df = df.filter(F.col("bucket").isin([int(b) for b in wave]))
         if repartition_input:
             # explicit (bucket, salt) repartition: balances whale
@@ -211,21 +225,28 @@ def run_extraction(
                 n_escalated += enqueue_buckets(io, run_id, exhausted_now)
             continue
 
-        # lineage rows are computed FROM WHAT WAS WRITTEN — the ledger
-        # certifies on-disk state, not in-flight state.
-        written = io.read("extracted").filter(F.col("bucket").isin([int(b) for b in wave]))
-        stats = ledger.bucket_stats(written)
-        # buckets with zero input rows still count as done (else they re-run
-        # on every resume forever)
-        nonempty = {s["bucket"] for s in stats}
-        stats += [{"bucket": int(b), "n_turns": 0, "checksum": 0}
-                  for b in wave if int(b) not in nonempty]
-        total_turns += sum(s["n_turns"] for s in stats)
-        ledger.mark_done(stats)
         ran_buckets.extend(int(b) for b in wave)
+        if i == len(waves) - 1:
+            last_wave = [int(b) for b in wave]
+            continue
+        # an earlier wave commits now: its lineage must land before the
+        # next wave starts. Lineage rows are computed FROM WHAT WAS
+        # WRITTEN — the ledger certifies on-disk state, not in-flight state.
+        written = io.read("extracted").filter(F.col("bucket").isin([int(b) for b in wave]))
+        total_turns += _commit(ledger, ledger.bucket_stats(written), wave)
 
     elapsed = time.monotonic() - t0
-    _write_metrics(io, run_id, elapsed, buckets=ran_buckets, n_turns_run=total_turns)
+    if ran_buckets:
+        # ONE read-back of the ran buckets yields both the last wave's
+        # lineage rows and the run's route metrics
+        agg = _run_aggregate(io.read("extracted").filter(F.col("bucket").isin(ran_buckets)))
+        rows = agg.collect()  # ≤ ran buckets + routes rows: metadata-sized
+        if last_wave:
+            in_wave = set(last_wave)
+            stats = stats_of(r for r in rows if not r["by_route"] and r["bucket"] in in_wave)
+            total_turns += _commit(ledger, stats, last_wave)
+        elapsed = time.monotonic() - t0
+        _write_metrics(io, run_id, elapsed, [r for r in rows if r["by_route"]], total_turns, agg)
     return {
         "run_id": run_id,
         "buckets_done": len(done),
@@ -238,47 +259,66 @@ def run_extraction(
     }
 
 
-def _write_metrics(io: TableIO, run_id: str, elapsed_s: float,
-                   buckets: Optional[List[int]] = None,
-                   n_turns_run: int = 0) -> None:
-    """Per-run metrics table (FIXTURES.md §4; reference stats A3-A6,
-    app/routers/stats.py:57-260 + app/db/batch_jobs.py:127-183 collapsed
-    into one groupBy). Scoped to THE BUCKETS THIS INVOCATION PROCESSED —
-    a resumed run (or a shared warehouse) must not claim the whole table's
-    rows under its own run_id, and throughput divides the turns THIS run
-    produced by THIS run's elapsed time."""
-    if not buckets:
-        return
-    extracted = io.read("extracted").filter(F.col("bucket").isin([int(b) for b in buckets]))
-    tps = n_turns_run / max(elapsed_s, 1e-9)
-    metrics = (
-        extracted.groupBy("route")
+def _commit(ledger: Ledger, stats: List[dict], wave: List[int]) -> int:
+    """Mark a wave's buckets done; returns the turns it wrote. Buckets
+    with zero input rows still count as done (else they re-run on every
+    resume forever)."""
+    nonempty = {s["bucket"] for s in stats}
+    stats = stats + [{"bucket": int(b), "n_turns": 0, "checksum": 0}
+                     for b in wave if int(b) not in nonempty]
+    ledger.mark_done(stats)
+    return sum(s["n_turns"] for s in stats)
+
+
+def _run_aggregate(written: DataFrame) -> DataFrame:
+    """Per-bucket ledger stats and per-route metrics of the written rows in
+    one aggregate: ``GROUPING SETS ((bucket), (route))``. The row hash is
+    computed once per row, below the Expand that duplicates rows into the
+    two sets, so the Expand carries no text. ``by_route`` tells the two
+    row kinds apart; on bucket rows the route columns are unused, and on
+    route rows the checksum is."""
+    return (
+        written.withColumn("row_hash", row_hash())
+        .groupingSets([["bucket"], ["route"]], "bucket", "route")
         .agg(
+            F.grouping("bucket").alias("by_route"),
             F.count("*").alias("n_turns"),
+            F.bit_xor("row_hash").alias("checksum"),
             F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
             F.sum(F.when(F.col("status") == "partial", 1).otherwise(0)).alias("n_partial"),
             F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("n_failed"),
             F.avg("quality_score").alias("avg_quality"),
             F.percentile_approx("extract_ms", 0.95).alias("p95_extract_ms"),
         )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("throughput_turns_per_sec", F.lit(float(tps)))
-        .select("run_id", "route", "n_turns", "n_ok", "n_partial", "n_failed",
-                "avg_quality", "p95_extract_ms", "throughput_turns_per_sec")
     )
-    # collect (route-grain, metadata-sized) instead of writing the lazy
-    # aggregate: ONE execution both yields the metrics rows and populates
-    # the executed plan, whose per-operator numbers (rows scanned, shuffle
-    # bytes, spill, peak memory) are appended as the op_metrics table —
-    # the operator-grain stats the reference keeps per batch job
-    # (app/db/batch_jobs.py:127-183). A write would run its own
-    # QueryExecution and leave these at zero.
+
+
+def _write_metrics(io: TableIO, run_id: str, elapsed_s: float, route_rows: List,
+                   n_turns_run: int, agg: DataFrame) -> None:
+    """Per-run metrics table (FIXTURES.md §4; reference stats A3-A6,
+    app/routers/stats.py:57-260 + app/db/batch_jobs.py:127-183 collapsed
+    into one aggregate). ``route_rows`` are the route rows of the run
+    aggregate, which is scoped to THE BUCKETS THIS INVOCATION PROCESSED —
+    a resumed run (or a shared warehouse) must not claim the whole table's
+    rows under its own run_id, and throughput divides the turns THIS run
+    produced by THIS run's elapsed time.
+
+    The aggregate was collected, not written: ONE execution both yields
+    the metrics rows and populates the executed plan, whose per-operator
+    numbers (rows scanned, shuffle bytes, spill, peak memory) are appended
+    as the op_metrics table — the operator-grain stats the reference keeps
+    per batch job (app/db/batch_jobs.py:127-183). A write would run its own
+    QueryExecution and leave these at zero."""
     from pdf_extraction_spark.plans.observe import OP_METRICS_SCHEMA, op_metrics_rows
 
-    rows = metrics.collect()
-    io.write(io.spark.createDataFrame(rows, metrics.schema), "metrics", mode="append")
-    op_rows = op_metrics_rows(metrics, run_id, stage="run_metrics")
-    io.write(io.spark.createDataFrame(op_rows, OP_METRICS_SCHEMA),
+    tps = float(n_turns_run / max(elapsed_s, 1e-9))
+    rows = [
+        (run_id, r["route"], r["n_turns"], r["n_ok"], r["n_partial"], r["n_failed"],
+         r["avg_quality"], r["p95_extract_ms"], tps)
+        for r in route_rows
+    ]
+    io.write(io.frame(rows, METRICS_SCHEMA), "metrics", mode="append")
+    io.write(io.frame(op_metrics_rows(agg, run_id, stage="run_metrics"), OP_METRICS_SCHEMA),
              "op_metrics", mode="append")
 
 

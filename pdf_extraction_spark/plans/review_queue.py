@@ -69,7 +69,7 @@ def enqueue_buckets(io: TableIO, run_id: str, buckets: List[int],
     new = [b for b in new if b not in existing]
     if not new:
         return 0
-    df = io.spark.createDataFrame(
+    df = io.frame(
         [(f"bucket:{run_id}:{b}", "bucket", run_id, b, None, None, error_type, None)
          for b in new],
         REVIEW_SCHEMA,

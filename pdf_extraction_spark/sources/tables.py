@@ -17,9 +17,12 @@ app/db/extractions.py:98-104).
 from __future__ import annotations
 
 import os
-from typing import List, Optional
+from typing import Any, List, Optional, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -71,6 +74,22 @@ class TableIO:
         if merge_schema:
             r = r.option("mergeSchema", "true")
         return r.parquet(self.path(name))
+
+    def frame(self, rows: Sequence[Any], schema: str) -> DataFrame:
+        """Driver-built metadata rows (ledger, metrics, op_metrics, queue
+        items, stage counts) as a one-partition DataFrame of DDL
+        ``schema``. ``rows`` are tuples/Rows in schema order or dicts keyed
+        by column name; absent dict keys and ``None`` are NULL.
+
+        The rows go to the JVM as one Arrow table, so writing the frame
+        runs JVM-only tasks and produces one file. ``createDataFrame(list)``
+        instead pickles the rows into a Python RDD: every tiny write then
+        starts one Python task per default-parallelism slice and writes a
+        file per slice."""
+        struct = StructType.fromDDL(schema)
+        records = [r if isinstance(r, dict) else dict(zip(struct.names, r)) for r in rows]
+        table = pa.Table.from_pylist(records, schema=to_arrow_schema(struct))
+        return self.spark.createDataFrame(table, struct).coalesce(1)
 
     def write(
         self,

@@ -205,9 +205,10 @@ def test_no_per_row_python_udfs_in_codebase():
             # curation.py (per-stage scalar counts + the ≤3-row split mix),
             # semdedup.py (SEM_K×dim centroid rows — same class as the IVF
             # centroid matrix),
-            # pipeline.py (_write_metrics: route-grain metrics rows,
-            # collected so ONE execution feeds both the metrics write and
-            # the op_metrics executed-plan capture),
+            # pipeline.py (the run aggregate: ≤ n_buckets lineage rows +
+            # route-grain metrics rows, collected so ONE execution feeds
+            # the last wave's ledger commit, the metrics write and the
+            # op_metrics executed-plan capture),
             # incremental.py (one-row batch-summary aggregate per ingest +
             # the one-scalar total-count compaction check) —
             # all metadata-sized driver state, never data rows

@@ -235,13 +235,15 @@ def test_grouped_scores_match_pairwise_udf(spark):
             .collect()
         )
     }
-    from pdf_extraction_spark.operators.semdedup import semantic_members
+    from pdf_extraction_spark.operators.semdedup import scored_pairs, semantic_members
 
+    # the matmul path emits exactly the UDF's (va, vb) -> cos pairs
+    got = {(r["va"], r["vb"]): r["cos"] for r in scored_pairs(assigned).collect()}
     _assigned, members = semantic_members(spark, SF_DIR)
-    # the registered pipeline's pair set must coincide with the UDF pairs
-    # (members derive from exactly the threshold-passing pairs)
+    # the registered pipeline's members derive from exactly those pairs
     member_ids = {m["vec_id"] for m in [r.asDict() for r in members.collect()]}
     udf_ids = {v for pair in want for v in pair}
     release_caches()
+    assert got == want
     assert member_ids == udf_ids
     assert want, "fixture should produce threshold-passing pairs"
