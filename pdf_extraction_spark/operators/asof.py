@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.parallel import broadcast_within
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 
@@ -92,7 +93,7 @@ def asof_join_broadcast(
     dim_r = dim.withColumnRenamed(key, "_dim_key")
     tiebreaks = [c for c in dim_r.columns if c not in ("_dim_key", dim_ts)]
     joined = facts_id.join(
-        F.broadcast(dim_r),
+        broadcast_within(dim_r),
         (F.col(key) == F.col("_dim_key")) & (F.col(dim_ts) <= F.col(fact_ts)),
         "inner",
     ).drop("_dim_key")

@@ -158,7 +158,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     within a corpus identical to ln(N/df) ranking up to ties (both are
     strictly decreasing in df); ties broken by word. The df table is
     vocab-sized → broadcast back onto the tf aggregate."""
-    from pdf_extraction_spark.parallel import fan_out
+    from pdf_extraction_spark.parallel import broadcast_within, fan_out
 
     docs = T(spark, sf, "documents")
     n_docs = docs.count()  # scalar; one job over parquet metadata, not a collect loop
@@ -171,7 +171,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     df_tbl = tf.groupBy("word").agg(F.count("*").alias("df"))
     idf = F.expr(f"CAST({n_docs} AS BIGINT) * 1000000 div df")
     sc = (
-        tf.join(F.broadcast(df_tbl), "word")
+        tf.join(broadcast_within(df_tbl), "word")
         .groupBy("lang", "word")
         .agg(F.sum(F.col("tf") * idf).alias("score"))
     )

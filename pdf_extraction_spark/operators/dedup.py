@@ -46,7 +46,6 @@ pdf_extraction_spark.cache and released at the next action boundary.
 from __future__ import annotations
 
 import hashlib
-import os as _os
 
 import numpy as np
 import pandas as pd
@@ -54,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.cache import release_caches, track
-from pdf_extraction_spark.parallel import fan_out
+from pdf_extraction_spark.parallel import broadcast_within, fan_out
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 N_HASHES = 8
@@ -233,7 +232,7 @@ def lsh_band_candidates(sigs: DataFrame, max_band_width: int = MAX_BAND_WIDTH) -
     # recompute avoided). The cache-defeat that required checkpoints in
     # the incremental paths is specific to old/new FILTER SPLITS of one
     # source, where analyzer de-duplication rewrites one branch.
-    bands = track(bands.join(F.broadcast(hot), ["seed", "mh"], "left_anti").persist())
+    bands = track(bands.join(broadcast_within(hot), ["seed", "mh"], "left_anti").persist())
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -244,18 +243,14 @@ def lsh_band_candidates(sigs: DataFrame, max_band_width: int = MAX_BAND_WIDTH) -
     )
 
 
-VERIFY_BROADCAST_DOC_CAP = int(
-    _os.environ.get("SPARK_VERIFY_BROADCAST_DOC_CAP", "200000")
-)  # measured ~0.8 KB of distinct-shingle bytes per testdata doc → ~160 MB
-# raw per broadcast side at the cap (one build at runtime: both sides are
-# the identical subplan), comfortably inside an 8g driver; above the cap
-# the shuffle attach runs unchanged — a corpus-scale gram table never
-# broadcasts
+def _gram_row_bytes(grams):
+    """Broadcast bytes of one (doc_id, grams) row: 48 fixed, 8 per gram,
+    the gram bytes (the join separators stand in for word padding)."""
+    return 48 + F.octet_length(F.array_join(grams, " ")) + 8 * F.size(grams)
 
 
 def _verify_jaccard(cand: DataFrame, grams: DataFrame,
-                    n_docs: int | None = None,
-                    broadcast_doc_cap: int = VERIFY_BROADCAST_DOC_CAP) -> DataFrame:
+                    n_bytes: int | None = None) -> DataFrame:
     """Exact shingle-Jaccard verification of candidate (doc_a, doc_b)
     pairs; emits pairs whose ROUNDED jaccard (6 dp — matching the oracle's
     filter exactly) clears JACCARD_MIN. Shared by the batch and the
@@ -265,21 +260,20 @@ def _verify_jaccard(cand: DataFrame, grams: DataFrame,
     gram arrays with two sort-merge joins shuffled both docs' shingle
     arrays PER CANDIDATE PAIR — multi-GB in flight for 3.9M pairs at
     sf1.0, measured 20.5 s → 10.3 s when the attach stopped moving pair
-    rows. When the caller knows the gram table is corpus-bounded
-    (``n_docs`` ≤ the cap), both gram sides are BROADCAST instead, so the
+    rows. When the caller's measure of the gram table (``n_bytes``) fits
+    the broadcast budget, both gram sides are BROADCAST instead, so the
     pair set never moves and the payload crosses once as one broadcast per
-    side. Above the cap (or unknown) the shuffle join remains — exact
-    either way. |A∪B| is computed as |A|+|B|−|A∩B| (the same integer, so
-    the rounded division is bit-identical) to drop the second per-pair
-    set build."""
+    side. Above it (or unmeasured) both sides shuffle — exact either way.
+    |A∪B| is computed as |A|+|B|−|A∩B| (the same integer, so the rounded
+    division is bit-identical) to drop the second per-pair set build."""
     base = grams.select("doc_id", "grams")
-    if n_docs is not None and n_docs <= broadcast_doc_cap:
-        # broadcast the IDENTICAL subplan for both sides (aliases above the
-        # exchange, not projections below it) so ReuseExchange builds the
-        # hash relation once and probes it for doc_a and doc_b
-        ga, gb = F.broadcast(base.alias("ga")), F.broadcast(base.alias("gb"))
-    else:
-        ga, gb = base.alias("ga"), base.alias("gb")
+    # gate the IDENTICAL subplan for both sides (aliases above the
+    # exchange, not projections below it) so ReuseExchange builds the hash
+    # relation once and probes it for doc_a and doc_b; an unmeasured side
+    # gates as over budget (the planner estimate undercounts payloads)
+    n_bytes = float("inf") if n_bytes is None else n_bytes
+    ga = broadcast_within(base.alias("ga"), n_bytes)
+    gb = broadcast_within(base.alias("gb"), n_bytes)
     inter = F.size(F.array_intersect("ga.grams", "gb.grams"))
     return (
         cand.join(ga, F.col("doc_a") == F.col("ga.doc_id"))
@@ -307,11 +301,11 @@ def minhash_lsh_pairs(docs: DataFrame, max_band_width: int = MAX_BAND_WIDTH) -> 
     # sides); persist it or Catalyst recomputes the shingle/minhash subtree
     # per consumer (measured 25s → 3s at sf0.1)
     sigs = track(minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK))
-    # the count materializes the cache the three consumers need anyway and
-    # feeds the broadcast-vs-shuffle gate of the verify attach (guide §3.1)
-    n_docs = sigs.count()
+    # the byte measure materializes the cache the three consumers need
+    # anyway and feeds the broadcast gate of the verify attach (guide §3.1)
+    n_bytes = sigs.agg(F.sum(_gram_row_bytes(F.col("grams")))).first()[0] or 0
     cand = lsh_band_candidates(sigs, max_band_width)
-    return _verify_jaccard(cand, sigs.select("doc_id", "grams"), n_docs=n_docs)
+    return _verify_jaccard(cand, sigs.select("doc_id", "grams"), n_bytes=n_bytes)
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -372,7 +366,7 @@ def incremental_minhash_pairs(
     index_grams: DataFrame,
     new_docs: DataFrame,
     max_band_width: int = MAX_BAND_WIDTH,
-    n_docs: int | None = None,
+    n_bytes: int | None = None,
 ) -> DataFrame:
     """Incremental LSH index maintenance: near-dup pairs INVOLVING the new
     batch, without recomputing any old-corpus signature. New bands join the
@@ -396,8 +390,9 @@ def incremental_minhash_pairs(
     # capped_all has exactly ONE consumer (the o-side of the candidate
     # join) — no persist: caching it would pin O(|corpus| bands) memory
     # without ever avoiding a recomputation
-    capped_all = all_bands.join(F.broadcast(hot), ["seed", "mh"], "left_anti")
-    capped_new = new_bands.join(F.broadcast(hot), ["seed", "mh"], "left_anti")
+    hot = broadcast_within(hot)
+    capped_all = all_bands.join(hot, ["seed", "mh"], "left_anti")
+    capped_new = new_bands.join(hot, ["seed", "mh"], "left_anti")
     n, o = capped_new.alias("n"), capped_all.alias("o")
     cand = (
         n.join(o, (F.col("n.seed") == F.col("o.seed")) & (F.col("n.mh") == F.col("o.mh"))
@@ -409,9 +404,9 @@ def incremental_minhash_pairs(
         .distinct()
     )
     grams_all = index_grams.unionByName(new_sigs.select("doc_id", "grams"))
-    # n_docs (when the caller knows the corpus row count cheaply) gates the
-    # broadcast-vs-shuffle attach inside the verify — see _verify_jaccard
-    return _verify_jaccard(cand, grams_all, n_docs=n_docs)
+    # n_bytes (the caller's measure of the union gram table) gates the
+    # broadcast attach inside the verify — see _verify_jaccard
+    return _verify_jaccard(cand, grams_all, n_bytes=n_bytes)
 
 
 def q_incremental_lsh(spark: SparkSession, sf: str) -> DataFrame:
@@ -427,9 +422,13 @@ def q_incremental_lsh(spark: SparkSession, sf: str) -> DataFrame:
     old = docs.filter(F.col("doc_id") % 10 != 0)
     new = docs.filter(F.col("doc_id") % 10 == 0)
     bands, grams = build_minhash_index(old)
-    # one cheap count-star on the base table (conservative upper bound on
-    # the union gram-table size) gates the verify's broadcast attach
-    return incremental_minhash_pairs(bands, grams, new, n_docs=docs.count())
+    # the union gram table stays lazy, so the verify's broadcast gate gets an
+    # upper bound from the text: at most one shingle per word, each repeating
+    # SHINGLE words (16 covers the 8-byte slot and the separators)
+    text = F.col("text")
+    bound = 48 + SHINGLE * F.octet_length(text) + 16 * F.size(F.split(text, " "))
+    n_bytes = docs.agg(F.sum(bound)).first()[0] or 0
+    return incremental_minhash_pairs(bands, grams, new, n_bytes=n_bytes)
 
 
 _SQL_MINHASH = f"""
@@ -635,7 +634,7 @@ def q_bloom_prefilter(spark: SparkSession, sf: str) -> DataFrame:
     )
     probes = with_m(new).select("doc_id", "h", F.explode(_bloom_probes()).alias("p"))
     hits = (
-        probes.join(F.broadcast(filt), probes["p.word_idx"] == filt["word_idx"], "left")
+        probes.join(broadcast_within(filt), probes["p.word_idx"] == filt["word_idx"], "left")
         .select(
             "doc_id",
             "h",
@@ -774,7 +773,7 @@ MAX_CC_ROUNDS = 100  # alternation converges in O(log² n) rounds; real pair
 # the gated centroid/broadcast collects elsewhere in the repo); above it
 # the exact distributed path runs unchanged, so 100 TB-scale pair graphs
 # keep the star-contraction shape.
-CC_LOCAL_EDGE_CAP = int(_os.environ.get("SPARK_CC_LOCAL_EDGE_CAP", "2000000"))
+CC_LOCAL_EDGE_CAP = 2_000_000
 
 
 def _local_components(spark, E: DataFrame) -> DataFrame:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.parallel import broadcast_within
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 TOPK_PER_GROUP = 3
@@ -204,7 +205,7 @@ def q_range_join_windows(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("day"),
     )
     ev_binned = ev.withColumn("day", F.floor(F.unix_timestamp("ts") / _SECS_PER_DAY))
-    joined = ev_binned.join(F.broadcast(win_days), "day").filter(
+    joined = ev_binned.join(broadcast_within(win_days), "day").filter(
         (F.col("ts") >= F.col("w_start")) & (F.col("ts") < F.col("w_end"))
     )
     return (

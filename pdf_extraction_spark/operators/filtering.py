@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.cache import track
-from pdf_extraction_spark.parallel import fan_out
+from pdf_extraction_spark.parallel import broadcast_within, fan_out
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 # ---------------------------------------------------------------- DSIR
@@ -368,7 +368,7 @@ def ccnet_scores(docs: DataFrame) -> DataFrame:
         )
     )
     per_doc = (
-        ex.join(F.broadcast(lm), "w")
+        ex.join(broadcast_within(lm), "w")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
@@ -736,16 +736,7 @@ GROUP BY d.source ORDER BY d.source
 LEAK_SHINGLE = 10  # training-chunk grain — matches the derep operators
 
 
-# Broadcast the held-out gram set only while the held slice is small
-# (~60 B/gram, ~100 grams/doc → 20k docs ≈ 120 MB worst case); a larger
-# eval slice flips to a gram-keyed shuffle_hash equi-join — the
-# key-count-gated broadcast rule every dual-grain join here follows.
-LEAK_BROADCAST_HELD_DOC_CAP = 20_000
-
-
-def split_leakage_stats(
-    docs: DataFrame, text_col: str = "text", broadcast_held: bool = True
-) -> DataFrame:
+def split_leakage_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Train/held-out leakage audit over an already-split corpus
     (doc_id, split, <text_col>): per held split, the count of val/test
     documents sharing any word-{LEAK_SHINGLE}-gram with a train document,
@@ -753,11 +744,10 @@ def split_leakage_stats(
     between-split dedup check The Pile/C4 run before publishing splits —
     contamination_check's internal-partition twin (there the reference
     set is an external benchmark; here it is the model's own eval slice).
-    Shape: only the held side's DISTINCT grams cross the join;
-    ``broadcast_held`` gates the small-side broadcast (callers compare
-    their held-doc count against LEAK_BROADCAST_HELD_DOC_CAP), flipping
-    to a gram-keyed shuffle_hash join past the cap — the train-side
-    explode stays map-local either way."""
+    Shape: only the held side's grams cross the join; one text-only
+    aggregate bounds their bytes for the broadcast gate, which flips to a
+    gram-keyed shuffle_hash join past the budget — the train-side explode
+    stays map-local either way."""
     from pdf_extraction_spark.operators.dedup import grams_udf
 
     grams = docs.select(
@@ -771,11 +761,14 @@ def split_leakage_stats(
     train = grams.filter(F.col("split") == "train").select(
         F.col("doc_id").alias("train_doc"), "g"
     )
-    joined = (
-        train.join(F.broadcast(held), "g")
-        if broadcast_held
-        else train.join(held.hint("shuffle_hash"), "g")
-    )
+    # bound from the held text, not the grams (no second UDF pass): at most
+    # one (held_doc, held_split, g) row of 64 B per word, and each word is
+    # repeated in at most LEAK_SHINGLE grams
+    text = F.col(text_col)
+    n_bytes = docs.filter(F.col("split") != "train").agg(F.sum(
+        64 * F.size(F.split(text, " ")) + LEAK_SHINGLE * F.octet_length(text)
+    )).first()[0] or 0
+    joined = train.join(broadcast_within(held, n_bytes), "g")
     return (
         joined.groupBy("held_split")
         .agg(

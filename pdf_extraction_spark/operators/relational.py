@@ -21,6 +21,7 @@ from pdf_extraction_spark.functions.exprs import (
     slug_expr,
     token_estimate_expr,
 )
+from pdf_extraction_spark.parallel import broadcast_within
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 
@@ -61,13 +62,13 @@ GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus
 # J1 — dedup anti-join: incoming keys not in the stored-hash ledger
 # (reference check_duplicate, app/db/extractions.py:161-180; short-circuit
 # app/routers/extraction.py:110-125). Ledger simulated as already-stored
-# documents (doc_id % 7 == 0); the small ledger side is broadcast.
+# documents (doc_id % 7 == 0); the ledger side goes through the byte gate.
 def q_dedup_anti_new_work(spark: SparkSession, sf: str) -> DataFrame:
     docs = T(spark, sf, "documents")
     hashed = docs.select("doc_id", F.md5("text").alias("h"))
     ledger = hashed.filter(F.col("doc_id") % 7 == 0).select("h")
     return (
-        hashed.join(F.broadcast(ledger), "h", "left_anti")
+        hashed.join(broadcast_within(ledger), "h", "left_anti")
         .select("doc_id")
         .orderBy("doc_id")
     )
@@ -90,7 +91,7 @@ def q_union_dedup_check(spark: SparkSession, sf: str) -> DataFrame:
     store_b = hashed.filter(F.col("source") == "src1").select("h")
     union = store_a.unionByName(store_b).distinct()
     return (
-        hashed.join(F.broadcast(union), "h", "left_anti")
+        hashed.join(broadcast_within(union), "h", "left_anti")
         .groupBy("source")
         .agg(F.count("*").alias("n_new"))
         .orderBy("source")
@@ -119,9 +120,9 @@ def q_retry_state_join(spark: SparkSession, sf: str) -> DataFrame:
     )
     # r7 (guide §3.1): prior is an aggregate at customer grain (~150k rows,
     # 3 narrow cols at sf1.0) — broadcast it so the customer side never
-    # shuffles; the planner's estimate for a post-aggregate is too coarse
-    # to pick this automatically
-    joined = cust.join(F.broadcast(prior), cust.c_custkey == prior.o_custkey, "left_outer")
+    # shuffles; it grows with the customer table, so the byte gate flips it
+    # to a shuffle_hash join past the budget
+    joined = cust.join(broadcast_within(prior), cust.c_custkey == prior.o_custkey, "left_outer")
     decision = (
         F.when(F.col("n_prior").isNull(), "process")
         .when(F.col("has_completed") == 1, "replay")
@@ -802,13 +803,13 @@ QUERIES.update(
 # §2.3 depth (r3): a SIX-TABLE join — TPC-H Q5 (regional supplier revenue)
 # adapted to the testdata date range. tpch_q1 exercises scan+aggregate;
 # this one exercises what Catalyst's join planning actually does at scale:
-# the dimension chain region(5) → nation(25) → supplier(100) → customer
-# (1.5k) is broadcast end-to-end, so the two FACT tables (orders 15k,
-# lineitem 60k — the ones that are petabytes at 100 TB) are never
-# shuffled for the dims; the only exchange left is the l_orderkey ⋈
-# o_orderkey fact-fact join and the final small aggregation. The
-# local-supplier constraint (c_nationkey = s_nationkey) is the Q5
-# signature predicate. Plan pinned by tests/test_plan_shapes.py.
+# lineitem (the fact that is petabytes at 100 TB) streams through a chain
+# of hash joins. region/nation are TPC-H's fixed-size dims and are always
+# broadcast; supplier, customer and the date-filtered orders grow with
+# the scale factor, so they go through the byte gate (broadcast at the
+# testdata scales, shuffle_hash past the budget). The local-supplier
+# constraint (c_nationkey = s_nationkey) is the Q5 signature predicate.
+# Plan pinned by tests/test_plan_shapes.py.
 def q_tpch_q5_regional_revenue(spark: SparkSession, sf: str) -> DataFrame:
     region = T(spark, sf, "region").filter(F.col("r_name") == "ASIA")
     nation = T(spark, sf, "nation")
@@ -828,11 +829,11 @@ def q_tpch_q5_regional_revenue(spark: SparkSession, sf: str) -> DataFrame:
     # fact chain one at a time keeps every broadcast at true dimension
     # size (≤ filtered orders) and applies c_nationkey = s_nationkey as a
     # 1k-row supplier lookup instead of a row-multiplying pre-join.
-    # Same result, same oracle; plan stays all-BroadcastHashJoin.
+    # Same result, same oracle.
     return (
-        lineitem.join(F.broadcast(orders), lineitem.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supplier),
+        lineitem.join(broadcast_within(orders), lineitem.l_orderkey == orders.o_orderkey)
+        .join(broadcast_within(customer), F.col("o_custkey") == F.col("c_custkey"))
+        .join(broadcast_within(supplier),
               (F.col("l_suppkey") == F.col("s_suppkey"))
               & (F.col("c_nationkey") == F.col("s_nationkey")))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))

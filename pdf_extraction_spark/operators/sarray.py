@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.parallel import broadcast_within, fan_out
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 SA_WINDOW = 10  # minimum duplicated-substring length, in whitespace tokens
@@ -254,7 +255,6 @@ def gram_classes(
     from pyspark.storagelevel import StorageLevel
 
     from pdf_extraction_spark.cache import track
-    from pdf_extraction_spark.parallel import fan_out
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buf: list = []
@@ -433,7 +433,9 @@ def build_gram_index(
     return counts.localCheckpoint(eager=True)
 
 
-INDEX_BROADCAST_KEY_CAP = 2_000_000  # ~128 MB of md5 keys — safe executor broadcast
+# one md5-hex gram_key row as a hash relation (the broadcast_within
+# convention: 32 per row + 8 for the column + 32 UTF-8 bytes)
+_KEY_ROW_BYTES = 72
 
 
 def incremental_duplicated_mass(
@@ -442,7 +444,6 @@ def incremental_duplicated_mass(
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int = SA_WINDOW,
-    broadcast_key_cap: int = INDEX_BROADCAST_KEY_CAP,
     new_classes: DataFrame | None = None,
 ) -> DataFrame:
     """Exact duplicated-token mass for the NEW batch against (old corpus ∪
@@ -477,14 +478,14 @@ def incremental_duplicated_mass(
     # distinct grams, >1 GB serialized) OOMs the driver-side broadcast
     # build (observed at the 500k ingest stress). Counting `single` costs
     # one batch-bounded partial-agg job over the persisted class rows;
-    # above the cap the lookup degrades to a shuffled join — one extra
-    # exchange, still exact. The empty-index bulk-load case (the ingest
-    # plan's first append) skips the lookup entirely: nothing can match.
+    # above the broadcast budget the lookup degrades to a shuffled join —
+    # one extra exchange, still exact. The empty-index bulk-load case (the
+    # ingest plan's first append) skips the lookup entirely: nothing can match.
     n_single = single.count()
     if n_single == 0 or index_counts.isEmpty():
         matched = single.limit(0)
     else:
-        lookup = F.broadcast(single) if n_single <= broadcast_key_cap else single
+        lookup = broadcast_within(single, n_single * _KEY_ROW_BYTES)
         # distinct: the index may hold MULTIPLE rows per gram — the
         # append-only ingest (plans/incremental.py) appends one
         # pre-aggregated row per gram PER BATCH and compacts periodically,
@@ -508,10 +509,7 @@ def incremental_duplicated_mass(
     # rows at the 500k stress — the third driver-heap broadcast OOM that
     # run surfaced). The checkpoint is eager, so counting it is free;
     # broadcast explicitly when delta-sized, force the shuffle otherwise.
-    if dup_keys.count() <= broadcast_key_cap:
-        join_keys = F.broadcast(dup_keys)
-    else:
-        join_keys = dup_keys.hint("shuffle_hash")
+    join_keys = broadcast_within(dup_keys, dup_keys.count() * _KEY_ROW_BYTES)
     starts = (
         new_classes.join(join_keys, "gram_key")
         .select(F.explode(F.arrays_zip("occ_d", "occ_o")).alias("oc"))

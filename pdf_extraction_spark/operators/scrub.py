@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.dedup import grams_udf
-from pdf_extraction_spark.parallel import fan_out
+from pdf_extraction_spark.parallel import broadcast_within, fan_out
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 # Java-regex ∩ RE2 subset: no lookarounds, no backrefs — identical
@@ -145,7 +145,7 @@ def q_contamination(spark: SparkSession, sf: str) -> DataFrame:
     )
     corpus = shingled(docs.filter(F.col("doc_id") % BENCH_EVERY != 0))
     return (
-        corpus.join(F.broadcast(bench), "g")
+        corpus.join(broadcast_within(bench), "g")
         .groupBy("doc_id")
         .agg(F.countDistinct("g").alias("n_shared_grams"))
         .orderBy("doc_id")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.cache import track
+from pdf_extraction_spark.parallel import broadcast_within
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 QUERY_VEC_ID = 0
@@ -359,7 +360,7 @@ def neardup_bucketed_pairs(
     # persist: the capped bands feed both self-join sides (else each side
     # re-runs the width agg + anti-join); tracked for boundary release
     bands_ok = track(
-        bands.join(F.broadcast(hot), ["band", "bucket"], "left_anti").persist(
+        bands.join(broadcast_within(hot), ["band", "bucket"], "left_anti").persist(
             StorageLevel.MEMORY_AND_DISK
         )
     )

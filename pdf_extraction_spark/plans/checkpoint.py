@@ -20,7 +20,7 @@ The ledger also records the RUN PARAMETERS that make bucket ids meaningful:
 ``n_buckets`` (bucket = pmod(xxhash64(conv_id), n_buckets)) and an optional
 caller-supplied ``input_fp`` fingerprint. Resuming a run_id with different
 parameters would silently skip buckets that now map to different
-conversations — so ``done_buckets`` FAILS FAST on any mismatch.
+conversations — so ``bucket_state`` FAILS FAST on any mismatch.
 
 The checksum is ORDER-INSENSITIVE and overflow-free:
 ``bit_xor(xxhash64(conv_id, turn_idx, sha2(extracted_text, 256)))`` over the
@@ -127,17 +127,8 @@ class Ledger:
             "exhausted": frozenset(exhausted),
         }
 
-    def done_buckets(self) -> FrozenSet[int]:
-        return self.bucket_state()["done"]
-
-    def attempt_of(self, bucket: int) -> int:
-        """Highest recorded attempt number for a bucket (0 if never tried)."""
-        rows = self._run_rows()
-        return max((r["attempt"] or 0 for r in rows if r["bucket"] == bucket), default=0)
-
     def attempts(self) -> Dict[int, int]:
-        """Highest recorded attempt number PER bucket — one ledger read
-        (attempt_of in a loop would re-read the ledger per bucket)."""
+        """Highest recorded attempt number PER bucket — one ledger read."""
         rows = self._run_rows()
         out: Dict[int, int] = {}
         for r in rows:

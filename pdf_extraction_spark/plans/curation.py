@@ -304,19 +304,13 @@ def curate_corpus(
     # splits gate The Pile/C4 run — after the split is final, no held-out
     # document may share a training-grain word 10-gram with a train doc.
     # Same oracled operator as the `split_leakage_audit` query, composed
-    # over the curated relation; broadcast of the held gram set is gated
-    # by the held-doc count (flips to a gram-keyed shuffle_hash join).
+    # over the curated relation (it gates its own held-gram broadcast).
     leak_rows: list = []
     if audit_leakage:
-        from pdf_extraction_spark.operators.filtering import (
-            LEAK_BROADCAST_HELD_DOC_CAP,
-            split_leakage_stats,
-        )
+        from pdf_extraction_spark.operators.filtering import split_leakage_stats
 
-        n_held = sum(v for k, v in mix.items() if k != "train")
         leak_rows = split_leakage_stats(
-            curated.select("doc_id", "split", "text"), "text",
-            broadcast_held=n_held <= LEAK_BROADCAST_HELD_DOC_CAP,
+            curated.select("doc_id", "split", "text"), "text"
         ).collect()  # ≤ one row per held split
         _lap("leakage_audit")
 

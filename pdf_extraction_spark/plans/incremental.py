@@ -70,6 +70,7 @@ from pdf_extraction_spark.operators.sarray import (
     gram_classes,
     incremental_duplicated_mass,
 )
+from pdf_extraction_spark.parallel import broadcast_within
 from pdf_extraction_spark.sources.tables import TableIO
 
 _INDEX_SCHEMA = "batch_id string, gram_key string, n_old bigint"
@@ -80,12 +81,6 @@ _INDEX_SCHEMA = "batch_id string, gram_key string, n_old bigint"
 # which `rebuild_bloom` resizes from the true corpus count.
 BLOOM_HEADROOM = 8
 BLOOM_MIN_BITS = 1 << 14
-# Broadcast the OR-merged filter only while its word table stays small
-# (int64 words; 4M ≈ 32 MB payload — the dual-grain broadcast cap rule:
-# every broadcast of a store-derived table must be key-count-gated).
-# Past the cap the probe join flips to a word_idx-keyed shuffle_hash —
-# same plan shape q_bloom_prefilter documents for the huge-store case.
-BLOOM_WORD_BROADCAST_CAP = 4_000_000
 
 
 def _marker_path(io: TableIO, batch_id: str) -> str:
@@ -214,10 +209,9 @@ def _admit(
         n_candidates = 0
     else:
         probes = _probe_words(batch_unique.select("doc_id", "h"), m_bits)
-        if m_bits // _BLOOM_WORD <= BLOOM_WORD_BROADCAST_CAP:
-            joined = probes.join(F.broadcast(filt), "word_idx", "left")
-        else:
-            joined = probes.join(filt.hint("shuffle_hash"), "word_idx", "left")
+        # store-sized word table: ≤ m_bits/32 (word_idx, bits) rows of 48 B
+        n_bytes = m_bits // _BLOOM_WORD * 48
+        joined = probes.join(broadcast_within(filt, n_bytes), "word_idx", "left")
         hit_docs = (
             joined.select(
                 "doc_id",

@@ -320,7 +320,3 @@ def _write_metrics(io: TableIO, run_id: str, elapsed_s: float, route_rows: List,
     io.write(io.frame(rows, METRICS_SCHEMA), "metrics", mode="append")
     io.write(io.frame(op_metrics_rows(agg, run_id, stage="run_metrics"), OP_METRICS_SCHEMA),
              "op_metrics", mode="append")
-
-
-def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:
-    return TableIO(spark, out_root).read("extracted")

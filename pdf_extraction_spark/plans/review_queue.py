@@ -35,6 +35,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.parallel import broadcast_within
 from pdf_extraction_spark.sources.tables import TableIO
 
 REVIEW_TABLE = "review_queue"
@@ -134,11 +135,11 @@ def backfill_update_join(
     """Keyed UPDATE ... FROM: enrich ``target[fill_col]`` from
     ``mapping[source_col]`` on ``key``. ``only_null=True`` fills gaps only
     (the reference backfill touched rows whose scraped_file_id was NULL).
-    The mapping side is broadcast when small; the result is written back
-    with TableIO.rewrite (Iceberg: MERGE INTO)."""
+    The mapping side is broadcast while it fits the broadcast budget; the
+    result is written back with TableIO.rewrite (Iceberg: MERGE INTO)."""
     source_col = source_col or fill_col
     m = mapping.select(F.col(key), F.col(source_col).alias("__fill")).dropDuplicates([key])
-    joined = target.join(F.broadcast(m), key, "left")
+    joined = target.join(broadcast_within(m), key, "left")
     if only_null and fill_col in target.columns:
         filled = F.coalesce(F.col(fill_col), F.col("__fill"))
     else:

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.parallel import broadcast_within
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -214,16 +216,16 @@ def stream_enrich_events(
     """Stream-static enrichment join: streaming events LEFT-joined to a
     static per-key dimension, broadcast to every micro-batch (the standard
     'decorate the firehose with reference data' topology). The static side
-    is planned once and hash-broadcast — each micro-batch pays a map-side
-    lookup, no stream-side shuffle. Unmatched keys keep their rows (left
-    join) with null enrichment, so the stream never drops events because
-    reference data lags. Returns the started StreamingQuery."""
+    is hash-broadcast within the broadcast budget — each micro-batch pays
+    a map-side lookup, no stream-side shuffle. Unmatched keys keep their
+    rows (left join) with null enrichment, so the stream never drops
+    events because reference data lags. Returns the started StreamingQuery."""
     events = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(src_dir)
     )
-    enriched = events.join(F.broadcast(dim), "user_id", "left")
+    enriched = events.join(broadcast_within(dim), "user_id", "left")
     return (
         enriched.writeStream.format("parquet")
         .option("path", out_dir)

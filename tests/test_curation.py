@@ -182,12 +182,14 @@ def test_leakage_fail_threshold(spark, extracted, tmp_path):
     assert "leakage" in ok
 
 
-def test_leakage_stats_broadcast_flip_bit_equal(spark):
-    """split_leakage_stats: the key-cap-gated broadcast and the gram-keyed
-    shuffle_hash fallback are bit-equal, and counts match a hand-computed
-    corpus (one val doc shares a 10-gram with two train docs; test split
-    is clean)."""
+def test_leakage_stats_broadcast_flip_bit_equal(spark, monkeypatch):
+    """split_leakage_stats: the byte-gated broadcast and the gram-keyed
+    shuffle_hash fallback (budget 0) are bit-equal, and counts match a
+    hand-computed corpus (one val doc shares a 10-gram with two train docs;
+    test split is clean)."""
+    from pdf_extraction_spark import parallel
     from pdf_extraction_spark.operators.filtering import split_leakage_stats
+    from tests.plan_probe import executed_plans, join_kinds
 
     shared = "alpha bravo charlie delta echo foxtrot golf hotel india juliett"
     rows = [
@@ -202,8 +204,12 @@ def test_leakage_stats_broadcast_flip_bit_equal(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id string, split string, text string")
 
-    bcast = split_leakage_stats(docs, broadcast_held=True).collect()
-    shuf = split_leakage_stats(docs, broadcast_held=False).collect()
+    audit = lambda: split_leakage_stats(docs).collect()  # noqa: E731
+    bcast, plans = executed_plans(spark, audit)
+    assert join_kinds(plans, "g") == {"BroadcastHashJoin"}
+    monkeypatch.setattr(parallel, "BROADCAST_BUDGET_BYTES", 0)
+    shuf, plans = executed_plans(spark, audit)
+    assert join_kinds(plans, "g") == {"ShuffledHashJoin"}
     key = lambda r: r["held_split"]  # noqa: E731
     assert sorted(bcast, key=key) == sorted(shuf, key=key)
 

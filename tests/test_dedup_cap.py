@@ -88,19 +88,23 @@ def test_true_neardup_pair_survives_cap(spark, hot_docs):
     assert hit[0]["jaccard"] > 0.8  # near-identical docs
 
 
-def test_neardup_clusters_chain_and_islands(spark):
+def test_neardup_clusters_chain_and_islands(spark, monkeypatch):
     """Min-label propagation: a 4-doc chain (diameter 3 — needs multiple
     rounds), a 2-doc island, and a triangle all resolve to their min-id
-    keeper; docs absent from pairs never appear."""
-    from pdf_extraction_spark.operators.dedup import neardup_clusters
+    keeper; docs absent from pairs never appear. Both connected-components
+    paths: the driver union-find (default edge cap) and the distributed
+    star contraction (cap 0)."""
+    from pdf_extraction_spark.operators import dedup
 
     pairs = spark.createDataFrame(
         # chain 1-2-3-4, island 10-11, triangle 20-21-22
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
         "doc_a long, doc_b long",
     )
-    got = {r["doc_id"]: r["keeper"] for r in neardup_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    for cap in (dedup.CC_LOCAL_EDGE_CAP, 0):
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_CAP", cap)
+        got = {r["doc_id"]: r["keeper"] for r in dedup.neardup_clusters(pairs).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -216,6 +216,50 @@ def test_no_per_row_python_udfs_in_codebase():
     assert not offenders, offenders
 
 
+# F.broadcast / .hint("shuffle_hash") sites allowed outside parallel.py:
+# (file, frame) -> why its size is bounded by a constant (or, for the one
+# forced shuffle, why it must never broadcast). Every other join side whose
+# size grows with the data goes through parallel.broadcast_within.
+_UNGATED_JOIN_HINTS = {
+    ("similarity.py", "qv"): "1-row query vector",
+    ("similarity.py", "qvdf"): "1-row query vector",
+    ("similarity.py", "probe"): "NB_BANDS probe rows of one query",
+    ("similarity.py", "a"): "N_ANCHORS anchor rows",
+    ("sarray.py", "top"): "TOP_GRAMS rows",
+    ("filtering.py", "weights"): "DSIR_BUCKETS weight rows",
+    ("filtering.py", "totals"): "global aggregate: one row",
+    ("filtering.py", "corpus"): "global aggregate: one row",
+    ("corpus.py", "rates"): "one row per language",
+    ("corpus.py", "bounds"): "one row per language",
+    ("corpus.py", "tot"): "global aggregate: one row",
+    ("dedup.py", "sizing"): "global aggregate: one row",
+    ("dedup.py", "n_true"): "global aggregate: one row",
+    ("dedup.py", "load"): "global aggregate: one row",
+    ("relational.py", "target"): "global aggregate: one row",
+    ("relational.py", "nation"): "TPC-H fixed-size dim (25 rows)",
+    ("relational.py", "region"): "TPC-H fixed-size dim (5 rows)",
+    ("incremental.py", "mass"): "forced shuffle: the coverage side must never broadcast",
+}
+
+
+def test_join_hints_go_through_the_broadcast_gate():
+    """CI guard: no hand-written broadcast or shuffle_hash hint on a frame
+    that grows with the data — those go through parallel.broadcast_within,
+    the one byte-budget gate. The allowlist must not go stale either."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    hint = re.compile(r"F\.broadcast\((\w+)|(\w+)\.hint\([\"']shuffle_hash[\"']\)")
+    found = {
+        (p.name, a or b)
+        for p in root.rglob("*.py") if p.name != "parallel.py"
+        for a, b in hint.findall(p.read_text())
+    }
+    assert found - set(_UNGATED_JOIN_HINTS) == set()
+    assert set(_UNGATED_JOIN_HINTS) - found == set()
+
+
 def test_contamination_bench_side_is_broadcast(spark):
     """The benchmark gram set must broadcast: the corpus-side explode stays
     map-local with no pre-join shuffle (at 100 TB a sort-merge here would
@@ -328,9 +372,11 @@ def test_aqe_splits_skewed_sort_merge_join(spark):
 
 
 def test_tpch_q5_broadcasts_dimension_chain(spark):
-    """The six-table Q5 join must broadcast the dimension chain so the
-    fact tables never shuffle for the dims — the only exchanges left are
-    the fact-fact join and the final aggregation."""
+    """At the default broadcast budget the six-table Q5 join is a chain of
+    broadcast hash joins: region/nation always (TPC-H fixed-size dims),
+    supplier, customer and the date-filtered orders through the byte gate
+    (they fit at testdata scale; tests/test_broadcast_gate.py covers the
+    orders flip to a shuffle_hash join past the budget)."""
     from pdf_extraction_spark.operators.relational import q_tpch_q5_regional_revenue
 
     plan = plan_of(q_tpch_q5_regional_revenue(spark, SF))

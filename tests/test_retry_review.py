@@ -68,7 +68,7 @@ def test_failing_bucket_escalates_after_retry_cap(spark, tiny_transcripts, tmp_p
 
     io = TableIO(spark, root)
     led = Ledger(io, "r", n_buckets=n_buckets)
-    assert led.attempt_of(poison) == MAX_ATTEMPTS
+    assert led.attempts()[poison] == MAX_ATTEMPTS
 
     # 6th resume: the bucket is exhausted — NOT retried, sits in review_queue
     s6 = run_extraction(spark, tiny_transcripts, root, run_id="r",

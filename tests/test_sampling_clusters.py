@@ -6,6 +6,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.operators import dedup
 from pdf_extraction_spark.operators.dedup import neardup_clusters
 from pdf_extraction_spark.operators.sampling import (
     SAMPLE_RATES,
@@ -14,6 +15,9 @@ from pdf_extraction_spark.operators.sampling import (
 )
 
 SF = "/root/testdata/sf0.001"
+# edge caps selecting each connected-components path: the driver
+# union-find (default) and the distributed star contraction (0)
+CC_PATHS = (dedup.CC_LOCAL_EDGE_CAP, 0)
 
 
 @pytest.fixture(scope="module")
@@ -63,14 +67,20 @@ def _union_find(pairs):
     return {x: find(x) for x in parent}
 
 
-def test_clusters_long_path_converges(spark):
+def test_clusters_long_path_converges(spark, monkeypatch):
     """Diameter-25 path graph: min-label propagation alone needs 25 rounds
     (the r2 defect silently truncated at 20); pointer jumping converges in
-    O(log n) and the result must be the exact single component."""
+    O(log n) and the result must be the exact single component, on both
+    connected-components paths."""
     pairs = [(i, i + 1) for i in range(25)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    got = {r["doc_id"]: r["keeper"] for r in neardup_clusters(df).collect()}
-    assert got == {i: 0 for i in range(26)}
+    for cap in CC_PATHS:
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_CAP", cap)
+        stats: dict = {}
+        got = {r["doc_id"]: r["keeper"] for r in neardup_clusters(df, stats).collect()}
+        assert got == {i: 0 for i in range(26)}
+        if cap == 0:
+            assert 0 < stats["rounds"] < 25, stats
 
 
 @settings(max_examples=8, deadline=None,
@@ -81,19 +91,23 @@ def test_clusters_long_path_converges(spark):
         min_size=1, max_size=40,
     )
 )
-def test_clusters_match_union_find(spark, edges):
+def test_clusters_match_union_find(spark, monkeypatch, edges):
     pairs = sorted({(min(a, b), max(a, b)) for a, b in edges})
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    got = {r["doc_id"]: r["keeper"] for r in neardup_clusters(df).collect()}
     want = _union_find(pairs)
-    assert got == want
+    for cap in CC_PATHS:
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_CAP", cap)
+        got = {r["doc_id"]: r["keeper"] for r in neardup_clusters(df).collect()}
+        assert got == want
 
 
-def test_clusters_empty_pairs(spark):
+def test_clusters_empty_pairs(spark, monkeypatch):
     """Zero verified pairs → zero clusters (the contraction loop must not
     run and the empty bit_xor signature must not crash)."""
     df = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert neardup_clusters(df).count() == 0
+    for cap in CC_PATHS:
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_CAP", cap)
+        assert neardup_clusters(df).count() == 0
 
 
 def test_classifier_training_set_balance_and_determinism(spark):

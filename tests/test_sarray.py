@@ -191,15 +191,16 @@ def test_incremental_mass_equals_batch(spark, n_parts):
     assert 13 not in inc     # novel doc has zero mass (no row)
 
 
-def test_incremental_bulk_load_and_cap_fallback(spark):
+def test_incremental_bulk_load_and_cap_fallback(spark, monkeypatch):
     """The two non-broadcast lookup paths added after the 500k ingest
     stress OOM'd the driver-side broadcast build: (a) an EMPTY index (the
     ingest plan's first bulk load) skips the lookup and must equal the
-    batch recompute over the batch alone; (b) above broadcast_key_cap the
-    lookup degrades to a shuffled join with bit-identical results and no
-    broadcast of the key set in the plan."""
+    batch recompute over the batch alone; (b) above the broadcast budget
+    the lookup and the join-back degrade to shuffled joins with
+    bit-identical results and no broadcast of the key sets."""
     from pyspark.sql import functions as F
 
+    from pdf_extraction_spark import parallel
     from pdf_extraction_spark.operators.sarray import (
         build_gram_index,
         incremental_duplicated_mass,
@@ -229,20 +230,22 @@ def test_incremental_bulk_load_and_cap_fallback(spark):
     }
     assert got == want and 11 in got and 12 not in got
 
-    # (b) cap fallback: cap=0 forces the shuffled (un-hinted) lookup —
-    # masses must be bit-identical to the broadcast path
+    # (b) budget fallback: budget 0 forces the shuffle_hash lookup and
+    # join-back — masses must be bit-identical to the broadcast path
+    from tests.plan_probe import executed_plans, join_kinds
+
     index = build_gram_index(df.filter(F.col("doc_id") < 10), window=w)
-    by_cap = {
-        cap: {
-            r["doc_id"]: r["dup_words"]
-            for r in incremental_duplicated_mass(
-                index, new, window=w, broadcast_key_cap=cap
-            ).collect()
-        }
-        for cap in (0, 10**6)
+    mass = lambda: {  # noqa: E731
+        r["doc_id"]: r["dup_words"]
+        for r in incremental_duplicated_mass(index, new, window=w).collect()
     }
-    assert by_cap[0] == by_cap[10**6]
-    assert by_cap[0][10] == 6  # cross old-new duplicate survives both paths
+    bcast, plans = executed_plans(spark, mass)
+    assert join_kinds(plans, "gram_key") == {"BroadcastHashJoin"}
+    monkeypatch.setattr(parallel, "BROADCAST_BUDGET_BYTES", 0)
+    shuf, plans = executed_plans(spark, mass)
+    assert join_kinds(plans, "gram_key") == {"ShuffledHashJoin"}
+    assert shuf == bcast
+    assert shuf[10] == 6  # cross old-new duplicate survives both paths
 
 
 def test_dup_mass_small_window_interval_union(spark):
