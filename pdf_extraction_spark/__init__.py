@@ -7,7 +7,7 @@ reference repo TheophilusChinomona/PDF-EXTRACTION, re-expressed Spark-first:
 - ``functions/``  native Column expressions (quality scorer, classifier, slug, ...)
 - ``operators/``  dedup / similarity / text-analysis / relational operators
 - ``plans/``      the extraction pipeline, checkpoint ledger, metrics
-- ``sources/``    table IO (parquet now, Iceberg behind an import-try)
+- ``sources/``    table IO (parquet; an Iceberg writer waits for the jars)
 - ``streaming/``  reserved (the reference is strictly bounded-batch)
 
 All hot-path logic runs either as JVM-side column expressions or inside

@@ -224,18 +224,14 @@ def _batch_gram_classes(doc_ids, texts, w: int) -> pd.DataFrame:
 _CLASS_SCHEMA = "gram_key string, n_local int, occ_d array<bigint>, occ_o array<int>"
 
 
-import os as _os
-
-# suffix-array granularity (tokens per SA build); env-overridable so
-# deployments (and A/B measurements) can trade per-group compression
-# against worker working-set — 1 disables accumulation (one SA per
-# incoming Arrow batch)
-SA_BATCH_TOKENS = int(_os.environ.get("SPARK_SARRAY_BATCH_TOKENS", "2000000"))
+# suffix-array granularity: tokens accumulated per SA build (trades
+# per-group compression against worker working-set)
+SA_BATCH_TOKENS = 2_000_000
 
 
 def gram_classes(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    window: int = SA_WINDOW, batch_tokens: int = SA_BATCH_TOKENS,
+    window: int = SA_WINDOW,
 ) -> DataFrame:
     """Cached distinct-gram class rows (gram_key, n_local, occ_d, occ_o) from the
     partition-local suffix-array stage — the shared base of the dedup-mass
@@ -243,7 +239,7 @@ def gram_classes(
     at least twice (count + join-back).
 
     Incoming Arrow batches (session maxRecordsPerBatch, 1024 rows) are
-    ACCUMULATED up to ``batch_tokens`` tokens before each suffix-array
+    ACCUMULATED up to ``SA_BATCH_TOKENS`` tokens before each suffix-array
     build: within-group repeats compress to one class row BEFORE the
     shuffle, and at 1024-row granularity a boilerplate line shared by 10³
     documents almost never co-occurs in a batch (measured: compression
@@ -263,7 +259,7 @@ def gram_classes(
             buf.append(pdf)
             # tokens ≈ spaces + 1 per non-null doc (vectorized estimate)
             buf_tokens += int(pdf[text_col].str.count(" ").fillna(0).sum()) + len(pdf)
-            if buf_tokens >= batch_tokens:
+            if buf_tokens >= SA_BATCH_TOKENS:
                 g = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
                 yield _batch_gram_classes(g[id_col].values, g[text_col].values, window)
                 buf, buf_tokens = [], 0

@@ -29,6 +29,13 @@ duplicate content hash, (c) the whole pipeline is deterministic
 (re-running produces a bit-identical table). All three are pinned in
 tests/test_curation.py.
 
+Each counted stage ends in ``_materialize``: a lazy ``localCheckpoint``
+whose row count is the one job that materializes it (an eager checkpoint
+spends a second job counting the same rows and throws that count away).
+The counts go into one ordered stage record of ``(name, n_docs)``; the
+returned stats, the ``stage_timings`` laps and the ``curation_stats``
+table are all read off it, so each optional stage is chosen in one place.
+
 Scale notes: the doc key is ``xxhash64(conv_id, turn_idx)`` — deterministic
 under re-execution (a row_number would not be). The near-dup stage
 dominates cost and inherits the capped-band LSH plan; everything else is
@@ -37,7 +44,7 @@ map-only or single-shuffle. Stats are one row per stage (driver-safe).
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +65,23 @@ class CurationLeakageError(RuntimeError):
     curated table is already written (the audit reads it back in spirit —
     it runs over the same curated relation), so the caller can inspect
     the leakage_audit table before deciding to republish splits."""
+
+
+def _keep_first(docs: DataFrame) -> DataFrame:
+    """md5 keep-first: (re)compute ``text_md5`` and keep one row per hash,
+    the min doc_id (deterministic)."""
+    hashed = docs.withColumn("text_md5", F.md5("extracted_text"))
+    keep = hashed.groupBy("text_md5").agg(F.min("doc_id").alias("doc_id"))
+    return hashed.join(keep, ["text_md5", "doc_id"], "left_semi")
+
+
+def _materialize(df: DataFrame, *sums: str) -> Tuple[DataFrame, List[int]]:
+    """Checkpoint ``df`` lazily; one aggregate — the row count, then the
+    sum of each ``sums`` column — is the job that materializes it. Returns
+    the checkpointed frame and ``[n_rows, *column_sums]``."""
+    df = df.localCheckpoint(eager=False)
+    row = df.agg(F.count("*"), *(F.sum(c) for c in sums)).collect()[0]
+    return df, [int(v or 0) for v in row]
 
 
 SEM_DEDUP_TAU = 0.8  # feature-hash cosine for the optional semantic stage;
@@ -84,12 +108,16 @@ def curate_corpus(
     stats. When ``out_root`` is given the curated corpus is written there
     (table ``curated``, partitioned by split) along with a one-row-per-
     stage ``curation_stats`` table. ``stage_timings`` (optional) receives
-    per-stage wall seconds — the stage boundaries are real materialization
-    points (each stage ends in a localCheckpoint + count), so the laps
-    measure actual work, not lazy-plan assembly. Used by
-    docs/curation_stress.py for the composed-chain scaling evidence."""
+    per-stage wall seconds — each counted stage ends in its materializing
+    count (``_materialize``), so the laps measure actual work, not
+    lazy-plan assembly. Used by docs/curation_stress.py for the
+    composed-chain scaling evidence. ``derep`` is validated before any
+    Spark job runs."""
+    if derep not in ("chunk", "exact"):
+        raise ValueError(f"derep must be 'chunk' or 'exact', got {derep!r}")
     import time as _time
 
+    stages: List[Tuple[str, int]] = []  # (name, n_docs) in chain order
     _t = _time.monotonic()
 
     def _lap(name: str) -> None:
@@ -98,6 +126,10 @@ def curate_corpus(
         if stage_timings is not None:
             stage_timings[name] = round(now - _t, 3)
         _t = now
+
+    def _stage(name: str, n_docs: int) -> None:
+        stages.append((name, n_docs))
+        _lap(name)
 
     docs = extracted.select(
         F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
@@ -110,29 +142,23 @@ def curate_corpus(
         F.count("*").alias("n_in"),
         F.sum(passes.cast("int")).alias("n_ok"),
     ).collect()[0]
-    n_input, n_gated = int(counts["n_in"]), int(counts["n_ok"] or 0)
+    stages.append(("input", int(counts["n_in"])))
     gated = docs.filter(passes)
-    _lap("quality_gate")
+    _stage("quality_gate", int(counts["n_ok"] or 0))
 
-    # 2. exact dedup: md5 keep-first (min doc_id wins — deterministic).
-    # localCheckpoint: `exact` feeds the near-dup corpus, the anti-join,
-    # AND its own count — without it the gate→md5→dedup subtree re-runs
-    # for every downstream action
-    hashed = gated.withColumn("text_md5", F.md5("extracted_text"))
-    keep_exact = hashed.groupBy("text_md5").agg(F.min("doc_id").alias("doc_id"))
-    exact = hashed.join(keep_exact, ["text_md5", "doc_id"], "left_semi").localCheckpoint(
-        eager=True
-    )
-    n_exact = exact.count()
-    _lap("exact_dedup")
+    # 2. exact dedup: md5 keep-first. Checkpointed: `exact` feeds the
+    # near-dup corpus, the anti-join AND its own count — without it the
+    # gate→md5→dedup subtree re-runs for every downstream action
+    exact, (n,) = _materialize(_keep_first(gated))
+    _stage("exact_dedup", n)
 
     # 2b. OPTIONAL corpus-wide line-grain dedup (--line-dedup): CCNet's
     # paragraph dedup stage (Wenzek et al. 2020 §3.1) over the extracted
     # lines — boilerplate that repeats ACROSS documents (nav banners,
     # footers) survives document-grain dedup and is removed here line by
     # line, keeping each distinct normalized line's corpus-first
-    # occurrence. Docs whose rewritten text is empty are dropped; text_md5
-    # is recomputed and the exact keep-first re-applied (two docs can
+    # occurrence. Docs whose rewritten text is empty are dropped; the
+    # exact keep-first is re-applied to the rewritten text (two docs can
     # collapse to the same residue — e.g. both reduce to blank-normalized
     # lines — and the downstream invariant is "curated text_md5 is
     # unique").
@@ -143,7 +169,7 @@ def curate_corpus(
         ld = ccnet_line_dedup(
             exact.select("doc_id", F.col("extracted_text").alias("text"))
         )
-        rewritten = exact.drop("extracted_text", "text_md5").join(
+        rewritten = exact.drop("extracted_text").join(
             ld.select(
                 "doc_id",
                 F.col("new_text").alias("extracted_text"),
@@ -152,28 +178,15 @@ def curate_corpus(
             ),
             "doc_id",
         )
-        rehashed = rewritten.filter(F.trim("extracted_text") != "").withColumn(
-            "text_md5", F.md5("extracted_text")
+        exact, (n, n_lines_removed, n_line_chars_removed) = _materialize(
+            _keep_first(rewritten.filter(F.trim("extracted_text") != "")),
+            "n_lines_removed", "n_chars_removed",
         )
-        keep2 = rehashed.groupBy("text_md5").agg(F.min("doc_id").alias("doc_id"))
-        exact = rehashed.join(
-            keep2, ["text_md5", "doc_id"], "left_semi"
-        ).localCheckpoint(eager=True)
-        removed = exact.agg(
-            F.count("*").alias("n"),
-            F.sum("n_lines_removed").alias("l"),
-            F.sum("n_chars_removed").alias("c"),
-        ).collect()[0]
-        n_exact_lined = int(removed["n"])
-        n_lines_removed = int(removed["l"] or 0)
-        n_line_chars_removed = int(removed["c"] or 0)
         exact = exact.drop("n_lines_removed", "n_chars_removed")
-        _lap("line_dedup")
-    else:
-        n_exact_lined = n_exact
+        _stage("line_dedup", n)
 
     # 3. near-dup dedup over the survivors: verified pairs → components →
-    #    keep each cluster's min-id member. Pairs are checkpointed once
+    #    keep each cluster's min-id member. Pairs are checkpointed eagerly
     #    (the contraction loop re-reads them every round), then the
     #    signature caches are released.
     corpus = exact.select("doc_id", F.col("extracted_text").alias("text"))
@@ -181,9 +194,8 @@ def curate_corpus(
     release_caches()
     clusters = neardup_clusters(pairs)
     dropped = clusters.filter(F.col("doc_id") != F.col("keeper")).select("doc_id")
-    neardup = exact.join(dropped, "doc_id", "left_anti").localCheckpoint(eager=True)
-    n_neardup = neardup.count()
-    _lap("neardup_dedup")
+    neardup, (n,) = _materialize(exact.join(dropped, "doc_id", "left_anti"))
+    _stage("neardup_dedup", n)
 
     # 3a. OPTIONAL semantic dedup (SemDeDup, Abbas et al. 2023): drop docs
     # that are semantically near-identical to a surviving higher-quality
@@ -201,7 +213,7 @@ def curate_corpus(
             F.col("doc_id").alias("vec_id"),
             hash_embed(F.col("extracted_text")).alias("embedding"),
         ).localCheckpoint(eager=True)  # ivf_train re-scans per Lloyd iteration
-        k_sem = max(SEM_K, n_neardup // 256)  # ~256-wide target clusters
+        k_sem = max(SEM_K, n // 256)  # ~256-wide target clusters
         cents = ivf_train(emb_frame, k=k_sem, iters=2)
         quality = neardup.select(
             F.col("doc_id").alias("vec_id"),
@@ -214,13 +226,9 @@ def curate_corpus(
         sem_drop = members.filter(F.col("vec_id") != F.col("best_id")).select(
             F.col("vec_id").alias("doc_id")
         )
-        neardup = neardup.join(sem_drop, "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        release_caches()
-    n_semdedup = neardup.count() if semdedup else n_neardup
-    if semdedup:
-        _lap("semantic_dedup")
+        neardup, (n,) = _materialize(neardup.join(sem_drop, "doc_id", "left_anti"))
+        release_caches()  # after the count: it reads the cached assignment
+        _stage("semantic_dedup", n)
 
     # 3b. repetition filter: a doc that survived document-grain dedup can
     # still be MOSTLY content already seen elsewhere in the corpus
@@ -237,7 +245,7 @@ def curate_corpus(
     corpus_txt = neardup.select("doc_id", F.col("extracted_text").alias("text"))
     if derep == "chunk":
         fracs = chunk_dup_fractions(corpus_txt)
-    elif derep == "exact":
+    else:
         from pdf_extraction_spark.operators.sarray import duplicated_token_mass
 
         n_words = corpus_txt.select(
@@ -250,16 +258,13 @@ def curate_corpus(
                 F.round(F.coalesce("dup_words", F.lit(0)) / F.col("_nw"), 6).alias("dup_frac"),
             )
         )
-    else:
-        raise ValueError(f"derep must be 'chunk' or 'exact', got {derep!r}")
     too_dup = fracs.filter(F.col("dup_frac") > max_chunk_dup).select("doc_id")
-    # checkpoint like the sibling stages: the chunk window is the heaviest
-    # new subtree and feeds both this count and the downstream redaction
-    dereped = neardup.join(too_dup, "doc_id", "left_anti").localCheckpoint(eager=True)
-    n_derep = dereped.count()
+    # checkpointed like the sibling stages: the chunk window is the
+    # heaviest new subtree and feeds both this count and the redaction
+    dereped, (n,) = _materialize(neardup.join(too_dup, "doc_id", "left_anti"))
     # stage name carries the active mode ('derep_chunk' / 'derep_exact') so
     # stress/telemetry output says which algorithm the lap measured
-    _lap(f"derep_{derep}")
+    _stage(f"derep_{derep}", n)
 
     # 4. PII redaction — same codegen mask as the oracled redact_pii query
     redacted = dereped.select(
@@ -271,10 +276,11 @@ def curate_corpus(
          + F.regexp_count("extracted_text", F.lit(PHONE_RE))).alias("n_pii_hits"),
     )
 
-    # 5. growth-stable split on the doc key. One more checkpoint: the
-    # curated relation serves the stats AND the write — materialize the
+    # 5. growth-stable split on the doc key. Checkpointed lazily: the
+    # curated relation serves the stats AND the write, and the stats
+    # aggregate below reads every row of it anyway, so it materializes the
     # redaction pass once; split mix and PII count share one aggregation
-    curated = dataset_split(redacted, "doc_id").localCheckpoint(eager=True)
+    curated = dataset_split(redacted, "doc_id").localCheckpoint(eager=False)
     # per-split packing stats (token-budget sequence packing over the
     # curated output: what the training loader consumes) — the running-sum
     # window rides the same split/doc ordering the write uses
@@ -314,25 +320,32 @@ def curate_corpus(
         ).collect()  # ≤ one row per held split
         _lap("leakage_audit")
 
-    stats = {
-        "n_input": n_input,
-        "n_quality_gated": n_gated,
-        "n_after_exact_dedup": n_exact,
-        "line_dedup_enabled": bool(line_dedup),
-        "n_after_line_dedup": n_exact_lined,
-        "n_dedup_lines_removed": n_lines_removed,
-        "n_dedup_line_chars_removed": n_line_chars_removed,
-        "n_after_neardup": n_neardup,
-        "n_after_semdedup": n_semdedup,
-        "semdedup_enabled": bool(semdedup),
-        "n_after_derep": n_derep,
-        "derep_mode": derep,
-        # legacy alias (pre-r5 key; kept for downstream readers)
-        "n_after_chunk_derep": n_derep,
-        "n_docs_with_pii": int(n_pii or 0),
-        "split_mix": {k: int(v) for k, v in sorted(mix.items())},
-        "pack_counts": {k: v for k, v in sorted(n_packs.items())},
-    }
+    # stage counts → stats keys, in chain order; a stage the options left
+    # out passes its input's count through
+    recorded = dict(stages)
+    stats: dict = {}
+    n = 0
+    for name, key in (
+        ("input", "n_input"),
+        ("quality_gate", "n_quality_gated"),
+        ("exact_dedup", "n_after_exact_dedup"),
+        ("line_dedup", "n_after_line_dedup"),
+        ("neardup_dedup", "n_after_neardup"),
+        ("semantic_dedup", "n_after_semdedup"),
+        (f"derep_{derep}", "n_after_derep"),
+    ):
+        n = recorded.get(name, n)
+        stats[key] = n
+    stats.update(
+        line_dedup_enabled="line_dedup" in recorded,
+        n_dedup_lines_removed=n_lines_removed,
+        n_dedup_line_chars_removed=n_line_chars_removed,
+        semdedup_enabled="semantic_dedup" in recorded,
+        derep_mode=derep,
+        n_docs_with_pii=n_pii,
+        split_mix=dict(sorted(mix.items())),
+        pack_counts=dict(sorted(n_packs.items())),
+    )
     if audit_leakage:
         # zero rows for held splits with no leakage (the groupBy only emits
         # splits with >=1 leaking doc) so the audit always covers every
@@ -356,18 +369,8 @@ def curate_corpus(
     if out_root:
         io = TableIO(spark, out_root)
         io.write(curated, "curated", mode="overwrite", partition_by=["split"])
-        stage_rows = [
-            ("input", n_input), ("quality_gate", n_gated),
-            ("exact_dedup", n_exact),
-        ]
-        if line_dedup:
-            stage_rows.append(("line_dedup", n_exact_lined))
-        stage_rows.append(("neardup_dedup", n_neardup))
-        if semdedup:
-            stage_rows.append(("semantic_dedup", n_semdedup))
-        stage_rows.append((f"derep_{derep}", n_derep))
         io.write(
-            io.frame(stage_rows, "stage string, n_docs bigint"),
+            io.frame(stages, "stage string, n_docs bigint"),
             "curation_stats", mode="overwrite",
         )
         if audit_leakage:

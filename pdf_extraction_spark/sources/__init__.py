@@ -1,1 +1,1 @@
-from pdf_extraction_spark.sources.tables import TableIO, load_testdata, ICEBERG_AVAILABLE  # noqa: F401
+from pdf_extraction_spark.sources.tables import TableIO, load_testdata  # noqa: F401

@@ -1,12 +1,13 @@
-"""Table IO: Iceberg when the runtime has it, parquet-directory fallback.
+"""Table IO: named tables as partitioned parquet directories.
 
 The production design targets Iceberg tables (per the north rule: input
 transcripts + output extracted/lineage/metrics are Iceberg, partitioned by
 ``bucket(conv_id)``, with MERGE/overwrite-by-partition idempotency and
-metadata-level min/max pruning). This sandbox image ships no Iceberg jars,
-so ``TableIO`` keeps every call site against one small interface and
-degrades to partitioned parquet + dynamic partition overwrite — which has
-the same idempotent-rewrite semantics for our bucket-partitioned writes.
+metadata-level min/max pruning). ``TableIO`` keeps every call site against
+one small interface and always writes partitioned parquet + dynamic
+partition overwrite — which has the same idempotent-rewrite semantics for
+our bucket-partitioned writes. An Iceberg writer behind the same interface
+waits until the Iceberg runtime jars are in the environment.
 
 The dedup/replay semantics these tables back correspond to the reference's
 Postgres store (reference migrations/001_create_extractions_table.sql,
@@ -30,28 +31,12 @@ TESTDATA_TABLES = (
 )
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        jvm = spark._jvm  # noqa: SLF001
-        jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-ICEBERG_AVAILABLE: Optional[bool] = None  # resolved lazily per session
-
-
 class TableIO:
     """Minimal warehouse abstraction: named tables under a root path."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        global ICEBERG_AVAILABLE
-        if ICEBERG_AVAILABLE is None:
-            ICEBERG_AVAILABLE = _iceberg_available(spark)
-        self.iceberg = bool(ICEBERG_AVAILABLE)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)

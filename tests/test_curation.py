@@ -27,9 +27,31 @@ def extracted(spark):
     return extract_stage(df).localCheckpoint(eager=True)
 
 
+# curation_stats stage name -> the returned stats key holding its count
+_STAGE_STAT = {
+    "input": "n_input",
+    "quality_gate": "n_quality_gated",
+    "exact_dedup": "n_after_exact_dedup",
+    "line_dedup": "n_after_line_dedup",
+    "neardup_dedup": "n_after_neardup",
+    "semantic_dedup": "n_after_semdedup",
+    "derep_chunk": "n_after_derep",
+}
+
+
+def _assert_views_agree(io, stats, timings, stages, laps):
+    """The three views of the stage record cannot drift: the
+    curation_stats rows are exactly ``stages`` with the returned counts,
+    and the stage_timings keys are ``laps`` in chain order."""
+    table = {r["stage"]: r["n_docs"] for r in io.read("curation_stats").collect()}
+    assert table == {s: stats[_STAGE_STAT[s]] for s in stages}
+    assert list(timings) == laps
+
+
 def test_curation_stage_invariants(spark, extracted, tmp_path):
     out = str(tmp_path / "cur")
-    stats = curate_corpus(spark, extracted, out_root=out)
+    timings: dict = {}
+    stats = curate_corpus(spark, extracted, out_root=out, stage_timings=timings)
 
     # monotone shrink through the filtering stages
     assert (stats["n_input"] >= stats["n_quality_gated"]
@@ -54,11 +76,13 @@ def test_curation_stage_invariants(spark, extracted, tmp_path):
     # no unmasked PII text anywhere
     assert curated.filter(F.col("text").contains("probe@example.com")).count() == 0
     assert curated.filter(F.col("text").contains("<EMAIL>")).count() > 0
-    # stage stats table mirrors the returned dict
-    stages = {r["stage"]: r["n_docs"] for r in io.read("curation_stats").collect()}
-    assert stages["input"] == stats["n_input"]
-    assert stages["neardup_dedup"] == stats["n_after_neardup"]
-    assert stages["derep_chunk"] == stats["n_after_derep"]
+    # stage stats table and laps mirror the returned dict
+    _assert_views_agree(
+        io, stats, timings,
+        ["input", "quality_gate", "exact_dedup", "neardup_dedup", "derep_chunk"],
+        ["quality_gate", "exact_dedup", "neardup_dedup", "derep_chunk",
+         "redact_split_stats", "write"],
+    )
 
 
 def test_curation_is_deterministic(spark, extracted, tmp_path):
@@ -125,10 +149,17 @@ def test_semdedup_stage_ordering_and_determinism(spark, extracted, tmp_path):
 
 
 def test_derep_mode_validated(spark, extracted):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="derep"):
-        curate_corpus(spark, extracted, derep="bogus")
+    """An invalid derep mode fails before the chain starts any Spark job."""
+    sc = spark.sparkContext
+    group = "test_derep_mode_validated"
+    sc.setJobGroup(group, "invalid derep mode")
+    try:
+        with pytest.raises(ValueError, match="derep"):
+            curate_corpus(spark, extracted, derep="bogus")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_leakage_audit_stage(spark, extracted, tmp_path):
@@ -271,8 +302,9 @@ def test_all_optional_stages_compose(spark, extracted, tmp_path):
     chain stays monotone through ALL stages, the stats table records each
     one, and the curated output keeps the unique-text invariant."""
     out = str(tmp_path / "all")
+    timings: dict = {}
     stats = curate_corpus(
-        spark, extracted, out_root=out,
+        spark, extracted, out_root=out, stage_timings=timings,
         line_dedup=True, semdedup=True,
         audit_leakage=True, leakage_fail_frac=1.0,
     )
@@ -284,11 +316,12 @@ def test_all_optional_stages_compose(spark, extracted, tmp_path):
     assert set(stats["leakage"]) == {s for s in stats["split_mix"] if s != "train"}
 
     io = TableIO(spark, out)
-    stages = {r["stage"]: r["n_docs"] for r in io.read("curation_stats").collect()}
-    for name, key in (("line_dedup", "n_after_line_dedup"),
-                      ("semantic_dedup", "n_after_semdedup"),
-                      ("derep_chunk", "n_after_derep")):
-        assert stages[name] == stats[key], name
+    _assert_views_agree(
+        io, stats, timings, list(_STAGE_STAT),
+        ["quality_gate", "exact_dedup", "line_dedup", "neardup_dedup",
+         "semantic_dedup", "derep_chunk", "redact_split_stats",
+         "leakage_audit", "write"],
+    )
     curated = io.read("curated")
     assert curated.select("text_md5").distinct().count() == curated.count()
     assert io.read("leakage_audit").count() >= 1

@@ -260,6 +260,36 @@ def test_join_hints_go_through_the_broadcast_gate():
     assert set(_UNGATED_JOIN_HINTS) - found == set()
 
 
+# The package's environment reads, each with the reason it is a knob. A new
+# one needs a measured reason before it joins this list.
+_ENV_KNOBS = {
+    "SPARK_GRAFT_CPUS": "local master width: the host's core count",
+    "SPARK_DRIVER_MEMORY": "driver heap sized to the host",
+    "SPARK_LOCAL_DIRS": "shuffle/spill directory is a property of the host",
+    "SPARK_FILES_MAX_PARTITION_BYTES": "scan split: 32m splits the one-file "
+                                       "testdata per row group; big files want 256m-1g",
+}
+
+
+def test_env_reads_are_allowlisted():
+    """CI guard: every os.environ / getenv read in the package names an
+    allowlisted variable with a literal, and the allowlist is not stale."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    access = re.compile(r"\b(?:environ|getenv)\b")
+    named = re.compile(r"""\b(?:environ(?:\.get)?|getenv)\s*[\[(]\s*["'](\w+)["']""")
+    found = set()
+    for p in root.rglob("*.py"):
+        for line in p.read_text().splitlines():
+            if access.search(line):
+                names = named.findall(line)
+                found.update(names or [f"{p.name}: {line.strip()}"])
+    assert found - set(_ENV_KNOBS) == set()
+    assert set(_ENV_KNOBS) - found == set()
+
+
 def test_contamination_bench_side_is_broadcast(spark):
     """The benchmark gram set must broadcast: the corpus-side explode stays
     map-local with no pre-join shuffle (at 100 TB a sort-merge here would
