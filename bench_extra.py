@@ -19,6 +19,10 @@ one-row summary the optimizer may drop work a count does not need — the
 executed plan of ``dedup_bloom_prefilter(...).count()`` has no ``word_idx``
 probe join — while the noop write runs the whole plan, as a real consumer
 of the result does.
+
+The JSON carries ``calib_1core_turns_per_sec``: ``bench.calib_single_core``
+taken before and after the sweep, so timings from runs on a machine whose
+speed drifts can be compared (or discarded) by the box speed they ran at.
 """
 
 from __future__ import annotations
@@ -41,7 +45,7 @@ def main() -> None:
     want_plans = "--plans" in args
     args = [a for a in args if not a.startswith("--")]
 
-    from bench import HEADLINE
+    from bench import HEADLINE, calib_single_core
 
     from pdf_extraction_spark.session import build_session
 
@@ -54,6 +58,7 @@ def main() -> None:
     names = list(HEADLINE) if "--all" in sys.argv[1:] else args
     os.makedirs("plans/r07", exist_ok=True)
 
+    calib = [calib_single_core()]
     timings = {}
     for name in names:
         fn = qs[name]
@@ -74,8 +79,9 @@ def main() -> None:
         timings[name] = {"best": round(best, 3), "samples": samples}
         print(f"# {name}: {samples}", file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
+    calib.append(calib_single_core())
     print(json.dumps({"sf_dir": sf_dir, "cpus": cpus, "tag": tag,
-                      "timings": timings}))
+                      "calib_1core_turns_per_sec": calib, "timings": timings}))
     spark.stop()
 
 

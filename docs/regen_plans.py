@@ -54,7 +54,8 @@ def main() -> None:
     )
     sections.append(
         ("Bucketed near-dup pairs (ArrowEvalPython signature stage → broadcast-anti width cap "
-         "→ (band,bucket) self-join → verify joins; NO cartesian/nested-loop join anywhere)",
+         "→ per-(band,bucket) sorted member lists → posexplode/slice pair emission → distinct "
+         "→ verify joins; NO bucket self-join, NO cartesian/nested-loop join anywhere)",
          plan_of(qs["neardup_bucketed_pairs"](spark, SF)))
     )
     sections.append(

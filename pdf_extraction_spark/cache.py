@@ -1,7 +1,7 @@
 """Persist-handle registry: release cached intermediates at action boundaries.
 
 Several operators persist() intermediates that feed multiple consumers inside
-one query (MinHash signatures, capped LSH bands — the diamond-plan rule in
+one query (MinHash signatures, LSH band rows — the diamond-plan rule in
 SCALE.md). Because the operators return LAZY DataFrames, they cannot
 unpersist before the caller's consuming action — so they register the
 handles here, and callers release them once the result has been consumed.

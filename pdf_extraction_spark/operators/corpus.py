@@ -161,17 +161,24 @@ def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_extraction_spark.parallel import broadcast_within, fan_out
 
     docs = T(spark, sf, "documents")
-    n_docs = docs.count()  # scalar; one job over parquet metadata, not a collect loop
+    split = F.split(F.lower(F.col("text")), " ")
+    # one job: the doc count, and an upper bound on the df table's bytes as
+    # a hash relation — 48 plus the UTF-8 bytes per distinct word of each
+    # doc (the planner estimate starts from compressed parquet bytes)
+    uniq = F.array_distinct(split)
+    n_docs, df_bytes = docs.agg(
+        F.count("*"), F.sum(48 * F.size(uniq) + F.octet_length(F.array_join(uniq, "")))
+    ).first()
     # r7 fan_out: the word explode + (doc,word) partial aggregation is the
     # heavy map work and the scan is one task — widen first (guide §2.2)
     words = fan_out(docs, "doc_id").select(
-        "doc_id", "lang", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
+        "doc_id", "lang", F.explode(split).alias("word")
     ).filter(F.col("word") != "")
     tf = words.groupBy("doc_id", "lang", "word").agg(F.count("*").alias("tf"))
     df_tbl = tf.groupBy("word").agg(F.count("*").alias("df"))
     idf = F.expr(f"CAST({n_docs} AS BIGINT) * 1000000 div df")
     sc = (
-        tf.join(broadcast_within(df_tbl), "word")
+        tf.join(broadcast_within(df_tbl, df_bytes or 0), "word")
         .groupBy("lang", "word")
         .agg(F.sum(F.col("tf") * idf).alias("score"))
     )

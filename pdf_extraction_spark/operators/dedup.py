@@ -26,20 +26,22 @@
 
 Scale notes: exact dedup is one shuffle on the hash. MinHash avoids the n²
 comparison: signatures are computed in ONE groupBy (k min-aggregates, no
-seed-row blowup), banding buckets the join, and the exact-Jaccard verify
-touches only candidate pairs. Degenerate band buckets (one globally-common
-shingle owning the min-hash of a band → every doc lands in one bucket →
-quadratic pair blowup) are CAPPED before the self-join: the over-cap bucket
-set (tiny, usually empty) is aggregated and removed with a BROADCAST
-LEFT-ANTI join — map-side, no sort of either self-join input (a count
-window over the join key has the same semantics but sorts both sides;
-measured 1.3 s → 7 s at sf0.1). The cap trades recall only on pairs whose
-EVERY matching band is degenerate — at 64 it is far above the widths
-organic near-dup clusters produce (observed max 5 at sf0.01, 22 at sf0.1)
-while bounding the worst bucket at 64² comparisons. The oracle applies the
-same cap, so correctness stays exact.
+seed-row blowup), banding buckets the docs, and the exact-Jaccard verify
+touches only candidate pairs. Every LSH candidate set here (batch and
+incremental MinHash, embedding sign-LSH in operators/similarity.py) comes
+from ``bucket_pairs``: two items are candidates when they share a bucket of
+at most a capped number of members. Degenerate buckets (one globally-common
+shingle owning the min-hash of a band → every doc in one bucket → quadratic
+pairs) are found with one width aggregate and dropped with one BROADCAST
+LEFT-ANTI join before any member list is gathered, so no task ever holds
+more than ``cap`` members of one bucket; the survivors' members are
+collected per bucket and emitted as combinations — no self-join. The cap
+trades recall only on pairs whose EVERY matching band is degenerate — at 64
+it is far above the widths organic near-dup clusters produce (observed max
+5 at sf0.01, 22 at sf0.1) while bounding the worst bucket at 64²
+comparisons. The oracle applies the same cap, so correctness stays exact.
 
-Persisted intermediates (signatures, capped bands) are registered with
+Persisted intermediates (signatures) are registered with
 pdf_extraction_spark.cache and released at the next action boundary.
 """
 
@@ -212,35 +214,39 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
     return sigs.selectExpr("doc_id", stack_expr)
 
 
-def lsh_band_candidates(sigs: DataFrame, max_band_width: int = MAX_BAND_WIDTH) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs from banded signatures, with the
-    hot-bucket cap applied BEFORE the self-join."""
-    bands = _band_rows(sigs)  # unpivot mh0..mh{k-1} → (doc_id, seed, mh)
-    # hot-bucket cap as a BROADCAST ANTI-JOIN against the over-cap bucket
-    # set — map-side; see module docstring for the rejected count-window form
-    hot = (
-        bands.groupBy("seed", "mh")
-        .agg(F.count("*").alias("_w"))
-        .filter(F.col("_w") > max_band_width)
-        .select("seed", "mh")
+def bucket_pairs(rows: DataFrame, keys: list, cap: int) -> DataFrame:
+    """(a, b) id pairs, a < b, of ``rows`` ``(*keys, id, fresh)`` that share
+    a bucket of at most ``cap`` rows, keeping pairs that touch a fresh row.
+
+    The over-cap buckets (tiny, usually empty) come from one width aggregate
+    and leave through one broadcast anti-join, map-side, so no member list
+    below grows past ``cap`` (a count window over the keys has the same
+    semantics but sorts every row; measured 1.3 s → 7 s at sf0.1). Each
+    capped bucket's members are then collected sorted by id, every member
+    is paired with the ones after it, and one distinct folds pairs that
+    share several buckets."""
+    hot = rows.groupBy(*keys).count().filter(F.col("count") > cap).select(*keys)
+    members = (
+        rows.join(broadcast_within(hot), keys, "left_anti")
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("id", "fresh"))).alias("m"))
     )
-    # persist the capped bands: they feed BOTH self-join sides, and without
-    # the cache each side re-runs the width agg + anti-join subtree.
-    # persist (not localCheckpoint) is CORRECT here: an .alias() self-join
-    # of one DataFrame object hits the cache on both sides (measured r5:
-    # checkpointing this frame is ~45% SLOWER — pure write cost, no
-    # recompute avoided). The cache-defeat that required checkpoints in
-    # the incremental paths is specific to old/new FILTER SPLITS of one
-    # source, where analyzer de-duplication rewrites one branch.
-    bands = track(bands.join(broadcast_within(hot), ["seed", "mh"], "left_anti").persist())
-    a = bands.alias("a")
-    b = bands.alias("b")
+    x, y = F.col("x"), F.col("y")
     return (
-        a.join(b, (F.col("a.seed") == F.col("b.seed")) & (F.col("a.mh") == F.col("b.mh"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        members.select("m", F.posexplode("m").alias("i", "x"))
+        .select("x", F.explode(F.slice("m", F.col("i") + 2, F.size("m"))).alias("y"))
+        .filter((x.id < y.id) & (x.fresh | y.fresh))
+        .select(x.id.alias("a"), y.id.alias("b"))
         .distinct()
     )
+
+
+def lsh_band_candidates(sigs: DataFrame, max_band_width: int = MAX_BAND_WIDTH) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs: docs sharing a band bucket of at most
+    ``max_band_width`` docs (``bucket_pairs``, every doc fresh)."""
+    rows = _band_rows(sigs).select("seed", "mh", F.col("doc_id").alias("id"),
+                                   F.lit(True).alias("fresh"))
+    return bucket_pairs(rows, ["seed", "mh"], max_band_width).toDF("doc_a", "doc_b")
 
 
 def _gram_row_bytes(grams):
@@ -369,40 +375,25 @@ def incremental_minhash_pairs(
     n_bytes: int | None = None,
 ) -> DataFrame:
     """Incremental LSH index maintenance: near-dup pairs INVOLVING the new
-    batch, without recomputing any old-corpus signature. New bands join the
-    (old ∪ new) band set keyed on (seed, mh); the hot-bucket cap is
-    evaluated over the UNION widths, so the result is EXACTLY the batch
-    `minhash_lsh_pairs(old ∪ new)` restricted to pairs touching a new doc
-    (equality asserted in tests/test_dedup_cap.py). The one thing the delta
-    can't do is retract old-old pairs whose bucket a new batch pushes over
-    the cap — the standard append-only-index tradeoff, documented here.
-    Per batch this shuffles O(|new| + matched buckets), not O(|corpus|)."""
+    batch, without recomputing any old-corpus signature. The index bands are
+    first semi-joined to the new batch's (seed, mh) keys (a broadcast of the
+    new keys, so the index is only scanned map-side), then unioned with the
+    new bands marked fresh; ``bucket_pairs`` caps each bucket by its UNION
+    width, so the result is EXACTLY the batch `minhash_lsh_pairs(old ∪ new)`
+    restricted to pairs touching a new doc (equality asserted in
+    tests/test_dedup_cap.py). The one thing the delta can't do is retract
+    old-old pairs whose bucket a new batch pushes over the cap — the
+    standard append-only-index tradeoff, documented here. Per batch this
+    shuffles O(|new| + matched bucket members), not O(|corpus|)."""
     dp = new_docs.sparkSession.sparkContext.defaultParallelism
     new_sigs = minhash_signatures(new_docs).coalesce(dp).localCheckpoint(eager=True)
+    keys = ["seed", "mh"]
     new_bands = _band_rows(new_sigs)
-    all_bands = index_bands.unionByName(new_bands)
-    hot = (
-        all_bands.groupBy("seed", "mh")
-        .agg(F.count("*").alias("_w"))
-        .filter(F.col("_w") > max_band_width)
-        .select("seed", "mh")
-    )
-    # capped_all has exactly ONE consumer (the o-side of the candidate
-    # join) — no persist: caching it would pin O(|corpus| bands) memory
-    # without ever avoiding a recomputation
-    hot = broadcast_within(hot)
-    capped_all = all_bands.join(hot, ["seed", "mh"], "left_anti")
-    capped_new = new_bands.join(hot, ["seed", "mh"], "left_anti")
-    n, o = capped_new.alias("n"), capped_all.alias("o")
-    cand = (
-        n.join(o, (F.col("n.seed") == F.col("o.seed")) & (F.col("n.mh") == F.col("o.mh"))
-               & (F.col("n.doc_id") != F.col("o.doc_id")))
-        .select(
-            F.least("n.doc_id", "o.doc_id").alias("doc_a"),
-            F.greatest("n.doc_id", "o.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
+    matched = index_bands.join(broadcast_within(new_bands.select(*keys)), keys, "left_semi")
+    rows = matched.withColumn("fresh", F.lit(False)).unionByName(
+        new_bands.withColumn("fresh", F.lit(True)))
+    cand = bucket_pairs(rows.withColumnRenamed("doc_id", "id"), keys,
+                        max_band_width).toDF("doc_a", "doc_b")
     grams_all = index_grams.unionByName(new_sigs.select("doc_id", "grams"))
     # n_bytes (the caller's measure of the union gram table) gates the
     # broadcast attach inside the verify — see _verify_jaccard

@@ -356,6 +356,9 @@ def ccnet_scores(docs: DataFrame) -> DataFrame:
     ex = track(ex.persist())  # LM fit + per-doc scoring share the explode
 
     counts = ex.groupBy("w").agg(F.count("*").alias("c"))
+    # the lm side's measured bytes (one 48-byte row plus its UTF-8 per
+    # distinct word): the planner estimate undercounts strings
+    lm_bytes = counts.agg(F.sum(48 + F.octet_length("w"))).first()[0] or 0
     totals = counts.agg(F.sum("c").alias("t")).withColumn("k", F.lit(1))
     lm = (
         counts.withColumn("k", F.lit(1))
@@ -368,7 +371,7 @@ def ccnet_scores(docs: DataFrame) -> DataFrame:
         )
     )
     per_doc = (
-        ex.join(broadcast_within(lm), "w")
+        ex.join(broadcast_within(lm, lm_bytes), "w")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),

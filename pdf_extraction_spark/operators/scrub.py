@@ -138,14 +138,19 @@ def q_contamination(spark: SparkSession, sf: str) -> DataFrame:
     shingled = lambda d: fan_out(d, "doc_id").select(  # noqa: E731
         "doc_id", F.explode(grams_udf(F.col("text"), CONTAM_SHINGLE)).alias("g")
     )
-    bench = (
-        shingled(docs.filter(F.col("doc_id") % BENCH_EVERY == 0))
-        .select("g")
-        .distinct()
-    )
+    bench_docs = docs.filter(F.col("doc_id") % BENCH_EVERY == 0)
+    bench = shingled(bench_docs).select("g").distinct()
+    # upper bound on the gram set's bytes, from the text: at most one gram
+    # per word, 40 bytes of row plus CONTAM_SHINGLE - 1 separators each, and
+    # each word's bytes in at most CONTAM_SHINGLE grams
+    text = F.lower(F.col("text"))
+    n_bytes = bench_docs.agg(F.sum(
+        (40 + CONTAM_SHINGLE - 1) * F.size(F.split(text, " "))
+        + CONTAM_SHINGLE * F.octet_length(text)
+    )).first()[0] or 0
     corpus = shingled(docs.filter(F.col("doc_id") % BENCH_EVERY != 0))
     return (
-        corpus.join(broadcast_within(bench), "g")
+        corpus.join(broadcast_within(bench, n_bytes), "g")
         .groupBy("doc_id")
         .agg(F.countDistinct("g").alias("n_shared_grams"))
         .orderBy("doc_id")

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.cache import track
-from pdf_extraction_spark.parallel import broadcast_within
+from pdf_extraction_spark.operators.dedup import bucket_pairs
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 QUERY_VEC_ID = 0
@@ -267,10 +267,10 @@ ORDER BY vec_a, vec_b
 # (the all-pairs query above is the small-scale oracle twin). Pipeline:
 #
 #   sign-LSH multi-band bucketing (map-only; INTEGER plane dots so Spark and
-#   DuckDB agree bit-for-bit) → per-(band,bucket) width cap (count window on
-#   the join key — drops degenerate buckets before they go quadratic) →
-#   within-bucket candidate self-join (ONE shuffle on (band,bucket)) →
-#   distinct → exact quantized-cosine verify on candidates only.
+#   DuckDB agree bit-for-bit) → dedup.bucket_pairs: per-(band,bucket) width
+#   cap (drops degenerate buckets before they go quadratic), then pairs from
+#   each capped bucket's collected members, distinct → exact
+#   quantized-cosine verify on candidates only.
 #
 # Emitted pairs are a SUBSET of the exact all-pairs result (identical verify
 # formula + threshold); the recall bound vs exact is asserted in
@@ -338,41 +338,23 @@ def neardup_bucketed_pairs(
     max_bucket_width: int = MAX_BUCKET_WIDTH,
     threshold: float = NEARDUP_COSINE,
 ) -> DataFrame:
-    """LSH-bucketed near-duplicate pairs with exact cosine verification."""
+    """LSH-bucketed near-duplicate pairs with exact cosine verification:
+    candidates are vectors sharing a (band, bucket) of at most
+    ``max_bucket_width`` vectors (``dedup.bucket_pairs``, every vector
+    fresh)."""
     from pyspark.storagelevel import StorageLevel
 
-    # persist: the (band,bucket) rows feed the width aggregation AND both
-    # sides of the self-join — without it the signature subtree runs thrice.
+    # persist: the (band, bucket) rows feed the width aggregate AND the
+    # capped member lists — without it the signature stage runs twice.
     # track(): released at the next query boundary (pdf_extraction_spark.cache)
     bands = track(
         lsh_band_signatures(emb, n_bands, planes_per_band).persist(
             StorageLevel.MEMORY_AND_DISK
         )
     )
-    # width cap via broadcast anti-join with the (tiny, usually empty)
-    # over-cap bucket set — map-side drop, no sort of the join inputs
-    hot = (
-        bands.groupBy("band", "bucket")
-        .agg(F.count("*").alias("_w"))
-        .filter(F.col("_w") > max_bucket_width)
-        .select("band", "bucket")
-    )
-    # persist: the capped bands feed both self-join sides (else each side
-    # re-runs the width agg + anti-join); tracked for boundary release
-    bands_ok = track(
-        bands.join(broadcast_within(hot), ["band", "bucket"], "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
-    a = bands_ok.alias("a")
-    b = bands_ok.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    rows = bands.select("band", "bucket", F.col("vec_id").alias("id"),
+                        F.lit(True).alias("fresh"))
+    cand = bucket_pairs(rows, ["band", "bucket"], max_bucket_width).toDF("vec_a", "vec_b")
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
     cos = F.round(quantized_cosine(F.col("ea"), F.col("eb")), 6)

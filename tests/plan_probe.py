@@ -28,18 +28,26 @@ def executed_plans(spark, action):
 
 
 _JOIN = re.compile(
-    r"^\(\d+\) (\w+Join)\b.*\nLeft keys \[\d+\]: \[(.*)\]\nRight keys \[\d+\]: \[(.*)\]",
+    r"^\(\d+\) (\w+Join)\b.*\nLeft keys \[\d+\]: \[(.*)\]\nRight keys \[\d+\]: \[(.*)\]"
+    r"\nJoin type: (\w+)",
     re.M,
 )
+
+
+def joins(plans, key: str) -> set:
+    """``(operator, join type)`` pairs, e.g. ``("BroadcastHashJoin",
+    "LeftAnti")``, of the joins in ``plans`` whose equi-keys include a
+    column named ``key``."""
+    col = re.compile(rf"(?<![\w.]){re.escape(key)}#|\.{re.escape(key)}\b")
+    return {
+        (name, how)
+        for plan in plans
+        for name, left, right, how in _JOIN.findall(plan)
+        if col.search(left) or col.search(right)
+    }
 
 
 def join_kinds(plans, key: str) -> set:
     """Join operator names (``BroadcastHashJoin``, ``ShuffledHashJoin``, ...)
     in ``plans`` whose equi-keys include a column named ``key``."""
-    col = re.compile(rf"(?<![\w.]){re.escape(key)}#|\.{re.escape(key)}\b")
-    return {
-        name
-        for plan in plans
-        for name, left, right in _JOIN.findall(plan)
-        if col.search(left) or col.search(right)
-    }
+    return {name for name, _ in joins(plans, key)}

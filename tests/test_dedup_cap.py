@@ -2,7 +2,7 @@
 
 A boilerplate footer shared by every document puts a globally-common
 shingle's hash as the band minimum for a large fraction of the corpus —
-one band bucket then holds hundreds of docs and the band self-join goes
+one band bucket then holds hundreds of docs and its pairs go
 quadratic. The MAX_BAND_WIDTH cap must (a) collapse that blowup and
 (b) still surface genuine near-duplicate pairs, whose matching bands come
 from their SHARED CONTENT shingles (bucket width ≈ 2, far under the cap).
@@ -186,7 +186,9 @@ def test_incremental_lsh_equals_batch_restriction(spark):
     """Delta contract of the incremental LSH index: pairs from
     incremental_minhash_pairs(old_index, new_batch) == batch
     minhash_lsh_pairs(old ∪ new) restricted to pairs touching a new doc —
-    exactly, including hot-bucket cap behavior (cap over UNION widths)."""
+    exactly, including hot-bucket cap behavior (cap over UNION widths).
+    The widest band bucket at sf0.001 holds 5 docs, so the default cap
+    never binds; cap 2 drops buckets on both sides."""
     from pyspark.sql import functions as F
 
     from pdf_extraction_spark.operators.dedup import (
@@ -200,17 +202,21 @@ def test_incremental_lsh_equals_batch_restriction(spark):
     new = docs.filter(F.col("doc_id") % 10 == 0)
 
     bands, grams = build_minhash_index(old)
-    got = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in incremental_minhash_pairs(bands, grams, new).collect()
-    }
-    want = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs).collect()
-        if r.doc_a % 10 == 0 or r.doc_b % 10 == 0
-    }
-    assert got, "new batch should produce near-dup pairs at sf0.001"
-    assert got == want
+    n_pairs = {}
+    for cap in (MAX_BAND_WIDTH, 2):
+        got = {
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in incremental_minhash_pairs(bands, grams, new, max_band_width=cap).collect()
+        }
+        want = {
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in minhash_lsh_pairs(docs, max_band_width=cap).collect()
+            if r.doc_a % 10 == 0 or r.doc_b % 10 == 0
+        }
+        assert got, f"new batch should produce near-dup pairs at sf0.001, cap {cap}"
+        assert got == want, cap
+        n_pairs[cap] = len(got)
+    assert n_pairs[2] < n_pairs[MAX_BAND_WIDTH], n_pairs  # the tight cap binds
 
 
 # ---------------------------------------------------------------- bloom

@@ -16,6 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.similarity import (
+    NB_BANDS,
+    PLANES_PER_BAND,
     lsh_band_signatures,
     neardup_bucketed_pairs,
     q_embedding_neardup_pairs,
@@ -41,6 +43,41 @@ def test_recall_vs_exact_pairs(spark):
         assert v == exact[k]
     recall = len(bucketed) / len(exact)
     assert recall >= 0.90, f"recall {recall:.3f} (got {len(bucketed)}/{len(exact)})"
+
+
+@pytest.mark.skipif(not __import__("os").path.isdir(SF_DIR), reason="driver testdata absent")
+def test_bucket_cap_matches_driver_reference(spark):
+    """Under a cap below the widest (band, bucket) of sf0.01 (62 vectors),
+    the pairs are exactly the exact-cosine pairs that share a bucket of at
+    most ``cap`` vectors — the reference grouping done on the driver from
+    the collected signature rows."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from pdf_extraction_spark.operators.similarity import valid_embeddings
+
+    cap = 40
+    emb = valid_embeddings(spark.read.parquet(f"{SF_DIR}/embeddings.parquet"))
+    buckets = defaultdict(list)
+    for r in lsh_band_signatures(emb, NB_BANDS, PLANES_PER_BAND).collect():
+        buckets[(r["band"], r["bucket"])].append(r["vec_id"])
+    assert max(map(len, buckets.values())) > cap  # the cap binds
+    cand = {
+        pair
+        for ids in buckets.values() if len(ids) <= cap
+        for pair in combinations(sorted(ids), 2)
+    }
+    exact = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in q_embedding_neardup_pairs(spark, SF_DIR).collect()
+    }
+    want = {k: v for k, v in exact.items() if k in cand}
+    got = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in neardup_bucketed_pairs(emb, max_bucket_width=cap).collect()
+    }
+    assert got, "the cap should leave pairs"
+    assert got == want
 
 
 @pytest.fixture(scope="module")

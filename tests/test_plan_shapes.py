@@ -70,8 +70,8 @@ def test_quality_route_has_no_python_udf(spark):
 
 
 def test_neardup_bucketed_never_goes_cartesian(spark):
-    """The bucketed near-dup path must stay a keyed (band,bucket) join with
-    an Arrow-vectorized signature stage — never a cartesian/nested-loop
+    """The bucketed near-dup path must stay a keyed (band,bucket) grouping
+    with an Arrow-vectorized signature stage — never a cartesian/nested-loop
     product (the O(n²) failure mode it exists to replace)."""
     from pdf_extraction_spark.operators.similarity import q_neardup_bucketed_pairs
 
@@ -413,3 +413,46 @@ def test_tpch_q5_broadcasts_dimension_chain(spark):
     assert plan.count("BroadcastHashJoin") >= 4
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_lsh_candidates_join_no_bucket_to_itself(spark):
+    """Every LSH candidate set comes from dedup.bucket_pairs: the only joins
+    keyed on a bucket (MinHash ``(seed, mh)``, embedding ``(band, bucket)``)
+    are the width cap's anti-join and, in the incremental index, the
+    semi-join of the index bands to the new batch's buckets. A bucket
+    self-join (or new × all join) would show up as an Inner join here."""
+    from pdf_extraction_spark.cache import release_caches
+    from pdf_extraction_spark.operators import all_queries
+    from tests.plan_probe import executed_plans, joins
+
+    qs = all_queries()
+    want = {
+        "dedup_minhash_lsh": {"LeftAnti"},
+        "dedup_incremental_lsh": {"LeftAnti", "LeftSemi"},
+        "neardup_bucketed_pairs": {"LeftAnti"},
+    }
+    for name, how in want.items():
+        _, plans = executed_plans(spark, lambda: qs[name][0](spark, SF).collect())
+        release_caches()
+        got = {t for key in ("mh", "bucket") for _, t in joins(plans, key)}
+        assert got == how, (name, got)
+
+
+def test_width_cap_is_written_once():
+    """CI guard: the capped-bucket rule (a groupBy count filtered by ``>``
+    and anti-joined away) is written in one function, dedup.bucket_pairs."""
+    import ast
+    import pathlib
+    import re
+
+    width = re.compile(r"\.groupBy\([^)]*\)\s*\.(?:count\(\)|agg\(F\.count\()[^>]*?\.filter\([^\n]*>")
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    found = set()
+    for p in root.rglob("*.py"):
+        src = p.read_text()
+        for fn in ast.walk(ast.parse(src)):
+            if isinstance(fn, ast.FunctionDef):
+                body = ast.get_source_segment(src, fn)
+                if width.search(body) and "left_anti" in body:
+                    found.add((p.name, fn.name))
+    assert found == {("dedup.py", "bucket_pairs")}, found
