@@ -55,21 +55,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from pdf_extraction_spark.cache import release_caches
     from pdf_extraction_spark.operators import all_queries
 
-    def wrap(fn):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # by the time the NEXT query starts, the previous one's result
-            # has been consumed — drop its tracked persisted intermediates
-            # so cached blocks don't accumulate across a long-lived session
-            # (release is always safe: a still-lazy consumer just recomputes)
-            release_caches()
-            return fn(spark, sf_dir)
-
-        return run
-
-    return {name: wrap(fn) for name, (fn, _sql) in all_queries().items()}
+    return {name: fn for name, (fn, _sql) in all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -12,13 +12,14 @@ Usage:
        default "before").
 
 Timing methodology follows bench.py (build_session(local[cpus],
-shuffle_partitions=4*cpus), per-trial release_caches() via the
-__spark_entry__.queries() wrapper, best-of-N) except for the action: each
-query is forced with a noop-sink write, not bench.py's ``df.count()``. On a
-one-row summary the optimizer may drop work a count does not need — the
-executed plan of ``dedup_bloom_prefilter(...).count()`` has no ``word_idx``
-probe join — while the noop write runs the whole plan, as a real consumer
-of the result does.
+shuffle_partitions=4*cpus), best-of-N; every trial calls the query afresh
+and it checkpoints its own intermediates, so no trial reuses another's)
+except for the action: each query is forced with a noop-sink write, not
+bench.py's ``df.count()``. On a one-row summary the optimizer may drop
+work a count does not need — the executed plan of
+``dedup_bloom_prefilter(...).count()`` has no ``word_idx`` probe join —
+while the noop write runs the whole plan, as a real consumer of the
+result does.
 
 The JSON carries ``calib_1core_turns_per_sec``: ``bench.calib_single_core``
 taken before and after the sweep, so timings from runs on a machine whose

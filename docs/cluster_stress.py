@@ -10,8 +10,10 @@ shapes real near-dup graphs produce —
   - 200 chains of length 1,000 (template drift A~B~C~…; diameter 1,000 —
     the shape that made the r2 min-label loop both slow and wrong)
   - 100k random edges over a 400k-id space (noise / cross-links)
-Verified against a driver-side union-find (fine at this size; the Spark
-path never sees the python structure). Prints one JSON line.
+The graph is under the driver union-find edge cap, so the script sets
+``dedup.CC_LOCAL_EDGE_CAP = 0`` to force the distributed star contraction
+it stresses. Verified against a driver-side union-find (fine at this size;
+the Spark path never sees the python structure). Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -70,7 +72,7 @@ def union_find(pairs):
 
 
 def main() -> None:
-    from pdf_extraction_spark.operators.dedup import neardup_clusters
+    from pdf_extraction_spark.operators import dedup
     from pdf_extraction_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -79,9 +81,10 @@ def main() -> None:
     edges = build_edges()
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
 
+    dedup.CC_LOCAL_EDGE_CAP = 0  # the star contraction, not the driver union-find
     stats: dict = {}
     t0 = time.monotonic()
-    got = {r["doc_id"]: r["keeper"] for r in neardup_clusters(df, stats=stats).collect()}
+    got = {r["doc_id"]: r["keeper"] for r in dedup.neardup_clusters(df, stats=stats).collect()}
     wall = time.monotonic() - t0
 
     want = union_find(edges)

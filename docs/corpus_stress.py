@@ -123,7 +123,6 @@ def main() -> None:
     # text). The 1,000-doc template families make the family-prefix grams
     # hot: each compresses to ~one row per batch before the shuffle.
     def sarray():
-        from pdf_extraction_spark.cache import release_caches
         from pdf_extraction_spark.operators.sarray import (
             SA_WINDOW,
             _coverage_mass,
@@ -131,7 +130,7 @@ def main() -> None:
         )
 
         sel = docs.select("doc_id", "text")
-        classes = gram_classes(sel)  # persisted: count + join-back share it
+        classes = gram_classes(sel)  # checkpointed: count + join-back share it
         n_class_rows = classes.count()
         dup_keys = (
             classes.groupBy("gram_key")
@@ -151,7 +150,6 @@ def main() -> None:
         n_positions = sel.select(
             F.sum(F.greatest(F.size(F.split("text", " ")) - (SA_WINDOW - 1), F.lit(0)))
         ).collect()[0][0]
-        release_caches()
         return n_class_rows, int(n_positions), int(mass["docs_with_dup"]), int(mass["dup_words"])
 
     if "sarray" in ops:
@@ -163,7 +161,7 @@ def main() -> None:
         out["sa_dup_words"] = dup_words
 
     # 5. published curation-filter suite at corpus scale: Gopher rules are a
-    # map-only pass; DSIR and CCNet each explode the corpus once (persisted,
+    # map-only pass; DSIR and CCNet each explode the corpus once (checkpointed,
     # shared by fit + scoring) and join back a BROADCAST weight table (256
     # hashed-bigram buckets / vocab-bounded unigram LM) — the property that
     # keeps both scan-shaped at 100 TB.
@@ -195,7 +193,6 @@ def main() -> None:
     # ~flat (new-batch suffix-array stage + one keyed join of its distinct
     # grams against the persisted index).
     if "incr" in ops:
-        from pdf_extraction_spark.cache import release_caches
         from pdf_extraction_spark.operators.sarray import (
             build_gram_index,
             gram_classes,
@@ -211,12 +208,11 @@ def main() -> None:
             return idx, idx.count()
 
         index, out["incr_index_rows"] = timed("incr_index_build", index_build)
-        # two delta passes (caches released between): the second runs with
-        # a warm JVM against the already-built index — the per-batch cost
-        # a deployment actually pays; the first is recorded for honesty
-        # about cold overhead on this phantom-IO-prone box
+        # two delta passes (each checkpoints its own gram classes): the
+        # second runs with a warm JVM against the already-built index —
+        # the per-batch cost a deployment actually pays; the first is
+        # recorded for honesty about cold overhead on this phantom-IO-prone box
         def delta_pass():
-            release_caches()
             t0 = time.monotonic()
             row = (incremental_duplicated_mass(index, new)
                    .agg(F.count("*").alias("docs_with_dup"),
@@ -230,9 +226,8 @@ def main() -> None:
         out["incr_new_docs"] = new_n
         out["incr_new_docs_with_dup"] = int(delta["docs_with_dup"])
         out["incr_new_dup_words"] = int(delta["dup_words"])
-        # stats pass (untimed; the class rows are already persisted)
+        # stats pass (untimed)
         out["incr_new_gram_rows"] = gram_classes(new).count()
-        release_caches()
 
     # 6c. table-backed ingest (plans/incremental.py): the persisted-
     # warehouse form of 6b. The base corpus is appended once ("ingest_base",
@@ -245,7 +240,6 @@ def main() -> None:
     if "ingest" in ops:
         import shutil
 
-        from pdf_extraction_spark.cache import release_caches
         from pdf_extraction_spark.plans.incremental import append_batch
         from pdf_extraction_spark.sources.tables import TableIO
 
@@ -256,9 +250,7 @@ def main() -> None:
         new = docs.filter(F.col("doc_id") < new_n).select("doc_id", "text")
 
         base = timed("ingest_base", lambda: append_batch(spark, root, old, "base"))
-        release_caches()
         delta = timed("ingest_delta", lambda: append_batch(spark, root, new, "delta"))
-        release_caches()
         io = TableIO(spark, root)
         out["ingest_base_docs"] = base["n_docs"]
         out["ingest_delta_docs"] = delta["n_docs"]
@@ -325,7 +317,6 @@ def main() -> None:
     if "bloom" in ops:
         import shutil
 
-        from pdf_extraction_spark.cache import release_caches
         from pdf_extraction_spark.plans.incremental import append_batch
         from pdf_extraction_spark.sources.tables import TableIO
 
@@ -335,7 +326,6 @@ def main() -> None:
         store = docs.filter(F.col("doc_id") >= 2 * new_n).select("doc_id", "text")
         base = timed("bloom_base_ingest", lambda: append_batch(
             spark, root, store, "base", admit_unique=True))
-        release_caches()
         # dup half: store texts under fresh (negative) doc ids; novel half:
         # docs excluded from the store (bodies hash on doc_id -> unseen)
         dups = docs.filter(
@@ -345,7 +335,6 @@ def main() -> None:
         delta_batch = dups.unionByName(novel)
         delta = timed("bloom_delta_admit", lambda: append_batch(
             spark, root, delta_batch, "delta", admit_unique=True))
-        release_caches()
         # no false negatives: every store dup caught; exactly the novel
         # half admitted; candidates = dups + the tiny fp tail
         assert delta["n_store_dups"] == new_n, delta

@@ -101,7 +101,7 @@ def main() -> None:
             "stages_s": timings,
             "counts": {k: v for k, v in stats.items() if isinstance(v, int)},
         }
-        ext.unpersist()
+        del ext  # its checkpoint blocks go with the last reference
     small, large = (out["sizes"][str(N_DOCS // 4)], out["sizes"][str(N_DOCS)])
     out["stage_time_ratio_4x"] = {
         k: round(large["stages_s"][k] / max(small["stages_s"][k], 1e-3), 2)

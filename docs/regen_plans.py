@@ -53,7 +53,7 @@ def main() -> None:
          plan_of(qs["dedup_anti_new_work"](spark, SF)))
     )
     sections.append(
-        ("Bucketed near-dup pairs (ArrowEvalPython signature stage → broadcast-anti width cap "
+        ("Bucketed near-dup pairs (checkpointed signature rows → broadcast-anti width cap "
          "→ per-(band,bucket) sorted member lists → posexplode/slice pair emission → distinct "
          "→ verify joins; NO bucket self-join, NO cartesian/nested-loop join anywhere)",
          plan_of(qs["neardup_bucketed_pairs"](spark, SF)))
@@ -89,20 +89,20 @@ def main() -> None:
          plan_of(qs["tfidf_top_terms"](spark, SF)))
     )
     sections.append(
-        ("Suffix-array exact-substring dedup (ONE MapInPandas suffix-array stage → "
-         "distinct-gram count groupBy → dup-key join-back (no unbounded collect_list "
+        ("Suffix-array exact-substring dedup (ONE checkpointed MapInPandas suffix-array "
+         "stage, read by both consumers as the same Scan ExistingRDD → distinct-gram count groupBy → dup-key join-back (no unbounded collect_list "
          "row) → explode → per-doc interval-union window)",
          plan_of(qs["suffix_array_dedup"](spark, SF)))
     )
     sections.append(
-        ("Semantic dedup stats (ArrowEvalPython quantized centroid assignment → "
+        ("Semantic dedup stats (checkpointed quantized centroid assignment → "
          "cluster-keyed self-join (NEVER all-pairs) → quantized-cosine verify; "
          "component labels from the checkpointed star contraction)",
          plan_of(qs["semantic_dedup_stats"](spark, SF)))
     )
     sections.append(
         ("Boilerplate report (top duplicated grams: md5-keyed count over the "
-         "cached suffix-array stage → broadcast winner join-back → one minimal "
+         "checkpointed suffix-array stage → broadcast winner join-back → one minimal "
          "occurrence per winner → text re-sliced from the source scan; no gram "
          "strings in the shuffle)",
          plan_of(qs["top_duplicated_grams"](spark, SF)))
@@ -115,7 +115,7 @@ def main() -> None:
          plan_of(qs["incremental_exact_substring"](spark, SF)))
     )
     sections.append(
-        ("DSIR importance sampling (ONE persisted bigram-bucket explode feeds the "
+        ("DSIR importance sampling (ONE checkpointed bigram-bucket explode feeds the "
          "256-bucket distribution fit AND the scoring; weights re-enter as a "
          "BroadcastHashJoin; per-doc sum is one partial-aggregated shuffle of "
          "int64 micro-nats)",

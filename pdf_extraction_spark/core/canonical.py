@@ -10,7 +10,6 @@ calls Python.
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 _SLASH_RE = re.compile(r"[/\\]+")
@@ -25,11 +24,6 @@ def slug(text: str) -> str:
     text = _NONALNUM_RE.sub("-", text)
     text = _DASHES_RE.sub("-", text)
     return text.strip("-")
-
-
-def short_doc_id(text: str, n: int = 12) -> str:
-    """First n hex chars of sha256 — reference memo_extractor.py:604-605."""
-    return hashlib.sha256(text.encode("utf-8")).hexdigest()[:n]
 
 
 def build_canonical_key(doc_id: str, subject: str, grade: str, session: str, year: int, suffix: str = "qp") -> str:

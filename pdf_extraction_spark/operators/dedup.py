@@ -41,8 +41,10 @@ it is far above the widths organic near-dup clusters produce (observed max
 5 at sf0.01, 22 at sf0.1) while bounding the worst bucket at 64²
 comparisons. The oracle applies the same cap, so correctness stays exact.
 
-Persisted intermediates (signatures) are registered with
-pdf_extraction_spark.cache and released at the next action boundary.
+An intermediate with several consumers (the signatures) is reused through
+a lazy ``localCheckpoint``: the operator's own first action fills it, and
+its blocks go when the frame is no longer referenced. Library pair sets
+are unordered; the driver queries sort them.
 """
 
 from __future__ import annotations
@@ -54,7 +56,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.cache import release_caches, track
 from pdf_extraction_spark.parallel import broadcast_within, fan_out
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
@@ -150,8 +151,10 @@ def _min_sigs(grams: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     return exploded.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES, shingle: int = SHINGLE) -> DataFrame:
-    """One row per doc with ≥1 shingle: (doc_id, grams, mh0..mh{k-1}).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """One row per doc with ≥1 shingle: (doc_id, grams, mh0..mh{N_HASHES-1}),
+    SHINGLE-word grams (the ``grams_udf`` grams the incremental index
+    verifies against).
 
     r7 shape (guide §2.4 — remove shuffles outright): ONE Arrow stage
     computes shingles AND the k md5 min-hashes per document. The previous
@@ -167,39 +170,39 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES, shingle: int =
     scan first (guide §2.2; no-op on already-parallel inputs)."""
     import hashlib as _hl
 
-    prefixes = [f"{s}:".encode("utf-8") for s in range(n_hashes)]
+    prefixes = [f"{s}:".encode("utf-8") for s in range(N_HASHES)]
     schema = "doc_id long, grams array<string>, " + ", ".join(
-        f"mh{s} string" for s in range(n_hashes)
+        f"mh{s} string" for s in range(N_HASHES)
     )
 
     def gen(batches):
         md5 = _hl.md5
         for pdf in batches:
             out_ids, out_grams = [], []
-            out_mh: list = [[] for _ in range(n_hashes)]
+            out_mh: list = [[] for _ in range(N_HASHES)]
             for doc_id, t in zip(pdf["doc_id"].values, pdf["text"].values):
                 w = t.lower().split(" ") if isinstance(t, str) else []
-                if len(w) < shingle:
+                if len(w) < SHINGLE:
                     continue
                 grams = list(dict.fromkeys(
-                    " ".join(w[i : i + shingle]) for i in range(len(w) - shingle + 1)
+                    " ".join(w[i : i + SHINGLE]) for i in range(len(w) - SHINGLE + 1)
                 ))
                 if not grams:
                     continue
-                best = [None] * n_hashes
+                best = [None] * N_HASHES
                 for g in grams:
                     gb = g.encode("utf-8")
-                    for s in range(n_hashes):
+                    for s in range(N_HASHES):
                         d = md5(prefixes[s] + gb).digest()
                         if best[s] is None or d < best[s]:
                             best[s] = d
                 out_ids.append(doc_id)
                 out_grams.append(grams)
-                for s in range(n_hashes):
+                for s in range(N_HASHES):
                     out_mh[s].append(best[s].hex())
             cols = {"doc_id": pd.Series(out_ids, dtype="int64"),
                     "grams": pd.Series(out_grams, dtype="object")}
-            for s in range(n_hashes):
+            for s in range(N_HASHES):
                 cols[f"mh{s}"] = pd.Series(out_mh[s], dtype="object")
             yield pd.DataFrame(cols)
 
@@ -294,20 +297,18 @@ def _verify_jaccard(cand: DataFrame, grams: DataFrame,
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= JACCARD_MIN)
-        .orderBy("doc_a", "doc_b")
     )
 
 
 def minhash_lsh_pairs(docs: DataFrame, max_band_width: int = MAX_BAND_WIDTH) -> DataFrame:
     """LSH candidate pairs (1 row per band match, r=1 bands) verified with
-    exact shingle Jaccard; emits pairs with jaccard >= JACCARD_MIN."""
-    from pyspark.storagelevel import StorageLevel
-
+    exact shingle Jaccard; emits pairs with jaccard >= JACCARD_MIN, in no
+    particular order."""
     # the signature stage feeds THREE consumers (bands + both jaccard join
-    # sides); persist it or Catalyst recomputes the shingle/minhash subtree
-    # per consumer (measured 25s → 3s at sf0.1)
-    sigs = track(minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK))
-    # the byte measure materializes the cache the three consumers need
+    # sides); checkpoint it or Catalyst recomputes the shingle/minhash
+    # subtree per consumer (measured 25s → 3s at sf0.1)
+    sigs = minhash_signatures(docs).localCheckpoint(eager=False)
+    # the byte measure materializes the checkpoint the three consumers need
     # anyway and feeds the broadcast gate of the verify attach (guide §3.1)
     n_bytes = sigs.agg(F.sum(_gram_row_bytes(F.col("grams")))).first()[0] or 0
     cand = lsh_band_candidates(sigs, max_band_width)
@@ -315,7 +316,7 @@ def minhash_lsh_pairs(docs: DataFrame, max_band_width: int = MAX_BAND_WIDTH) -> 
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    return minhash_lsh_pairs(T(spark, sf, "documents"))
+    return minhash_lsh_pairs(T(spark, sf, "documents")).orderBy("doc_a", "doc_b")
 
 
 def build_minhash_index(docs: DataFrame):
@@ -419,7 +420,7 @@ def q_incremental_lsh(spark: SparkSession, sf: str) -> DataFrame:
     text = F.col("text")
     bound = 48 + SHINGLE * F.octet_length(text) + 16 * F.size(F.split(text, " "))
     n_bytes = docs.agg(F.sum(bound)).first()[0] or 0
-    return incremental_minhash_pairs(bands, grams, new, n_bytes=n_bytes)
+    return incremental_minhash_pairs(bands, grams, new, n_bytes=n_bytes).orderBy("doc_a", "doc_b")
 
 
 _SQL_MINHASH = f"""
@@ -743,7 +744,7 @@ QUERIES = {
 # past its silent 20-round cap, WRONG). Each round is two groupBy+join
 # passes over the current edge set; the driver touches one (count, xor)
 # checksum per round. The edge set is localCheckpoint'ed EVERY round:
-# persist() caches data but not the logical plan, which otherwise grows
+# a persisted frame keeps its logical plan, which otherwise grows
 # per round until plan stringification OOMs the driver (r2 defect).
 # Non-convergence RAISES instead of returning split clusters.
 #
@@ -866,12 +867,8 @@ def neardup_clusters(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
             stats["rounds"] = 0
             stats["edges"] = sig[0]
         return _local_components(pairs.sparkSession, E)
-    verts = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # from the checkpointed edge set, so ``pairs`` is read once
+    verts = E.select(F.col("a").alias("doc_id")).union(E.select("b")).distinct()
     rounds = 0
     if sig[0]:
         for rounds in range(1, MAX_CC_ROUNDS + 1):
@@ -906,24 +903,15 @@ def neardup_clusters(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
 
 
 def _clustered_docs(spark: SparkSession, sf: str) -> DataFrame:
-    """Shared clustering preamble: materialize the verified pair set ONCE
-    (the contraction loop re-reads it every round), release the signature/
-    band caches it was built from, then run star-contraction. The
-    checkpoint-then-release ordering is load-bearing (r2's plan-growth OOM
-    class) — keep it in this one place."""
-    pairs = (
-        q_minhash_lsh_pairs(spark, sf).select("doc_a", "doc_b").localCheckpoint(eager=True)
-    )
-    release_caches()
-    return neardup_clusters(pairs)
+    """Shared clustering preamble: star-contraction components of the
+    verified MinHash pairs (``neardup_clusters`` checkpoints the edge set
+    it re-reads every round)."""
+    return neardup_clusters(minhash_lsh_pairs(T(spark, sf, "documents")))
 
 
 def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster the verified MinHash near-dup pairs; per cluster report the
     keeper, member count, and dropped-doc count (the dedup decision)."""
-    # materialize the (small) verified pair set once — the label loop
-    # consumes it every round — then release the signature/band caches it
-    # was built from (they are fully consumed now)
     clusters = _clustered_docs(spark, sf)
     return (
         clusters.groupBy("keeper")

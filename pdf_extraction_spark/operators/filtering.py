@@ -67,7 +67,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.cache import track
 from pdf_extraction_spark.parallel import broadcast_within, fan_out
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
@@ -116,7 +115,7 @@ def dsir_scores(docs: DataFrame, target: F.Column) -> DataFrame:
     ex = fan_out(docs, "doc_id").select(
         "doc_id", target.alias("is_target"), F.explode(_bigram_buckets(words)).alias("b")
     )
-    ex = track(ex.persist())  # feeds the distribution fit AND the per-doc scoring
+    ex = ex.localCheckpoint(eager=False)  # feeds the distribution fit AND the per-doc scoring
 
     dist = ex.groupBy("b").agg(
         F.count("*").alias("c_raw"),
@@ -353,7 +352,7 @@ def ccnet_scores(docs: DataFrame) -> DataFrame:
     corpus average."""
     words = F.split(F.lower(F.col("text")), " ")
     ex = docs.select("doc_id", F.explode(words).alias("w"))
-    ex = track(ex.persist())  # LM fit + per-doc scoring share the explode
+    ex = ex.localCheckpoint(eager=False)  # LM fit + per-doc scoring share the explode
 
     counts = ex.groupBy("w").agg(F.count("*").alias("c"))
     # the lm side's measured bytes (one 48-byte row plus its UTF-8 per

@@ -233,10 +233,11 @@ def gram_classes(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     window: int = SA_WINDOW,
 ) -> DataFrame:
-    """Cached distinct-gram class rows (gram_key, n_local, occ_d, occ_o) from the
+    """Distinct-gram class rows (gram_key, n_local, occ_d, occ_o) from the
     partition-local suffix-array stage — the shared base of the dedup-mass
-    query and the boilerplate report. Persisted: every caller consumes it
-    at least twice (count + join-back).
+    query and the boilerplate report. Lazily checkpointed: every caller
+    consumes it at least twice (count + join-back), the first consumer
+    fills it and the rest read the same rows.
 
     Incoming Arrow batches (session maxRecordsPerBatch, 1024 rows) are
     ACCUMULATED up to ``SA_BATCH_TOKENS`` tokens before each suffix-array
@@ -248,9 +249,6 @@ def gram_classes(
     int64 tokens is a few lexsort rounds (~1 s, ~50 MB working set) —
     far below executor memory; results are batching-invariant (pinned by
     tests/test_sarray.py's partitioning-invariance cases)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from pdf_extraction_spark.cache import track
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buf: list = []
@@ -272,10 +270,10 @@ def gram_classes(
     # one-row-group files, so without this the whole gram stage runs as
     # 1-2 tasks); no-op when the input is already parallel. Results are
     # batching-invariant (pinned by the partitioning-invariance tests).
-    return track(
+    return (
         fan_out(docs.select(id_col, text_col), id_col)
         .mapInPandas(gen, _CLASS_SCHEMA)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
 
 
@@ -452,8 +450,8 @@ def incremental_duplicated_mass(
     ``new_classes``: optionally pass the batch's gram_classes frame when
     the caller also consumes it (plans/incremental.append_batch derives
     the index adds from the same rows) — sharing the literal DataFrame
-    guarantees ONE Arrow stage instead of leaning on plan-level cache
-    substitution."""
+    shares its one checkpoint, so the Arrow stage runs ONCE (a second
+    ``gram_classes`` call would be a second checkpoint)."""
     if new_classes is None:
         new_classes = gram_classes(new_docs, id_col, text_col, window)
     new_counts = new_classes.groupBy("gram_key").agg(F.sum("n_local").alias("n_new"))
@@ -473,7 +471,7 @@ def incremental_duplicated_mass(
     # batch-sized: a bulk load (a 500k-doc initial batch carries ~20M
     # distinct grams, >1 GB serialized) OOMs the driver-side broadcast
     # build (observed at the 500k ingest stress). Counting `single` costs
-    # one batch-bounded partial-agg job over the persisted class rows;
+    # one batch-bounded partial-agg job over the checkpointed class rows;
     # above the broadcast budget the lookup degrades to a shuffled join —
     # one extra exchange, still exact. The empty-index bulk-load case (the
     # ingest plan's first append) skips the lookup entirely: nothing can match.
@@ -493,10 +491,8 @@ def incremental_duplicated_mass(
                    .select("gram_key").distinct())
     dup_keys = (
         within.unionByName(matched)  # disjoint by construction
-        # O(|new-batch duplicated grams|) rows. Checkpointing here makes
-        # the coverage query reference the cached new_classes exactly
-        # once — a second (re-aliased) reference would miss the cache and
-        # re-run the new-batch suffix-array stage (see build_gram_index).
+        # O(|new-batch duplicated grams|) rows, materialized once: the
+        # count below reads it and the coverage join reuses it.
         .localCheckpoint(eager=True)
     )
     # The same batch-sized-only discipline applies to the join-back: Spark

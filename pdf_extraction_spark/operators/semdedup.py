@@ -51,7 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.cache import track
 from pdf_extraction_spark.operators.dedup import neardup_clusters
 from pdf_extraction_spark.operators.similarity import (
     DIM,
@@ -98,7 +97,9 @@ def _nearest_centroid_q(centroids):
 
 def semantic_assign(spark: SparkSession, sf: str, centroids=None,
                     embeddings: DataFrame | None = None) -> DataFrame:
-    """Assignment stage alone: (vec_id, embedding, sem_cluster), persisted.
+    """Assignment stage alone: (vec_id, embedding, sem_cluster), lazily
+    checkpointed: its first consumer fills it, and every later one reads
+    the same rows.
     When ``centroids`` is None the DEFAULT, driver-checked path derives
     k = sem_k_for(n) from the corpus itself (one 1-row count + k tiny rows
     on the driver). k grows ∝ n, so the driver-held centroid matrix is
@@ -106,20 +107,17 @@ def semantic_assign(spark: SparkSession, sf: str, centroids=None,
     where a deployment flips to the `ivf_train` escalation seam (trained
     coarse centroids, same assignment UDF); the registered form stays
     non-quadratic either way."""
-    from pyspark.storagelevel import StorageLevel
-
     emb = valid_embeddings(embeddings if embeddings is not None
                            else T(spark, sf, "embeddings"))
     if centroids is None:
         k = sem_k_for(emb.count())
         cent_rows = emb.orderBy("vec_id").limit(k).select("embedding").collect()
         centroids = [[float(x) for x in r["embedding"]] for r in cent_rows]
-    # assigned feeds both self-join sides, the component join-back, and the
-    # stats rollup — persist once
-    return track(
-        emb.withColumn("sem_cluster", _nearest_centroid_q(centroids)(F.col("embedding")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # assigned feeds the pair scoring, the component join-back, and the
+    # stats rollup — compute it once
+    return emb.withColumn(
+        "sem_cluster", _nearest_centroid_q(centroids)(F.col("embedding"))
+    ).localCheckpoint(eager=False)
 
 
 def scored_pairs(assigned: DataFrame, tau: float = SEM_TAU) -> DataFrame:
@@ -190,11 +188,8 @@ def semantic_members(spark: SparkSession, sf: str, centroids=None,
     same way; ``tau`` the duplicate-cosine threshold."""
     assigned = semantic_assign(spark, sf, centroids=centroids,
                                embeddings=embeddings)
-    pairs = (
-        scored_pairs(assigned, tau)
-        .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b"))
-        # the contraction loop re-reads the pair set every round
-        .localCheckpoint(eager=True)
+    pairs = scored_pairs(assigned, tau).select(
+        F.col("va").alias("doc_a"), F.col("vb").alias("doc_b")
     )
     labels = neardup_clusters(pairs).select(
         F.col("doc_id").alias("vec_id"), F.col("keeper").alias("group_id")

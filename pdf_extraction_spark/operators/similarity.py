@@ -31,7 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.cache import track
 from pdf_extraction_spark.operators.dedup import bucket_pairs
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
@@ -341,17 +340,11 @@ def neardup_bucketed_pairs(
     """LSH-bucketed near-duplicate pairs with exact cosine verification:
     candidates are vectors sharing a (band, bucket) of at most
     ``max_bucket_width`` vectors (``dedup.bucket_pairs``, every vector
-    fresh)."""
-    from pyspark.storagelevel import StorageLevel
-
-    # persist: the (band, bucket) rows feed the width aggregate AND the
+    fresh). The pairs come in no particular order."""
+    # checkpoint: the (band, bucket) rows feed the width aggregate AND the
     # capped member lists — without it the signature stage runs twice.
-    # track(): released at the next query boundary (pdf_extraction_spark.cache)
-    bands = track(
-        lsh_band_signatures(emb, n_bands, planes_per_band).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    # Whichever consumer runs first fills it.
+    bands = lsh_band_signatures(emb, n_bands, planes_per_band).localCheckpoint(eager=False)
     rows = bands.select("band", "bucket", F.col("vec_id").alias("id"),
                         F.lit(True).alias("fresh"))
     cand = bucket_pairs(rows, ["band", "bucket"], max_bucket_width).toDF("vec_a", "vec_b")
@@ -362,12 +355,13 @@ def neardup_bucketed_pairs(
         cand.join(ea, "vec_a").join(eb, "vec_b")
         .select("vec_a", "vec_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .orderBy("vec_a", "vec_b")
     )
 
 
 def q_neardup_bucketed_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    return neardup_bucketed_pairs(valid_embeddings(T(spark, sf, "embeddings")))
+    return neardup_bucketed_pairs(
+        valid_embeddings(T(spark, sf, "embeddings"))
+    ).orderBy("vec_a", "vec_b")
 
 
 _NP_TOTAL = NB_BANDS * PLANES_PER_BAND

@@ -171,8 +171,3 @@ class Ledger:
                 for b in buckets
             ]
         )
-
-    def read(self) -> DataFrame:
-        # mergeSchema for the same reason as _run_rows: ledger dirs may mix
-        # pre-r2 and current file schemas
-        return self.io.read(LEDGER_TABLE, merge_schema=True)

@@ -49,7 +49,6 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.cache import release_caches
 from pdf_extraction_spark.operators.corpus import PACK_BUDGET, chunk_dup_fractions
 from pdf_extraction_spark.operators.dedup import minhash_lsh_pairs, neardup_clusters
 from pdf_extraction_spark.operators.sampling import dataset_split
@@ -186,13 +185,10 @@ def curate_corpus(
         _stage("line_dedup", n)
 
     # 3. near-dup dedup over the survivors: verified pairs → components →
-    #    keep each cluster's min-id member. Pairs are checkpointed eagerly
-    #    (the contraction loop re-reads them every round), then the
-    #    signature caches are released.
+    #    keep each cluster's min-id member. neardup_clusters checkpoints
+    #    the edge set it re-reads, so the pair lineage runs once.
     corpus = exact.select("doc_id", F.col("extracted_text").alias("text"))
-    pairs = minhash_lsh_pairs(corpus).select("doc_a", "doc_b").localCheckpoint(eager=True)
-    release_caches()
-    clusters = neardup_clusters(pairs)
+    clusters = neardup_clusters(minhash_lsh_pairs(corpus))
     dropped = clusters.filter(F.col("doc_id") != F.col("keeper")).select("doc_id")
     neardup, (n,) = _materialize(exact.join(dropped, "doc_id", "left_anti"))
     _stage("neardup_dedup", n)
@@ -227,7 +223,6 @@ def curate_corpus(
             F.col("vec_id").alias("doc_id")
         )
         neardup, (n,) = _materialize(neardup.join(sem_drop, "doc_id", "left_anti"))
-        release_caches()  # after the count: it reads the cached assignment
         _stage("semantic_dedup", n)
 
     # 3b. repetition filter: a doc that survived document-grain dedup can

@@ -59,7 +59,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
 
-from pdf_extraction_spark.cache import track
 from pdf_extraction_spark.operators.dedup import (
     _BLOOM_WORD,
     BLOOM_BITS_PER_KEY,
@@ -192,9 +191,7 @@ def _admit(
     not |batch|. Returns (admitted docs with h, admission counts)."""
     hashed = new_docs.select("doc_id", "text", F.md5("text").alias("h"))
     rk = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
-    uniq = track(
-        hashed.withColumn("is_batch_dup", rk > 1).persist()
-    )
+    uniq = hashed.withColumn("is_batch_dup", rk > 1).localCheckpoint(eager=False)
     n_in, n_batch_dups = uniq.agg(
         F.count("*"), F.sum(F.col("is_batch_dup").cast("bigint"))
     ).collect()[0]
@@ -225,7 +222,7 @@ def _admit(
             .filter(F.col("all_hit") == 1)
             .select("doc_id")
         )
-        candidates = track(batch_unique.join(hit_docs, "doc_id").persist())
+        candidates = batch_unique.join(hit_docs, "doc_id").localCheckpoint(eager=False)
         n_candidates = candidates.count()
 
     if n_candidates > 0 and io.exists("doc_hashes"):
@@ -282,7 +279,7 @@ def append_batch(
     counts: dict = {}
     if admit_unique:
         docs, counts = _admit(io, new_docs, batch_id)
-        docs = track(docs.persist())
+        docs = docs.localCheckpoint(eager=False)
     else:
         docs = new_docs
 
@@ -294,10 +291,8 @@ def append_batch(
         index = spark.createDataFrame([], _INDEX_SCHEMA).select("gram_key", "n_old")
 
     # ONE gram stage for the whole ingest: the same class rows feed the
-    # delta mass AND the index adds (passing the frame down avoids a
-    # second tracked persist that only deduplicates via plan-level cache
-    # substitution — the mechanism documented as unreliable on re-aliased
-    # branches in build_gram_index).
+    # delta mass AND the index adds (passing the frame down shares its one
+    # checkpoint; a second gram_classes call would run the stage again).
     cls = gram_classes(docs.select("doc_id", "text"), window=window)
     mass = incremental_duplicated_mass(
         index, docs.select("doc_id", "text"), window=window, new_classes=cls
@@ -305,7 +300,7 @@ def append_batch(
     # shuffle_hash: never broadcast the mass side — on a BULK LOAD it is
     # corpus-sized, and even batch-sized it drags the whole coverage
     # lineage into a driver-side broadcast build that competes with the
-    # cached gram stage for the same heap (observed OOM at the 500k
+    # checkpointed gram stage for the same heap (observed OOM at the 500k
     # ingest stress). A doc_id-keyed shuffle between two batch-sized
     # relations is cheap and its memory use is bounded per task.
     report = (
@@ -356,14 +351,6 @@ def append_batch(
         .agg(F.count("*").alias("n_docs"), F.sum("dup_words").alias("dup_words"))
         .collect()[0]
     )
-    if admit_unique:
-        # the batch is committed — drop this append's persisted
-        # intermediates (admission's uniq/candidates/docs) so a long-lived
-        # ingest loop (streaming foreachBatch) doesn't accumulate cached
-        # blocks across epochs; release is always safe, never required
-        from pdf_extraction_spark.cache import release_caches
-
-        release_caches()
     out = {
         "batch_id": batch_id,
         "skipped": False,

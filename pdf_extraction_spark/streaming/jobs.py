@@ -384,8 +384,6 @@ def stream_ingest_gram_index(
     )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        from pdf_extraction_spark.cache import release_caches
-
         append_batch(
             batch_df.sparkSession,
             warehouse_root,
@@ -394,9 +392,6 @@ def stream_ingest_gram_index(
             window=window if window is not None else SA_WINDOW,
             admit_unique=admit_unique,
         )
-        # the gram stage persists per batch; without a per-epoch release an
-        # unbounded stream accumulates cached blocks for its whole lifetime
-        release_caches()
 
     return (
         docs.writeStream.foreachBatch(ingest)

@@ -14,10 +14,9 @@ SF = "/root/testdata/sf0.001"
 
 
 def _verify_batch(spark, tmp_path):
-    from pdf_extraction_spark.operators.dedup import minhash_lsh_pairs
-    from pdf_extraction_spark.sources.tables import load_testdata as T
+    from pdf_extraction_spark.operators.dedup import q_minhash_lsh_pairs
 
-    return minhash_lsh_pairs(T(spark, SF, "documents")).collect()
+    return q_minhash_lsh_pairs(spark, SF).collect()
 
 
 def _verify_incremental(spark, tmp_path):

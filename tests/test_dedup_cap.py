@@ -42,12 +42,9 @@ def hot_docs(spark):
 
 
 def test_cap_collapses_hot_band_blowup(spark, hot_docs):
-    sigs = minhash_signatures(hot_docs).persist()
-    try:
-        uncapped = lsh_band_candidates(sigs, max_band_width=1 << 30).count()
-        capped = lsh_band_candidates(sigs, max_band_width=MAX_BAND_WIDTH).count()
-    finally:
-        sigs.unpersist()
+    sigs = minhash_signatures(hot_docs).localCheckpoint(eager=False)
+    uncapped = lsh_band_candidates(sigs, max_band_width=1 << 30).count()
+    capped = lsh_band_candidates(sigs, max_band_width=MAX_BAND_WIDTH).count()
     # the footer drives most of the corpus into a handful of band buckets
     assert uncapped > 3000, uncapped
     # the cap drops those degenerate buckets: candidates shrink by >5×

@@ -15,10 +15,7 @@ def exam_df(spark):
 
     pdf = fixtures.transcripts_pandas(n_convs=12, whale_every=0)
     extracted = extract_stage(spark.createDataFrame(pdf))
-    df = assemble_exam(extracted)
-    df.persist()
-    df.count()
-    return df
+    return assemble_exam(extracted).localCheckpoint(eager=True)
 
 
 def test_schema_shape(spark, exam_df):

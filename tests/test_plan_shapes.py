@@ -83,25 +83,28 @@ def test_neardup_bucketed_never_goes_cartesian(spark):
 
 
 def test_suffix_array_plan_shape(spark):
-    """One suffix-array Arrow stage, CACHED across its two consumers (the
-    gram-count aggregate and the dup-key join-back) — the plan must show
-    the MapInPandas subtree under an InMemoryRelation, consumed twice, with
-    no cartesian join and no unbounded collect_list aggregate."""
-    from pdf_extraction_spark.cache import release_caches
-    from pdf_extraction_spark.operators.sarray import q_suffix_array_dedup
+    """One suffix-array Arrow stage, CHECKPOINTED once and read by its two
+    consumers (the gram-count aggregate and the dup-key join-back): the
+    only plan with the MapInPandas subtree is the checkpoint's, and the
+    query scans that one checkpointed RDD twice, with no cartesian join and
+    no unbounded collect_list aggregate."""
+    import re
 
-    plan = plan_of(q_suffix_array_dedup(spark, SF))
-    release_caches()
-    assert plan.count("InMemoryTableScan") >= 2  # both consumers hit the cache
-    assert "MapInPandas" in plan
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "collect_list" not in plan  # hot grams must not concentrate in one row
+    from pdf_extraction_spark.operators.sarray import q_suffix_array_dedup
+    from tests.plan_probe import executed_plans
+
+    _, plans = executed_plans(spark, lambda: q_suffix_array_dedup(spark, SF).collect())
+    assert sum("MapInPandas" in p for p in plans) == 1  # the gram stage, once
+    scans = [r for p in plans for r in re.findall(r"(\w+RDD\[\d+\]) at localCheckpoint", p)]
+    assert len(scans) >= 2 and len(set(scans)) == 1, scans  # both read the one checkpoint
+    for plan in plans:
+        assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+        assert "collect_list" not in plan  # hot grams must not concentrate in one row
 
 
 def test_semantic_dedup_join_is_cluster_keyed(spark):
     """The SemDeDup comparison join must be keyed on the cluster id —
     never an all-pairs product — with Arrow-vectorized assignment/cosine."""
-    from pdf_extraction_spark.cache import release_caches
     from pdf_extraction_spark.operators.semdedup import (
         SEM_K,
         _nearest_centroid_q,
@@ -122,7 +125,6 @@ def test_semantic_dedup_join_is_cluster_keyed(spark):
         .select("va", "vb", F.round(quantized_cosine(F.col("ea"), F.col("eb")), 6).alias("cos"))
     )
     plan = plan_of(pairs)
-    release_caches()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "ArrowEvalPython" in plan
     # the equi-key must reach the join condition (hash-partitionable)
@@ -164,18 +166,35 @@ def test_priority_queries_have_no_accidental_cross_join(spark):
     BroadcastNestedLoopJoin except the documented one-row-broadcast
     cases. Catches a lost equi-key (e.g. a condition rewritten into a
     non-equi predicate) before the driver or a deployment does."""
-    from pdf_extraction_spark.cache import release_caches
     from pdf_extraction_spark.operators import _PRIORITY, all_queries
 
     qs = all_queries()
     offenders = {}
     for name in _PRIORITY:
         plan = plan_of(qs[name][0](spark, SF))
-        release_caches()
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in _ONE_ROW_BROADCAST_CROSS:
             offenders[name] = "BroadcastNestedLoopJoin"
+    assert not offenders, offenders
+
+
+def test_package_never_persists():
+    """CI guard: the package reuses an intermediate only through a lazy
+    localCheckpoint, whose blocks go with the frame. A persisted plan stays
+    cached in the session until someone unpersists it, so a later query
+    could silently reuse another call's cached data."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    reuse = re.compile(r"\.persist\(|\.cache\(\)|pdf_extraction_spark\.cache\b")
+    offenders = [
+        f"{p.relative_to(root)}:{i}: {line.strip()}"
+        for p in root.rglob("*.py")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if reuse.search(line)
+    ]
     assert not offenders, offenders
 
 
@@ -421,7 +440,6 @@ def test_lsh_candidates_join_no_bucket_to_itself(spark):
     are the width cap's anti-join and, in the incremental index, the
     semi-join of the index bands to the new batch's buckets. A bucket
     self-join (or new × all join) would show up as an Inner join here."""
-    from pdf_extraction_spark.cache import release_caches
     from pdf_extraction_spark.operators import all_queries
     from tests.plan_probe import executed_plans, joins
 
@@ -433,7 +451,6 @@ def test_lsh_candidates_join_no_bucket_to_itself(spark):
     }
     for name, how in want.items():
         _, plans = executed_plans(spark, lambda: qs[name][0](spark, SF).collect())
-        release_caches()
         got = {t for key in ("mh", "bucket") for _, t in joins(plans, key)}
         assert got == how, (name, got)
 

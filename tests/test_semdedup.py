@@ -218,7 +218,6 @@ def test_grouped_scores_match_pairwise_udf(spark):
         semantic_assign,
     )
     from pdf_extraction_spark.operators.similarity import quantized_cosine
-    from pdf_extraction_spark.cache import release_caches
 
     assigned = semantic_assign(spark, SF_DIR)
     a = assigned.select("sem_cluster", F.col("vec_id").alias("va"),
@@ -243,7 +242,6 @@ def test_grouped_scores_match_pairwise_udf(spark):
     # the registered pipeline's members derive from exactly those pairs
     member_ids = {m["vec_id"] for m in [r.asDict() for r in members.collect()]}
     udf_ids = {v for pair in want for v in pair}
-    release_caches()
     assert got == want
     assert member_ids == udf_ids
     assert want, "fixture should produce threshold-passing pairs"
