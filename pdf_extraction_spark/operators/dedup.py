@@ -584,6 +584,31 @@ def _bloom_probes():
     return F.expr("array(" + ", ".join(structs) + ")")
 
 
+def _probe_words(df: DataFrame, m_bits) -> DataFrame:
+    """k (word_idx, mask) probe rows per row of ``df``, which has column
+    h. ``m_bits`` is the filter size: an int, or the column of ``df``
+    holding a joined-in size scalar (that column is not carried over)."""
+    keep = [c for c in df.columns if c != "m_bits"]
+    return df.withColumn("m_bits", F.lit(m_bits)).select(*keep, F.inline(_bloom_probes()))
+
+
+def bloom_all_hit(docs: DataFrame, words: DataFrame, m_bits,
+                  n_bytes: int | None = None) -> DataFrame:
+    """The Bloom membership probe: one row per row of ``docs`` (column h,
+    plus any key columns), with ``all_hit`` 1 iff every one of its k
+    probes finds its mask set in the filter word table ``words``
+    (word_idx, bits), else 0. ``m_bits`` as in ``_probe_words``; the word
+    table joins through ``broadcast_within(words, n_bytes)``."""
+    keep = [c for c in docs.columns if c != "m_bits"]
+    hit = F.col("bits").isNotNull() & (F.col("bits").bitwiseAND(F.col("mask")) == F.col("mask"))
+    return (
+        _probe_words(docs, m_bits)
+        .join(broadcast_within(words, n_bytes), "word_idx", "left")
+        .groupBy(*keep)
+        .agg(F.min(hit.cast("int")).alias("all_hit"))
+    )
+
+
 def q_bloom_prefilter(spark: SparkSession, sf: str) -> DataFrame:
     """One-row summary of the prefilter over the store (doc_id % 5 != 0)
     vs the new batch (doc_id % 5 == 0): candidates flagged by the filter,
@@ -624,17 +649,7 @@ def q_bloom_prefilter(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy(F.col("p.word_idx").alias("word_idx"))
         .agg(F.bit_or("p.mask").alias("bits"))
     )
-    probes = with_m(new).select("doc_id", "h", F.explode(_bloom_probes()).alias("p"))
-    hits = (
-        probes.join(broadcast_within(filt), probes["p.word_idx"] == filt["word_idx"], "left")
-        .select(
-            "doc_id",
-            "h",
-            (F.col("bits").isNotNull() & (F.col("bits").bitwiseAND(F.col("p.mask")) == F.col("p.mask"))).alias("hit"),
-        )
-        .groupBy("doc_id", "h")
-        .agg(F.min(F.col("hit").cast("int")).alias("all_hit"))
-    )
+    hits = bloom_all_hit(with_m(new).drop("k"), filt, F.col("m_bits"))
     true_dup = new.join(store.select("h").distinct(), "h", "left_semi").select("doc_id")
     n_true = true_dup.agg(F.count("*").alias("c")).withColumn("k", F.lit(1))
     load = filt.agg(

@@ -13,7 +13,9 @@ the same engine-portable construction as the sign-LSH plane family.
 Shapes: embedding is ONE Arrow-batched pandas UDF (per-batch word→(j,s)
 memo; numpy scatter-add) — map-only, no shuffle. The registered query
 verifies the embeddings through their USE — exact all-pairs integer
-cosine at a near-dup threshold — which is the oracle twin; at corpus
+cosine at a near-dup threshold, computed by the scoring body of
+``similarity.quantized_scores`` without its quantization step (the
+components are already integers) — which is the oracle twin; at corpus
 scale the same vectors feed ``neardup_bucketed_pairs`` / ``ann_lsh_topk``
 (their int values are exact in float32/quantized form), making the
 bucketed operators the scale path for text too.
@@ -27,7 +29,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
+from pdf_extraction_spark.operators.similarity import (
+    DIM as _SIM_DIM,
+    _np_scores,
+    quantized_scores,
+    valid_embeddings,
+)
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 EMBED_DIM = 64
@@ -68,26 +77,15 @@ def hash_embed(text_col, dim: int = EMBED_DIM):
     return _EMBED_UDF(text_col)
 
 
-_ICOS_UDF = None
-
-
-def int_cosine(va, vb):
-    """Exact integer cosine: int64 dot and norms (no quantization — the
-    inputs are already integers), one IEEE double division. Lazy."""
-    global _ICOS_UDF
-    if _ICOS_UDF is None:
-
-        @F.pandas_udf("double")
-        def icos(a: pd.Series, b: pd.Series) -> pd.Series:
-            A = np.array(a.tolist(), dtype=np.int64)
-            B = np.array(b.tolist(), dtype=np.int64)
-            dot = (A * B).sum(axis=1)
-            na = np.sqrt((A * A).sum(axis=1).astype(np.float64))
-            nb = np.sqrt((B * B).sum(axis=1).astype(np.float64))
-            return pd.Series(dot / (na * nb))
-
-        _ICOS_UDF = icos
-    return _ICOS_UDF(va, vb)
+@F.pandas_udf(DoubleType())
+def int_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Exact integer cosine: the scoring kernel's int64 dot, norms and one
+    IEEE division (``similarity._np_scores``) applied to the raw
+    components. No quantization: the inputs are already integers, and
+    sqrt(10⁸·k) does not round like 10⁴·sqrt(k)."""
+    _dot, cos = _np_scores(np.array(a.tolist(), dtype=np.int64),
+                           np.array(b.tolist(), dtype=np.int64))
+    return pd.Series(cos)
 
 
 def q_text_embed_neardup(spark: SparkSession, sf: str) -> DataFrame:
@@ -148,14 +146,13 @@ def q_assemble_training_records(spark: SparkSession, sf: str) -> DataFrame:
     self-contained row per sample, column-pruned reads); here the stats
     aggregate proves the assembly. Left join: docs without embeddings are
     KEPT and counted (the loader decides policy), never silently dropped."""
-    from pdf_extraction_spark.operators.similarity import quantized_norm2, valid_embeddings
-
     docs = T(spark, sf, "documents")
     # norm checksum computed on the embedding side BEFORE the join — the
-    # vectorized numpy UDF (no interpreted HOF), and no null handling needed
+    # vectorized scoring kernel (its self-dot is the quantized squared
+    # norm; no interpreted HOF), and no null handling needed
     emb = valid_embeddings(T(spark, sf, "embeddings")).select(
         F.col("vec_id").alias("doc_id"), "embedding", "label",
-        quantized_norm2(F.col("embedding")).alias("qnorm2"),
+        quantized_scores(F.col("embedding"), F.col("embedding"))["qdot"].alias("qnorm2"),
     )
     rec = docs.join(emb, "doc_id", "left").select(
         "lang",
@@ -179,8 +176,6 @@ def q_assemble_training_records(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy("lang")
     )
 
-
-from pdf_extraction_spark.operators.similarity import DIM as _SIM_DIM  # noqa: E402
 
 _SQL_ASSEMBLE = f"""
 SELECT d.lang, count(*) AS n_records,
@@ -254,8 +249,6 @@ def q_embed_int8_stats(spark: SparkSession, sf: str) -> DataFrame:
     the acceptance gate a vector-store migration runs before swapping
     float32 embeddings for int8. Map-only (one Arrow stage on the scan)
     plus a single partial-aggregated groupBy(label)."""
-    from pdf_extraction_spark.operators.similarity import valid_embeddings
-
     emb = valid_embeddings(T(spark, sf, "embeddings"))
     s = emb.select("label", int8_quant_stats(F.col("embedding")).alias("s"))
     return (

@@ -14,11 +14,15 @@ This implementation keeps every stage deterministic and oracle-checkable:
                (k itself is a pure function of the table's row count,
                mirrored by a scalar-subquery LIMIT in the oracle).
 - assignment : nearest centroid under INTEGER-QUANTIZED squared distance
-               (round(x*10⁴) per component, exact int64 — |Σ(qx−qc)²| ≪
-               2⁶³), ties to the lowest centroid index: bit-identical in
-               Spark (numpy matmul per Arrow batch) and DuckDB.
+               (round(x*10⁴) per component by `similarity._np_quant`, the
+               package's one quantizer; exact int64 — |Σ(qx−qc)²| ≪ 2⁶³),
+               ties to the lowest centroid index: bit-identical in Spark
+               (numpy matmul per Arrow batch) and DuckDB.
 - duplicates : within-cluster pairs with quantized cosine ≥ SEM_TAU
-               (the `embedding_neardup_pairs` verify formula), then exact
+               (the cosine of `similarity.quantized_scores`, computed for
+               a whole cluster with one matmul; the oracle's pair predicate
+               is built from the same `_qd_sql` as
+               `embedding_neardup_pairs`), then exact
                connected components via the star-contraction engine
                (`dedup.neardup_clusters`) — a semantic-duplicate GROUP is
                a component, exactly as near-dup clustering treats MinHash
@@ -54,6 +58,8 @@ from pyspark.sql import functions as F
 from pdf_extraction_spark.operators.dedup import neardup_clusters
 from pdf_extraction_spark.operators.similarity import (
     DIM,
+    _np_quant,
+    _qd_sql,
     valid_embeddings,
 )
 from pdf_extraction_spark.sources.tables import load_testdata as T
@@ -82,12 +88,12 @@ def _nearest_centroid_q(centroids):
     Unlike `similarity._nearest_centroid_udf` (float64, used inside Lloyd
     iterations where the centroids are float averages anyway), this is
     bit-reproducible in SQL — the point of the zero-iteration design."""
-    Cq = np.round(np.array(centroids, dtype=np.float64) * 10000.0).astype(np.int64)
+    Cq = _np_quant(centroids)
     c2 = (Cq * Cq).sum(axis=1)
 
     @F.pandas_udf("int")
     def assign(embs: pd.Series) -> pd.Series:
-        Q = np.round(np.array(embs.tolist(), dtype=np.float64) * 10000.0).astype(np.int64)
+        Q = _np_quant(embs)
         # argmin_c Σ(q−c)² = argmin_c (|c|² − 2 q·c); |q|² is constant per row
         d = c2[None, :] - 2 * (Q @ Cq.T)
         return pd.Series(d.argmin(axis=1).astype("int32"))
@@ -131,8 +137,8 @@ def scored_pairs(assigned: DataFrame, tau: float = SEM_TAU) -> DataFrame:
     # each embedding once per CLUSTER and scores all pairs with one exact
     # int64 matmul: D=QQᵀ gives the identical quantized dot products and
     # diag(D) the identical norms, so cos = D/(nᵢnⱼ) is the same IEEE
-    # division the per-pair UDF performs (parity pinned in
-    # tests/test_semdedup.py::test_grouped_scores_match_pairwise_udf).
+    # division the per-pair kernel `quantized_scores` performs (parity
+    # pinned in tests/test_semdedup.py::test_grouped_scores_match_pairwise_udf).
     # The Python side under-filters at tau−1e-6; the authoritative gate
     # stays the Spark-side round(·,6) ≥ tau, unchanged. Still cluster-
     # keyed — one hash exchange, never all-pairs (same Σ|c|² bound).
@@ -145,9 +151,7 @@ def scored_pairs(assigned: DataFrame, tau: float = SEM_TAU) -> DataFrame:
             return pd.DataFrame({"va": pd.Series([], dtype="int64"),
                                  "vb": pd.Series([], dtype="int64"),
                                  "cos": pd.Series([], dtype="float64")})
-        Q = np.round(
-            np.array(pdf["embedding"].tolist(), dtype=np.float64) * 10000.0
-        ).astype(np.int64)
+        Q = _np_quant(pdf["embedding"])
         D = Q @ Q.T  # exact int64 (|component| ≤ 1e4, DIM=64 → ≪ 2^63)
         n = np.sqrt(np.diag(D).astype(np.float64))
         C = D / np.outer(n, n)
@@ -257,14 +261,6 @@ def q_semantic_dedup_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _qd(x: str, y: str) -> str:
-    return (
-        f"CAST(list_sum(list_transform(generate_series(1, {DIM}), "
-        f"i -> CAST(round(CAST({x}[i] AS DOUBLE) * 10000) AS BIGINT) "
-        f"* CAST(round(CAST({y}[i] AS DOUBLE) * 10000) AS BIGINT))) AS BIGINT)"
-    )
-
-
 _SQL_SEM_COMMON = f"""
 WITH cent AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cidx, embedding AS ce
@@ -296,9 +292,9 @@ pairs AS (
   JOIN assign aa ON aa.vec_id = a.vec_id
   JOIN embeddings b ON a.vec_id < b.vec_id
   JOIN assign ab ON ab.vec_id = b.vec_id AND ab.sem_cluster = aa.sem_cluster
-  WHERE round({_qd('a.embedding', 'b.embedding')}
-        / (sqrt({_qd('a.embedding', 'a.embedding')})
-           * sqrt({_qd('b.embedding', 'b.embedding')})), 6) >= {SEM_TAU}
+  WHERE round({_qd_sql('a.embedding', 'b.embedding')}
+        / (sqrt({_qd_sql('a.embedding', 'a.embedding')})
+           * sqrt({_qd_sql('b.embedding', 'b.embedding')})), 6) >= {SEM_TAU}
 ),
 edges AS (SELECT va AS src, vb AS dst FROM pairs UNION SELECT vb, va FROM pairs),
 reach AS (

@@ -5,13 +5,15 @@
                   (round(x*10000) per component) so Spark and the DuckDB
                   oracle compute bit-identical values regardless of float
                   summation order; the final cosine divides exact integers
-                  (IEEE-identical in both engines). Scoring runs in the
-                  vectorized numpy path (exact int64 matmul per Arrow
-                  batch) — the higher-order-function column form is kept
-                  ONLY as documentation of the SQL twin (it is
-                  CodegenFallback: interpreted lambdas, ~10⁴ rows/s/core —
-                  a wall at 10⁹ vectors; parity with the numpy path is
-                  asserted in tests/test_similarity_ivf.py).
+                  (IEEE-identical in both engines). Every embedding score
+                  in the package comes from ONE kernel, `quantized_scores`
+                  (struct(qdot, cos), one exact int64 numpy pass per Arrow
+                  batch, built on the one quantizer `_np_quant`) — the
+                  higher-order-function column form is kept ONLY as
+                  documentation of the SQL twin (it is CodegenFallback:
+                  interpreted lambdas, ~10⁴ rows/s/core — a wall at 10⁹
+                  vectors; parity with the kernel is asserted in
+                  tests/test_similarity_ivf.py).
 - ann_lsh       : random-hyperplane (sign) LSH bucketing — the scale path:
                   bucket once, then search only the query's bucket. Plane
                   matrix derives deterministically from md5; fully oracled
@@ -30,6 +32,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from pdf_extraction_spark.operators.dedup import bucket_pairs
 from pdf_extraction_spark.sources.tables import load_testdata as T
@@ -47,7 +50,7 @@ def _quant(x):
 def _qdot_hof(a, b):
     """SQL-twin documentation form of the quantized dot product. DO NOT use
     in hot paths: F.aggregate/zip_with lambdas are CodegenFallback
-    (interpreted). The numpy form below is bit-identical (exact int64) and
+    (interpreted). quantized_scores below is bit-identical (exact int64) and
     ~100× faster; parity is pinned by tests/test_similarity_ivf.py."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: _quant(x) * _quant(y)),
@@ -66,67 +69,36 @@ def _qnorm2_hof(a):
     )
 
 
-def _np_quant(s: pd.Series) -> np.ndarray:
-    return np.round(np.array(s.tolist(), dtype=np.float64) * 10000.0).astype(np.int64)
+def _np_quant(vectors) -> np.ndarray:
+    """The one quantizer: every component rounded to x·10⁴ as an exact
+    int64 — the integer grid the scoring kernel, the LSH plane dots, the
+    SemDeDup assignment and every SQL oracle share. ``vectors`` is one
+    vector or any sequence of equal-length vectors (a list, or a pandas
+    Series of Arrow arrays)."""
+    return np.round(np.array(list(vectors), dtype=np.float64) * 10000.0).astype(np.int64)
 
 
-_QDOT_UDF = None
-_QNORM2_UDF = None
+def _np_scores(A: np.ndarray, B: np.ndarray):
+    """Row-wise (dot, cos) of two int64 matrices: an exact int64 dot and
+    squared norms (at DIM=64 and |component| ≤ 10⁴ every sum is < 2⁵³, so
+    nothing overflows or rounds), then one IEEE double division — the
+    same operations, in the same order, as ``round(qdot / (sqrt(qn_a) *
+    sqrt(qn_b)), 6)`` in Spark and in the DuckDB oracle."""
+    dot = (A * B).sum(axis=1)
+    na = np.sqrt((A * A).sum(axis=1).astype(np.float64))
+    nb = np.sqrt((B * B).sum(axis=1).astype(np.float64))
+    return dot, dot / (na * nb)
 
 
-def quantized_dot(ea, eb):
-    """Exact int64 quantized dot product, one numpy matmul-row per Arrow
-    batch — bit-identical to _qdot_hof and the DuckDB oracle (every
-    intermediate < 2^53 ≪ 2^63, so no overflow and no float rounding).
-    Lazy: pandas_udf needs an active SparkSession."""
-    global _QDOT_UDF
-    if _QDOT_UDF is None:
-
-        @F.pandas_udf("bigint")
-        def qdot(a: pd.Series, b: pd.Series) -> pd.Series:
-            return pd.Series((_np_quant(a) * _np_quant(b)).sum(axis=1))
-
-        _QDOT_UDF = qdot
-    return _QDOT_UDF(ea, eb)
-
-
-def quantized_norm2(ea):
-    """Exact int64 quantized squared norm (vectorized twin of _qnorm2_hof)."""
-    global _QNORM2_UDF
-    if _QNORM2_UDF is None:
-
-        @F.pandas_udf("bigint")
-        def qnorm2(a: pd.Series) -> pd.Series:
-            A = _np_quant(a)
-            return pd.Series((A * A).sum(axis=1))
-
-        _QNORM2_UDF = qnorm2
-    return _QNORM2_UDF(ea)
-
-
-_QCOS_UDF = None
-
-
-def quantized_cosine(ea, eb):
-    """Vectorized twin of round(qdot/(sqrt(qnorm)·sqrt(qnorm)), …): EXACT
-    int64 quantized products (sums < 2^53, so every intermediate is exact)
-    and one IEEE double division — bit-identical to the column-expression
-    form and the DuckDB oracle, ~100× faster than interpreted HOF lambdas
-    on wide candidate sets (rounding stays Spark-side via F.round).
-    UDF construction is lazy: pandas_udf needs an active SparkSession."""
-    global _QCOS_UDF
-    if _QCOS_UDF is None:
-
-        @F.pandas_udf("double")
-        def qcos(a: pd.Series, b: pd.Series) -> pd.Series:
-            A, B = _np_quant(a), _np_quant(b)
-            dot = (A * B).sum(axis=1)
-            na = np.sqrt((A * A).sum(axis=1).astype(np.float64))
-            nb = np.sqrt((B * B).sum(axis=1).astype(np.float64))
-            return pd.Series(dot / (na * nb))
-
-        _QCOS_UDF = qcos
-    return _QCOS_UDF(ea, eb)
+@F.pandas_udf(StructType([StructField("qdot", LongType()), StructField("cos", DoubleType())]))
+def quantized_scores(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+    """The integer-quantized scoring kernel: struct(qdot, cos) of two
+    embedding columns, one numpy pass per Arrow batch. ``qdot`` is
+    bit-identical to _qdot_hof (and ``quantized_scores(e, e).qdot`` to
+    _qnorm2_hof); ``cos`` to the oracle's quantized cosine before its
+    round. Rank by ``qdot``, report ``round(cos, 6)``."""
+    dot, cos = _np_scores(_np_quant(a), _np_quant(b))
+    return pd.DataFrame({"qdot": dot, "cos": cos})
 
 
 def valid_embeddings(emb: DataFrame, dim: int = DIM) -> DataFrame:
@@ -138,28 +110,26 @@ def valid_embeddings(emb: DataFrame, dim: int = DIM) -> DataFrame:
     return emb.filter(F.col("embedding").isNotNull() & (F.size("embedding") == dim))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(vec_id, cosine) of the k rows of ``scored`` (vec_id, s =
+    quantized_scores struct) with the highest qdot, ties to the lowest
+    vec_id — the oracle's ``ORDER BY qdot DESC, vec_id ASC LIMIT k``."""
+    return (
+        scored.orderBy(F.desc("s.qdot"), F.asc("vec_id"))
+        .limit(k)
+        .select("vec_id", F.round("s.cos", 6).alias("cosine"))
+    )
+
+
 def q_ann_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     emb = valid_embeddings(T(spark, sf, "embeddings"))
     qv = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("embedding").alias("qe"))
     scored = (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(qv))  # 1-row broadcast: map-only, no shuffle
-        .select(
-            "vec_id",
-            quantized_dot(F.col("embedding"), F.col("qe")).alias("qdot"),
-            quantized_norm2(F.col("embedding")).alias("qn_a"),
-            quantized_norm2(F.col("qe")).alias("qn_b"),
-        )
-        .select(
-            "vec_id",
-            F.round(F.col("qdot") / (F.sqrt("qn_a") * F.sqrt("qn_b")), 6).alias("cosine"),
-            "qdot",
-        )
-        .orderBy(F.desc("qdot"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", "cosine")
+        .select("vec_id", quantized_scores(F.col("embedding"), F.col("qe")).alias("s"))
     )
-    return scored
+    return _top_k(scored, TOP_K)
 
 
 _SQL_ANN = f"""
@@ -232,7 +202,7 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    cos = F.round(quantized_cosine(F.col("ea"), F.col("eb")), 6)
+    cos = F.round(quantized_scores(F.col("ea"), F.col("eb"))["cos"], 6)
     return (
         pairs.select("vec_a", "vec_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= NEARDUP_COSINE)
@@ -316,9 +286,7 @@ def lsh_band_signatures(emb: DataFrame, n_bands: int, planes_per_band: int) -> D
 
     @F.pandas_udf("array<bigint>")
     def bucket_vec(embs: pd.Series) -> pd.Series:
-        M = np.array(embs.tolist(), dtype=np.float64)
-        Q = np.round(M * 10000.0).astype(np.int64)
-        bits = (Q @ P.T > 0).astype(np.int64)  # exact: |q·c| << 2^63
+        bits = (_np_quant(embs) @ P.T > 0).astype(np.int64)  # exact: |q·c| << 2^63
         B = np.zeros((len(embs), n_bands), dtype=np.int64)
         for b in range(n_bands):
             for i in range(planes_per_band):
@@ -350,7 +318,7 @@ def neardup_bucketed_pairs(
     cand = bucket_pairs(rows, ["band", "bucket"], max_bucket_width).toDF("vec_a", "vec_b")
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    cos = F.round(quantized_cosine(F.col("ea"), F.col("eb")), 6)
+    cos = F.round(quantized_scores(F.col("ea"), F.col("eb"))["cos"], 6)
     return (
         cand.join(ea, "vec_a").join(eb, "vec_b")
         .select("vec_a", "vec_b", cos.alias("cosine"))
@@ -496,17 +464,8 @@ def ivf_search(assigned: DataFrame, centroids, query_vec, k: int = TOP_K,
     probe = sorted(range(len(centroids)), key=lambda i: (d2(centroids[i]), i))[:n_probe]
     qarr = F.array(*[F.lit(float(x)) for x in query_vec])
     cand = assigned.filter(F.col("ivf_list").isin([int(p) for p in probe]))
-    scored = cand.select(
-        "vec_id",
-        quantized_dot(F.col("embedding"), qarr).alias("qdot"),
-        quantized_norm2(F.col("embedding")).alias("qn_a"),
-        quantized_norm2(qarr).alias("qn_b"),
-    ).select(
-        "vec_id",
-        F.round(F.col("qdot") / (F.sqrt("qn_a") * F.sqrt("qn_b")), 6).alias("cosine"),
-        "qdot",
-    )
-    return scored.orderBy(F.desc("qdot"), F.asc("vec_id")).limit(k).select("vec_id", "cosine")
+    scored = cand.select("vec_id", quantized_scores(F.col("embedding"), qarr).alias("s"))
+    return _top_k(scored, k)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -556,7 +515,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     exact = (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(qvdf))
-        .select("vec_id", quantized_dot(F.col("embedding"), F.col("qe")).alias("qdot"))
+        .select("vec_id", quantized_scores(F.col("embedding"), F.col("qe"))["qdot"].alias("qdot"))
         .orderBy(F.desc("qdot"), F.asc("vec_id"))
         .limit(TOP_K)
     )
@@ -603,8 +562,7 @@ def _query_buckets(query_vec, n_bands: int = NB_BANDS, planes_per_band: int = PL
     same integer plane family the distributed signature stage uses (exact
     int64: bit-identical to the SQL oracle)."""
     P = np.array([_plane_comps(p) for p in range(n_bands * planes_per_band)], dtype=np.int64)
-    q = np.round(np.array(query_vec, dtype=np.float64) * 10000.0).astype(np.int64)
-    bits = (P @ q > 0).astype(np.int64)
+    bits = (P @ _np_quant(query_vec) > 0).astype(np.int64)
     return [
         (b, int(sum(bits[b * planes_per_band + i] << i for i in range(planes_per_band))))
         for b in range(n_bands)
@@ -627,16 +585,9 @@ def q_ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
     qarr = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = cand_ids.join(emb, "vec_id").select(
-        "vec_id",
-        quantized_dot(F.col("embedding"), qarr).alias("qdot"),
-        quantized_norm2(F.col("embedding")).alias("qn_a"),
-        quantized_norm2(qarr).alias("qn_b"),
-    ).select(
-        "vec_id",
-        F.round(F.col("qdot") / (F.sqrt("qn_a") * F.sqrt("qn_b")), 6).alias("cosine"),
-        "qdot",
+        "vec_id", quantized_scores(F.col("embedding"), qarr).alias("s")
     )
-    return scored.orderBy(F.desc("qdot"), F.asc("vec_id")).limit(TOP_K).select("vec_id", "cosine")
+    return _top_k(scored, TOP_K)
 
 
 _SQL_LSH_TOPK = f"""
@@ -727,14 +678,7 @@ def hard_negative_topk(emb: DataFrame, anchors: DataFrame,
         emb.join(F.broadcast(a), emb["label"] != a["alabel"])
         .select(
             "anchor_id", "vec_id", "label",
-            F.round(
-                quantized_dot(F.col("embedding"), F.col("ae"))
-                / (
-                    F.sqrt(quantized_norm2(F.col("embedding")))
-                    * F.sqrt(quantized_norm2(F.col("ae")))
-                )
-                * 1e6
-            )
+            F.round(quantized_scores(F.col("embedding"), F.col("ae"))["cos"] * 1e6)
             .cast("long")
             .alias("cos_micro"),
         )

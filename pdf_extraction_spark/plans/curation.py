@@ -202,15 +202,14 @@ def curate_corpus(
     # within-cluster comparison volume stays linear in n.
     if semdedup:
         from pdf_extraction_spark.operators.embed import hash_embed
-        from pdf_extraction_spark.operators.semdedup import SEM_K, semantic_members
+        from pdf_extraction_spark.operators.semdedup import sem_k_for, semantic_members
         from pdf_extraction_spark.operators.similarity import ivf_train
 
         emb_frame = neardup.select(
             F.col("doc_id").alias("vec_id"),
             hash_embed(F.col("extracted_text")).alias("embedding"),
         ).localCheckpoint(eager=True)  # ivf_train re-scans per Lloyd iteration
-        k_sem = max(SEM_K, n // 256)  # ~256-wide target clusters
-        cents = ivf_train(emb_frame, k=k_sem, iters=2)
+        cents = ivf_train(emb_frame, k=sem_k_for(n), iters=2)
         quality = neardup.select(
             F.col("doc_id").alias("vec_id"),
             F.length("extracted_text").alias("n_chars"),

@@ -62,14 +62,14 @@ from pyspark.sql import Window as W
 from pdf_extraction_spark.operators.dedup import (
     _BLOOM_WORD,
     BLOOM_BITS_PER_KEY,
-    _bloom_probes,
+    _probe_words,
+    bloom_all_hit,
 )
 from pdf_extraction_spark.operators.sarray import (
     SA_WINDOW,
     gram_classes,
     incremental_duplicated_mass,
 )
-from pdf_extraction_spark.parallel import broadcast_within
 from pdf_extraction_spark.sources.tables import TableIO
 
 _INDEX_SCHEMA = "batch_id string, gram_key string, n_old bigint"
@@ -170,14 +170,6 @@ def _bloom_meta(io: TableIO, n_batch: int) -> int:
     return m_bits
 
 
-def _probe_words(df: DataFrame, m_bits: int) -> DataFrame:
-    """k (word_idx, mask) probe rows per input row; expects column h."""
-    return df.withColumn("m_bits", F.lit(m_bits)).select(
-        *[c for c in df.columns], F.explode(_bloom_probes()).alias("p")
-    ).select(*[c for c in df.columns], F.col("p.word_idx").alias("word_idx"),
-             F.col("p.mask").alias("mask"))
-
-
 def _admit(
     io: TableIO, new_docs: DataFrame, batch_id: str
 ) -> tuple[DataFrame, dict]:
@@ -205,24 +197,14 @@ def _admit(
         candidates = batch_unique.limit(0)
         n_candidates = 0
     else:
-        probes = _probe_words(batch_unique.select("doc_id", "h"), m_bits)
         # store-sized word table: ≤ m_bits/32 (word_idx, bits) rows of 48 B
-        n_bytes = m_bits // _BLOOM_WORD * 48
-        joined = probes.join(broadcast_within(filt, n_bytes), "word_idx", "left")
         hit_docs = (
-            joined.select(
-                "doc_id",
-                (
-                    F.col("bits").isNotNull()
-                    & (F.col("bits").bitwiseAND(F.col("mask")) == F.col("mask"))
-                ).cast("int").alias("hit"),
-            )
-            .groupBy("doc_id")
-            .agg(F.min("hit").alias("all_hit"))
+            bloom_all_hit(batch_unique.select("doc_id", "h"), filt, m_bits,
+                          n_bytes=m_bits // _BLOOM_WORD * 48)
             .filter(F.col("all_hit") == 1)
-            .select("doc_id")
+            .drop("all_hit")
         )
-        candidates = batch_unique.join(hit_docs, "doc_id").localCheckpoint(eager=False)
+        candidates = batch_unique.join(hit_docs, ["doc_id", "h"]).localCheckpoint(eager=False)
         n_candidates = candidates.count()
 
     if n_candidates > 0 and io.exists("doc_hashes"):

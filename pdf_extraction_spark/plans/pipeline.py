@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.core.extractor import extract_turn
+from pdf_extraction_spark.core.extractor import _EMPTY, EXTRACT_FIELDS, extract_turn
 from pdf_extraction_spark.plans.checkpoint import Ledger, row_hash, stats_of
 from pdf_extraction_spark.sources.tables import TableIO
 
@@ -76,20 +76,6 @@ METRICS_SCHEMA = (
 )
 
 _PASS_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
-_OUT_COLS = [
-    "extracted_text", "spans", "quality_score", "doc_kind",
-    "classify_method", "route", "status", "error",
-]
-
-_FAILED_ROW = {
-    "extracted_text": "",
-    "spans": [],
-    "quality_score": 0.0,
-    "doc_kind": "other",
-    "classify_method": "default",
-    "route": "fallback",
-    "status": "failed",
-}
 
 
 def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -107,10 +93,10 @@ def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             try:
                 outs.append(extract_turn(text, tool if isinstance(tool, str) else None))
             except Exception as exc:  # C3: a poison row must not kill the task
-                outs.append({**_FAILED_ROW, "error": f"extract_error:{type(exc).__name__}"})
+                outs.append({**_EMPTY, "error": f"extract_error:{type(exc).__name__}"})
             timings.append((time.perf_counter() - t0) * 1000.0)
         res = pdf[_PASS_COLS].copy()
-        for col in _OUT_COLS:
+        for col in EXTRACT_FIELDS:
             res[col] = [o[col] for o in outs]
         res["extract_ms"] = timings
         yield res
@@ -139,7 +125,6 @@ def run_extraction(
     n_waves: int = 1,
     partitions: Optional[int] = None,
     resume: bool = True,
-    repartition_input: bool = True,
     input_fp: Optional[str] = None,
 ) -> dict:
     """Run the pipeline; returns a small summary dict (counts + timing).
@@ -189,17 +174,14 @@ def run_extraction(
     last_wave: List[int] = []  # ledgered from the run aggregate, not per wave
     waves = [todo[i::n_waves] for i in range(min(n_waves, len(todo)))]
     for i, wave in enumerate(waves):
-        wave_df = df.filter(F.col("bucket").isin([int(b) for b in wave]))
-        if repartition_input:
-            # explicit (bucket, salt) repartition: balances whale
-            # conversations across tasks and clusters the write. Disable
-            # ONLY when the input is already bucket-partitioned by an
-            # upstream writer (e.g. Iceberg bucket(conv_id)) — extraction
-            # itself is per-turn and needs no co-location, so skipping the
-            # shuffle saves a full pass over the input bytes at 100 TB.
-            wave_df = wave_df.withColumn(
-                "salt", (F.col("turn_idx") / F.lit(salt_turns)).cast("int")
-            ).repartition(partitions, "bucket", "salt").drop("salt")
+        # explicit (bucket, salt) repartition: balances whale
+        # conversations across tasks and clusters the write
+        wave_df = (
+            df.filter(F.col("bucket").isin([int(b) for b in wave]))
+            .withColumn("salt", (F.col("turn_idx") / F.lit(salt_turns)).cast("int"))
+            .repartition(partitions, "bucket", "salt")
+            .drop("salt")
+        )
         try:
             extracted = extract_stage(wave_df.drop("bucket"))
             extracted = _with_bucket(extracted, n_buckets)

@@ -110,7 +110,7 @@ def test_semantic_dedup_join_is_cluster_keyed(spark):
         _nearest_centroid_q,
         valid_embeddings,
     )
-    from pdf_extraction_spark.operators.similarity import quantized_cosine
+    from pdf_extraction_spark.operators.similarity import quantized_scores
     from pdf_extraction_spark.sources.tables import load_testdata as T
 
     emb = valid_embeddings(T(spark, SF, "embeddings"))
@@ -122,7 +122,8 @@ def test_semantic_dedup_join_is_cluster_keyed(spark):
                         F.col("embedding").alias("eb"))
     pairs = (
         a.join(b, (F.col("sem_cluster") == F.col("sc_b")) & (F.col("va") < F.col("vb")))
-        .select("va", "vb", F.round(quantized_cosine(F.col("ea"), F.col("eb")), 6).alias("cos"))
+        .select("va", "vb",
+                F.round(quantized_scores(F.col("ea"), F.col("eb"))["cos"], 6).alias("cos"))
     )
     plan = plan_of(pairs)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
@@ -473,3 +474,43 @@ def test_width_cap_is_written_once():
                 if width.search(body) and "left_anti" in body:
                     found.add((p.name, fn.name))
     assert found == {("dedup.py", "bucket_pairs")}, found
+
+
+def test_quantization_is_written_once():
+    """CI guard: the integer grid every embedding score shares (round(x·10⁴)
+    per component) is defined once per language — numpy's ``* 10000.0``
+    only in similarity._np_quant, and the SQL oracle's quantized dot only in
+    similarity._qd_sql (the oracle strings themselves are module-level
+    data, not definitions)."""
+    import ast
+    import pathlib
+    import re
+
+    patterns = {"numpy": re.compile(r"\*\s*10000\.0\b"),
+                "sql": re.compile(r"AS DOUBLE\) \* 10000\)")}
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    found = set()
+    for p in root.rglob("*.py"):
+        src = p.read_text()
+        for fn in ast.parse(src).body:
+            if isinstance(fn, ast.FunctionDef):
+                body = ast.get_source_segment(src, fn)
+                found.update((kind, p.name, fn.name)
+                             for kind, pat in patterns.items() if pat.search(body))
+    assert found == {("numpy", "similarity.py", "_np_quant"),
+                     ("sql", "similarity.py", "_qd_sql")}, found
+
+
+def test_ann_cosine_topk_evaluates_one_udf_per_row(spark):
+    """The scoring kernel returns qdot and cos as one struct: the executed
+    plan of ann_cosine_topk evaluates ONE Python UDF per row (ranked by
+    s.qdot, reported as round(s.cos, 6)), not a dot and two norms."""
+    import re
+
+    from pdf_extraction_spark.operators.similarity import q_ann_cosine_topk
+    from tests.plan_probe import executed_plans
+
+    _, plans = executed_plans(spark, lambda: q_ann_cosine_topk(spark, SF).collect())
+    udf_lists = [u for p in plans for u in re.findall(r"Arguments: \[(.*)\], \[pythonUDF", p)]
+    assert udf_lists, plans
+    assert all(len(re.findall(r"\)#\d+", u)) == 1 for u in udf_lists), udf_lists

@@ -70,7 +70,7 @@ def test_within_cluster_recall(spark, sem):
     split them)."""
     from pdf_extraction_spark.operators.semdedup import SEM_TAU
     from pdf_extraction_spark.operators.similarity import (
-        quantized_cosine,
+        quantized_scores,
         valid_embeddings,
     )
     from pdf_extraction_spark.sources.tables import load_testdata as T
@@ -82,7 +82,7 @@ def test_within_cluster_recall(spark, sem):
     b = emb.select(F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"))
     pairs = (
         a.join(b, F.col("va") < F.col("vb"))
-        .select("va", "vb", F.round(quantized_cosine("ea", "eb"), 6).alias("cos"))
+        .select("va", "vb", F.round(quantized_scores("ea", "eb")["cos"], 6).alias("cos"))
         .filter(F.col("cos") >= SEM_TAU)
         .collect()
     )
@@ -211,13 +211,14 @@ def test_k_escalation_bounds_pair_volume(spark):
 
 def test_grouped_scores_match_pairwise_udf(spark):
     """r7: the per-cluster matmul scoring must emit the exact doubles of
-    the per-pair quantized_cosine UDF for every within-cluster pair at or
-    above the tau floor — same quantized int64 dots, same IEEE division."""
+    the per-pair scoring kernel (quantized_scores(...).cos) for every
+    within-cluster pair at or above the tau floor — same quantized int64
+    dots, same IEEE division."""
     from pdf_extraction_spark.operators.semdedup import (
         SEM_TAU,
         semantic_assign,
     )
-    from pdf_extraction_spark.operators.similarity import quantized_cosine
+    from pdf_extraction_spark.operators.similarity import quantized_scores
 
     assigned = semantic_assign(spark, SF_DIR)
     a = assigned.select("sem_cluster", F.col("vec_id").alias("va"),
@@ -229,7 +230,7 @@ def test_grouped_scores_match_pairwise_udf(spark):
         for r in (
             a.join(b, (F.col("sem_cluster") == F.col("sc_b")) & (F.col("va") < F.col("vb")))
             .select("va", "vb",
-                    F.round(quantized_cosine(F.col("ea"), F.col("eb")), 6).alias("cos"))
+                    F.round(quantized_scores(F.col("ea"), F.col("eb"))["cos"], 6).alias("cos"))
             .filter(F.col("cos") >= SEM_TAU)
             .collect()
         )

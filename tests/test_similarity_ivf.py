@@ -70,16 +70,16 @@ def test_ivf_lists_cover_all_vectors(spark):
 
 
 def test_numpy_scoring_matches_hof_sql_twin(spark):
-    """The hot-path numpy scoring (quantized_dot / quantized_norm2) must be
-    bit-identical to the interpreted higher-order-function column form kept
-    as the SQL-twin documentation (_qdot_hof / _qnorm2_hof) — every
-    quantized intermediate is an exact int64, so equality is exact, not
+    """The scoring kernel's dot (quantized_scores(e, qe).qdot) and squared
+    norm (quantized_scores(e, e).qdot) must be bit-identical to the
+    interpreted higher-order-function column form kept as the SQL-twin
+    documentation (_qdot_hof / _qnorm2_hof) — every quantized
+    intermediate is an exact int64, so equality is exact, not
     approximate."""
     from pdf_extraction_spark.operators.similarity import (
         _qdot_hof,
         _qnorm2_hof,
-        quantized_dot,
-        quantized_norm2,
+        quantized_scores,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -87,9 +87,9 @@ def test_numpy_scoring_matches_hof_sql_twin(spark):
     both = (
         emb.join(F.broadcast(qv))
         .select(
-            quantized_dot(F.col("embedding"), F.col("qe")).alias("np_dot"),
+            quantized_scores(F.col("embedding"), F.col("qe"))["qdot"].alias("np_dot"),
             _qdot_hof(F.col("embedding"), F.col("qe")).alias("hof_dot"),
-            quantized_norm2(F.col("embedding")).alias("np_n2"),
+            quantized_scores(F.col("embedding"), F.col("embedding"))["qdot"].alias("np_n2"),
             _qnorm2_hof(F.col("embedding")).alias("hof_n2"),
         )
         .filter((F.col("np_dot") != F.col("hof_dot")) | (F.col("np_n2") != F.col("hof_n2")))
