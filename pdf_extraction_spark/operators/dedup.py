@@ -55,6 +55,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType
 
 from pdf_extraction_spark.parallel import broadcast_within, fan_out
 from pdf_extraction_spark.sources.tables import load_testdata as T
@@ -101,35 +102,26 @@ def _grams_col(text_col, shingle: int = SHINGLE):
     )
 
 
-_GRAMS_UDFS: dict = {}
+def word_shingles(text, n: int = SHINGLE) -> list:
+    """The distinct word n-grams of ``text``, in first-occurrence order:
+    lower → split(' ') (empty tokens kept, as in Java split limit=-1 and
+    DuckDB string_split) → n-grams joined by ' '. [] for non-str input and
+    below ``n`` words. The one Python form of the rule ``_grams_col`` and
+    the oracles spell in SQL."""
+    w = text.lower().split(" ") if isinstance(text, str) else []
+    return list(dict.fromkeys(" ".join(w[i : i + n]) for i in range(len(w) - n + 1)))
+
+
+@F.pandas_udf(ArrayType(StringType()))
+def _grams(texts: pd.Series, n: pd.Series) -> pd.Series:
+    return pd.Series([word_shingles(t, int(k)) for t, k in zip(texts, n)])
 
 
 def grams_udf(text_col, shingle: int = SHINGLE):
-    """Vectorized twin of ``_grams_col``: one Arrow batch of pure-Python
-    string slicing per task. Identical output — lower → split(' ') (empty
-    tokens kept, as in Java split limit=-1 and DuckDB string_split) →
-    n-grams joined by ' ' → first-occurrence-ordered distinct; [] below
-    ``shingle`` words or for NULL text. Lazy per shingle size."""
-    udf = _GRAMS_UDFS.get(shingle)
-    if udf is None:
-
-        @F.pandas_udf("array<string>")
-        def grams(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                w = t.lower().split(" ") if isinstance(t, str) else []
-                if len(w) >= shingle:
-                    out.append(
-                        list(dict.fromkeys(
-                            " ".join(w[i : i + shingle]) for i in range(len(w) - shingle + 1)
-                        ))
-                    )
-                else:
-                    out.append([])
-            return pd.Series(out)
-
-        _GRAMS_UDFS[shingle] = udf = grams
-    return udf(text_col)
+    """Vectorized twin of ``_grams_col``: ``word_shingles`` over one Arrow
+    batch per task. Identical output, first-occurrence-distinct order
+    included; [] below ``shingle`` words or for NULL text."""
+    return _grams(text_col, F.lit(shingle))
 
 
 def _min_sigs(grams: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
@@ -168,25 +160,18 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     Docs with zero shingles are dropped, matching the previous inner join
     against the exploded aggregate. fan_out widens the narrow single-file
     scan first (guide §2.2; no-op on already-parallel inputs)."""
-    import hashlib as _hl
-
     prefixes = [f"{s}:".encode("utf-8") for s in range(N_HASHES)]
     schema = "doc_id long, grams array<string>, " + ", ".join(
         f"mh{s} string" for s in range(N_HASHES)
     )
 
     def gen(batches):
-        md5 = _hl.md5
+        md5 = hashlib.md5
         for pdf in batches:
             out_ids, out_grams = [], []
             out_mh: list = [[] for _ in range(N_HASHES)]
             for doc_id, t in zip(pdf["doc_id"].values, pdf["text"].values):
-                w = t.lower().split(" ") if isinstance(t, str) else []
-                if len(w) < SHINGLE:
-                    continue
-                grams = list(dict.fromkeys(
-                    " ".join(w[i : i + SHINGLE]) for i in range(len(w) - SHINGLE + 1)
-                ))
+                grams = word_shingles(t)
                 if not grams:
                     continue
                 best = [None] * N_HASHES
@@ -471,39 +456,32 @@ assert _SQL_INCREMENTAL != _SQL_MINHASH, "restriction splice did not match"
 # stage is one Arrow-vectorized pandas UDF (numpy bit matrix; md5 memoized
 # across the batch), never interpreted per-row lambdas.
 
-_SIMHASH_UDF = None
 _PREFIX_BITS = np.arange(48, 64, dtype=np.uint64)
 
 
-def simhash_prefix16(text_col):
-    """Top-16-bit SimHash prefix as a vectorized pandas UDF (lazy: pandas_udf
-    needs an active SparkSession at construction)."""
-    global _SIMHASH_UDF
-    if _SIMHASH_UDF is None:
+@F.pandas_udf(LongType())
+def simhash_prefix16(texts: pd.Series) -> pd.Series:
+    """Top-16-bit SimHash prefix over a text column, one Arrow batch per
+    task. Its words are the distinct tokens of lower → split(' '), NULL
+    text counting as '' (the oracle's rule, not the shingler's)."""
+    memo: dict = {}
 
-        @F.pandas_udf("bigint")
-        def prefix16(texts: pd.Series) -> pd.Series:
-            memo: dict = {}
+    def word_hash(w: str) -> int:
+        h = memo.get(w)
+        if h is None:
+            h = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:16], 16)
+            memo[w] = h
+        return h
 
-            def word_hash(w: str) -> int:
-                h = memo.get(w)
-                if h is None:
-                    h = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:16], 16)
-                    memo[w] = h
-                return h
-
-            out = np.zeros(len(texts), dtype=np.int64)
-            weights = (1 << np.arange(16, dtype=np.int64))
-            for i, t in enumerate(texts):
-                words = set(("" if t is None else t).lower().split(" "))
-                hs = np.fromiter((word_hash(w) for w in words), dtype=np.uint64, count=len(words))
-                bits = ((hs[:, None] >> _PREFIX_BITS) & np.uint64(1)).astype(np.int64)
-                votes = (2 * bits - 1).sum(axis=0)
-                out[i] = int(((votes > 0).astype(np.int64) * weights).sum())
-            return pd.Series(out)
-
-        _SIMHASH_UDF = prefix16
-    return _SIMHASH_UDF(text_col)
+    out = np.zeros(len(texts), dtype=np.int64)
+    weights = (1 << np.arange(16, dtype=np.int64))
+    for i, t in enumerate(texts):
+        words = set(("" if t is None else t).lower().split(" "))
+        hs = np.fromiter((word_hash(w) for w in words), dtype=np.uint64, count=len(words))
+        bits = ((hs[:, None] >> _PREFIX_BITS) & np.uint64(1)).astype(np.int64)
+        votes = (2 * bits - 1).sum(axis=0)
+        out[i] = int(((votes > 0).astype(np.int64) * weights).sum())
+    return pd.Series(out)
 
 
 def q_simhash_buckets(spark: SparkSession, sf: str) -> DataFrame:
@@ -592,6 +570,17 @@ def _probe_words(df: DataFrame, m_bits) -> DataFrame:
     return df.withColumn("m_bits", F.lit(m_bits)).select(*keep, F.inline(_bloom_probes()))
 
 
+def bloom_words(hashes: DataFrame, m_bits) -> DataFrame:
+    """The Bloom filter word table (word_idx, bits) of ``hashes`` (column
+    h): every row's k probe masks OR-ed into their 32-bit words, in one
+    bounded groupBy. ``m_bits`` as in ``_probe_words``."""
+    return (
+        _probe_words(hashes, m_bits)
+        .groupBy("word_idx")
+        .agg(F.bit_or("mask").alias("bits"))
+    )
+
+
 def bloom_all_hit(docs: DataFrame, words: DataFrame, m_bits,
                   n_bytes: int | None = None) -> DataFrame:
     """The Bloom membership probe: one row per row of ``docs`` (column h,
@@ -644,11 +633,7 @@ def q_bloom_prefilter(spark: SparkSession, sf: str) -> DataFrame:
     )
     with_m = lambda df: df.withColumn("k", F.lit(1)).join(F.broadcast(sizing), "k")  # noqa: E731
 
-    filt = (
-        with_m(store).select(F.explode(_bloom_probes()).alias("p"))
-        .groupBy(F.col("p.word_idx").alias("word_idx"))
-        .agg(F.bit_or("p.mask").alias("bits"))
-    )
+    filt = bloom_words(with_m(store).select("h", "m_bits"), F.col("m_bits"))
     hits = bloom_all_hit(with_m(new).drop("k"), filt, F.col("m_bits"))
     true_dup = new.join(store.select("h").distinct(), "h", "left_semi").select("doc_id")
     n_true = true_dup.agg(F.count("*").alias("c")).withColumn("k", F.lit(1))

@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from pdf_extraction_spark.operators.similarity import (
     DIM as _SIM_DIM,
@@ -42,39 +42,31 @@ from pdf_extraction_spark.sources.tables import load_testdata as T
 EMBED_DIM = 64
 NEARDUP_COS = 0.9
 
-_EMBED_UDF = None
+@F.pandas_udf(ArrayType(LongType()))
+def hash_embed(texts: pd.Series) -> pd.Series:
+    """text → array<bigint> feature-hash embedding of EMBED_DIM components.
+    Index = md5('dim:'+w) first 7 hex chars mod EMBED_DIM; sign = parity of
+    md5('sign:'+w) first 2 hex chars; value = Σ sign·count over the doc's
+    words. One Arrow batch per task, the word → (index, sign) map memoized
+    across it."""
+    memo: dict = {}
 
+    def slot(w: str):
+        js = memo.get(w)
+        if js is None:
+            j = int(hashlib.md5(f"dim:{w}".encode()).hexdigest()[:7], 16) % EMBED_DIM
+            s = 1 if int(hashlib.md5(f"sign:{w}".encode()).hexdigest()[:2], 16) % 2 == 0 else -1
+            memo[w] = js = (j, s)
+        return js
 
-def hash_embed(text_col, dim: int = EMBED_DIM):
-    """text → array<bigint> feature-hash embedding. Index = md5('dim:'+w)
-    first 7 hex chars mod dim; sign = parity of md5('sign:'+w) first 2 hex
-    chars; value = Σ sign·count over the doc's words. Lazy pandas UDF."""
-    global _EMBED_UDF
-    if _EMBED_UDF is None:
-
-        @F.pandas_udf("array<bigint>")
-        def embed(texts: pd.Series) -> pd.Series:
-            memo: dict = {}
-
-            def slot(w: str):
-                js = memo.get(w)
-                if js is None:
-                    j = int(hashlib.md5(f"dim:{w}".encode()).hexdigest()[:7], 16) % dim
-                    s = 1 if int(hashlib.md5(f"sign:{w}".encode()).hexdigest()[:2], 16) % 2 == 0 else -1
-                    memo[w] = js = (j, s)
-                return js
-
-            out = []
-            for t in texts:
-                v = np.zeros(dim, dtype=np.int64)
-                for w in (t.lower().split(" ") if isinstance(t, str) else []):
-                    j, s = slot(w)
-                    v[j] += s
-                out.append(v)
-            return pd.Series(out)
-
-        _EMBED_UDF = embed
-    return _EMBED_UDF(text_col)
+    out = []
+    for t in texts:
+        v = np.zeros(EMBED_DIM, dtype=np.int64)
+        for w in (t.lower().split(" ") if isinstance(t, str) else []):
+            j, s = slot(w)
+            v[j] += s
+        out.append(v)
+    return pd.Series(out)
 
 
 @F.pandas_udf(DoubleType())
@@ -207,40 +199,30 @@ QUERIES = {
 # (q components, nano-unit errors) is a deterministic function both engines
 # compute bit-identically — the same integer-exactness discipline as the
 # quantized-cosine family in operators/similarity.py.
-_INT8_UDF = None
-
-
-def int8_quant_stats(emb_col):
+@F.pandas_udf(StructType([StructField("scale_micro", LongType()),
+                          StructField("sum_abs_err_nano", LongType()),
+                          StructField("max_abs_err_nano", LongType())]))
+def int8_quant_stats(emb: pd.Series) -> pd.DataFrame:
     """struct(scale_micro, sum_abs_err_nano, max_abs_err_nano) per vector,
     numpy-vectorized per Arrow batch (the hot path at 10^9 vectors; the
     SQL twin in _SQL_INT8 documents the exact arithmetic). Zero vectors
     quantize to all-zero with zero error."""
-    global _INT8_UDF
-    if _INT8_UDF is None:
-
-        @F.pandas_udf(
-            "struct<scale_micro:bigint,sum_abs_err_nano:bigint,max_abs_err_nano:bigint>"
-        )
-        def int8_stats(emb: pd.Series) -> pd.DataFrame:
-            A = np.array(emb.tolist(), dtype=np.float64)
-            scale_micro = np.round(np.abs(A).max(axis=1) * 1e6).astype(np.int64)
-            scale_d = scale_micro / 1e6
-            safe = np.where(scale_d > 0, scale_d, 1.0)[:, None]
-            q = np.round(A / safe * 127)
-            q[scale_micro == 0] = 0.0
-            err_nano = np.abs(
-                np.round((A - q * safe / 127) * 1e9).astype(np.int64)
-            )
-            return pd.DataFrame(
-                {
-                    "scale_micro": scale_micro,
-                    "sum_abs_err_nano": err_nano.sum(axis=1),
-                    "max_abs_err_nano": err_nano.max(axis=1),
-                }
-            )
-
-        _INT8_UDF = int8_stats
-    return _INT8_UDF(emb_col)
+    A = np.array(emb.tolist(), dtype=np.float64)
+    scale_micro = np.round(np.abs(A).max(axis=1) * 1e6).astype(np.int64)
+    scale_d = scale_micro / 1e6
+    safe = np.where(scale_d > 0, scale_d, 1.0)[:, None]
+    q = np.round(A / safe * 127)
+    q[scale_micro == 0] = 0.0
+    err_nano = np.abs(
+        np.round((A - q * safe / 127) * 1e9).astype(np.int64)
+    )
+    return pd.DataFrame(
+        {
+            "scale_micro": scale_micro,
+            "sum_abs_err_nano": err_nano.sum(axis=1),
+            "max_abs_err_nano": err_nano.max(axis=1),
+        }
+    )
 
 
 def q_embed_int8_stats(spark: SparkSession, sf: str) -> DataFrame:

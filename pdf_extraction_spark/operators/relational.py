@@ -13,7 +13,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from pdf_extraction_spark.core.canonical import sanitize_filename
 from pdf_extraction_spark.functions.exprs import (
     classify_cascade_exprs,
     quality_score_expr,
@@ -873,20 +875,9 @@ QUERIES["tpch_q5_regional_revenue"] = (q_tpch_q5_regional_revenue, _SQL_TPCH_Q5)
 # and the space then hit the [^a-zA-Z0-9._-] whitelist) is pinned in the
 # oracle's final CASE.
 
-_SANITIZE_UDF = None
-
-
-def _sanitize_udf(col):
-    global _SANITIZE_UDF
-    if _SANITIZE_UDF is None:
-        from pdf_extraction_spark.core.canonical import sanitize_filename
-
-        @F.pandas_udf("string")
-        def sani(names: pd.Series) -> pd.Series:
-            return names.map(sanitize_filename)
-
-        _SANITIZE_UDF = sani
-    return _SANITIZE_UDF(col)
+@F.pandas_udf(StringType())
+def _sanitize_udf(names: pd.Series) -> pd.Series:
+    return names.map(sanitize_filename)
 
 
 def q_sanitize_filenames(spark: SparkSession, sf: str) -> DataFrame:

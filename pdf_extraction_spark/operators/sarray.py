@@ -277,6 +277,17 @@ def gram_classes(
     )
 
 
+def _duplicated_starts(classes: DataFrame, dup_keys: DataFrame, id_col: str) -> DataFrame:
+    """(id, off) of every occurrence of the ``dup_keys`` grams: the class
+    rows joined back on gram_key, their per-batch occurrence arrays
+    exploded."""
+    return (
+        classes.join(dup_keys, "gram_key")
+        .select(F.explode(F.arrays_zip("occ_d", "occ_o")).alias("oc"))
+        .select(F.col("oc.occ_d").alias(id_col), F.col("oc.occ_o").alias("off"))
+    )
+
+
 def exact_substring_starts(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     window: int = SA_WINDOW,
@@ -296,11 +307,7 @@ def exact_substring_starts(
         .filter(F.col("n_global") >= 2)
         .select("gram_key")
     )
-    return (
-        classes.join(dup_keys, "gram_key")
-        .select(F.explode(F.arrays_zip("occ_d", "occ_o")).alias("oc"))
-        .select(F.col("oc.occ_d").alias(id_col), F.col("oc.occ_o").alias("off"))
-    )
+    return _duplicated_starts(classes, dup_keys, id_col)
 
 
 def _coverage_mass(starts: DataFrame, id_col: str, window: int) -> DataFrame:
@@ -502,12 +509,7 @@ def incremental_duplicated_mass(
     # run surfaced). The checkpoint is eager, so counting it is free;
     # broadcast explicitly when delta-sized, force the shuffle otherwise.
     join_keys = broadcast_within(dup_keys, dup_keys.count() * _KEY_ROW_BYTES)
-    starts = (
-        new_classes.join(join_keys, "gram_key")
-        .select(F.explode(F.arrays_zip("occ_d", "occ_o")).alias("oc"))
-        .select(F.col("oc.occ_d").alias(id_col), F.col("oc.occ_o").alias("off"))
-    )
-    return _coverage_mass(starts, id_col, window)
+    return _coverage_mass(_duplicated_starts(new_classes, join_keys, id_col), id_col, window)
 
 
 def q_incremental_exact_substring(spark: SparkSession, sf: str) -> DataFrame:

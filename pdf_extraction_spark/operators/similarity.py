@@ -83,11 +83,13 @@ def _np_scores(A: np.ndarray, B: np.ndarray):
     squared norms (at DIM=64 and |component| ≤ 10⁴ every sum is < 2⁵³, so
     nothing overflows or rounds), then one IEEE double division — the
     same operations, in the same order, as ``round(qdot / (sqrt(qn_a) *
-    sqrt(qn_b)), 6)`` in Spark and in the DuckDB oracle."""
+    sqrt(qn_b)), 6)`` in Spark and in the DuckDB oracle. A zero-norm row
+    scores NaN, which Arrow returns as NULL, as DuckDB does for 0/0."""
     dot = (A * B).sum(axis=1)
     na = np.sqrt((A * A).sum(axis=1).astype(np.float64))
     nb = np.sqrt((B * B).sum(axis=1).astype(np.float64))
-    return dot, dot / (na * nb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot, dot / (na * nb)
 
 
 @F.pandas_udf(StructType([StructField("qdot", LongType()), StructField("cos", DoubleType())]))
@@ -683,7 +685,10 @@ def hard_negative_topk(emb: DataFrame, anchors: DataFrame,
             .alias("cos_micro"),
         )
     )
-    elem = F.struct((-F.col("cos_micro")).alias("neg_cos"), "vec_id", "label",
+    # a zero-norm vector scores a NULL cos_micro, ranked after every scored
+    # one as the oracle's ORDER BY cos_micro DESC (NULLS LAST) does
+    elem = F.struct(F.col("cos_micro").isNull().alias("no_cos"),
+                    (-F.col("cos_micro")).alias("neg_cos"), "vec_id", "label",
                     "cos_micro")
     partial = (
         scored.withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(n_salts)))

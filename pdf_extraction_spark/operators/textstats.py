@@ -1,5 +1,5 @@
-"""Text-analysis operators for training-data pipelines — all pure column
-expressions (JVM-side, zero Python in the hot path).
+"""Text-analysis operators for training-data pipelines — pure column
+expressions (JVM-side), except the fingerprint's one Arrow-batched UDF.
 
 - lang_id         : stopword-ratio n-gram heuristic language guess
 - text_quality    : length / punctuation / stopword-ratio quality flags
@@ -12,11 +12,15 @@ expressions (JVM-side, zero Python in the hot path).
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from pdf_extraction_spark.operators.dedup import word_shingles
 from pdf_extraction_spark.sources.tables import load_testdata as T
 
 STOPWORDS = ("a", "the", "and", "of", "to", "in", "is", "on", "for", "with")
@@ -135,36 +139,18 @@ FROM documents GROUP BY source ORDER BY source
 
 
 # --------------------------------------------------------------------------
-_FP_UDF = None
-
-
-def _fingerprint_udf(text_col):
-    """Vectorized fingerprint: min md5 hex over word trigrams, one Arrow
-    batch per task (hashlib in a tight loop — the HOF md5 transform over
-    interpreted grams was the slow path; min over distinct vs non-distinct
-    grams is identical, so this matches the SQL oracle exactly)."""
-    global _FP_UDF
-    if _FP_UDF is None:
-        import hashlib
-
-        @F.pandas_udf("string")
-        def fp(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                w = t.lower().split(" ") if isinstance(t, str) else []
-                if len(w) < 3:
-                    out.append(None)
-                    continue
-                out.append(
-                    min(
-                        hashlib.md5(" ".join(w[i : i + 3]).encode("utf-8")).hexdigest()
-                        for i in range(len(w) - 2)
-                    )
-                )
-            return pd.Series(out)
-
-        _FP_UDF = fp
-    return _FP_UDF(text_col)
+@F.pandas_udf(StringType())
+def _fingerprint_udf(texts: pd.Series) -> pd.Series:
+    """Vectorized fingerprint: min md5 hex over the word trigrams
+    (``dedup.word_shingles``), one Arrow batch per task; None below three
+    words. Min over distinct grams equals min over all of them, so this
+    matches the SQL oracle exactly."""
+    out = []
+    for t in texts:
+        grams = word_shingles(t, 3)
+        out.append(min(hashlib.md5(g.encode("utf-8")).hexdigest() for g in grams)
+                   if grams else None)
+    return pd.Series(out)
 
 
 def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:

@@ -62,8 +62,8 @@ from pyspark.sql import Window as W
 from pdf_extraction_spark.operators.dedup import (
     _BLOOM_WORD,
     BLOOM_BITS_PER_KEY,
-    _probe_words,
     bloom_all_hit,
+    bloom_words,
 )
 from pdf_extraction_spark.operators.sarray import (
     SA_WINDOW,
@@ -312,11 +312,8 @@ def append_batch(
             docs.select(F.lit(batch_id).alias("batch_id"), "doc_id", "h"),
             "doc_hashes", mode="overwrite_partitions", partition_by=["batch_id"],
         )
-        part_filter = (
-            _probe_words(docs.select("h"), counts["bloom_m_bits"])
-            .groupBy("word_idx")
-            .agg(F.bit_or("mask").alias("bits"))
-            .select(F.lit(batch_id).alias("batch_id"), "word_idx", "bits")
+        part_filter = bloom_words(docs.select("h"), counts["bloom_m_bits"]).select(
+            F.lit(batch_id).alias("batch_id"), "word_idx", "bits"
         )
         io.write(part_filter, "bloom", mode="overwrite_partitions",
                  partition_by=["batch_id"])
@@ -380,27 +377,20 @@ def rebuild_bloom(spark: SparkSession, root: str) -> dict:
     m_bits = max(BLOOM_MIN_BITS, BLOOM_BITS_PER_KEY * n_store * 2)
     hashes = io.read("doc_hashes").select("h")
     rebuilt = (
-        _probe_words(hashes, m_bits)
-        .groupBy("word_idx")
-        .agg(F.bit_or("mask").alias("bits"))
+        bloom_words(hashes, m_bits)
         # the m_bits stamp in the partition value makes filter words and
         # bit geometry atomic under the single staged swap (see _bloom_meta)
         .select(F.lit(f"__rebuilt_m{m_bits}__").alias("batch_id"), "word_idx", "bits")
     )
 
     def verify(staged: DataFrame) -> None:
-        filt = staged.select("word_idx", "bits")
         misses = (
-            _probe_words(hashes, m_bits)
-            .join(filt, "word_idx", "left")
-            .filter(
-                F.col("bits").isNull()
-                | (F.col("bits").bitwiseAND(F.col("mask")) != F.col("mask"))
-            )
+            bloom_all_hit(hashes, staged.select("word_idx", "bits"), m_bits)
+            .filter(F.col("all_hit") == 0)
             .count()
         )
         if misses:
-            raise ValueError(f"rebuilt filter drops {misses} member probes")
+            raise ValueError(f"rebuilt filter misses {misses} stored hashes")
 
     io.rewrite(rebuilt, "bloom", partition_by=["batch_id"], verify=verify)
     io.write(

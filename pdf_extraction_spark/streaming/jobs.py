@@ -41,6 +41,30 @@ TRANSCRIPTS_SCHEMA = (
 DEDUP_OUT_SCHEMA = "conv_id string, turn_idx int, text_hash string, state_size int"
 
 
+def _read(spark: SparkSession, schema: str, src_dir: str, max_files: int) -> DataFrame:
+    """The parquet file source every job reads: a fixed schema (no
+    inference on a landing directory) and at most ``max_files`` new files
+    per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files)
+        .parquet(src_dir)
+    )
+
+
+def _write_parquet(df: DataFrame, out_dir: str, checkpoint_dir: str, **trigger):
+    """Start ``df`` into an append-mode parquet sink at ``out_dir``; the
+    checkpoint makes the sink exactly-once. Returns the StreamingQuery."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(**trigger)
+        .start()
+    )
+
+
 def _dedup_batch(pdfs, seen_list: list, state_cap: int):
     """Shared micro-batch body of BOTH stateful-dedup deployments
     (availableNow + continuous — one implementation, no drift): sort for a
@@ -77,11 +101,7 @@ def stream_events_windowed(
     max_files_per_trigger: int = 16,
 ) -> DataFrame:
     """readStream(events) → watermark → tumbling-window counts/sums."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    events = _read(spark, EVENTS_SCHEMA, src_dir, max_files_per_trigger)
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), "event_type")
@@ -108,20 +128,9 @@ def stream_extraction(
     Returns the started StreamingQuery (caller drives the trigger)."""
     from pdf_extraction_spark.plans.pipeline import extract_stage
 
-    transcripts = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    transcripts = _read(spark, TRANSCRIPTS_SCHEMA, src_dir, max_files_per_trigger)
     extracted = extract_stage(transcripts)
-    return (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _write_parquet(extracted, out_dir, checkpoint_dir, availableNow=True)
 
 
 def stream_dedup_turns(
@@ -170,11 +179,7 @@ def stream_dedup_turns(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    transcripts = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    transcripts = _read(spark, TRANSCRIPTS_SCHEMA, src_dir, max_files_per_trigger)
 
     state_schema = "expires_at bigint, seen array<string>"
     ttl_ms = int(state_ttl_minutes * 60 * 1000)
@@ -195,14 +200,7 @@ def stream_dedup_turns(
     deduped = transcripts.groupBy("conv_id").applyInPandasWithState(
         dedup, DEDUP_OUT_SCHEMA, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _write_parquet(deduped, out_dir, checkpoint_dir, availableNow=True)
 
 
 def stream_enrich_events(
@@ -220,20 +218,9 @@ def stream_enrich_events(
     a map-side lookup, no stream-side shuffle. Unmatched keys keep their
     rows (left join) with null enrichment, so the stream never drops
     events because reference data lags. Returns the started StreamingQuery."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    events = _read(spark, EVENTS_SCHEMA, src_dir, max_files_per_trigger)
     enriched = events.join(broadcast_within(dim), "user_id", "left")
-    return (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _write_parquet(enriched, out_dir, checkpoint_dir, availableNow=True)
 
 
 def stream_events_sessions(
@@ -250,11 +237,7 @@ def stream_events_sessions(
     once. The batch twin (`session_window_stats`) is oracle-checked
     against DuckDB — the streaming form must emit a subset of exactly
     those rows (asserted in tests)."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    events = _read(spark, EVENTS_SCHEMA, src_dir, max_files_per_trigger)
     return (
         events.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
@@ -304,11 +287,7 @@ def stream_dedup_turns_continuous(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    transcripts = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    transcripts = _read(spark, TRANSCRIPTS_SCHEMA, src_dir, max_files_per_trigger)
 
     state_schema = "seen array<string>"
     ttl_ms = int(state_ttl_seconds * 1000)
@@ -333,14 +312,7 @@ def stream_dedup_turns_continuous(
         dedup, DEDUP_OUT_SCHEMA, state_schema, "append",
         GroupStateTimeout.ProcessingTimeTimeout,
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(processingTime=trigger_interval)
-        .start()
-    )
+    return _write_parquet(deduped, out_dir, checkpoint_dir, processingTime=trigger_interval)
 
 
 DOCS_SCHEMA = "doc_id bigint, text string"
@@ -377,11 +349,7 @@ def stream_ingest_gram_index(
     from pdf_extraction_spark.plans.incremental import append_batch
     from pdf_extraction_spark.operators.sarray import SA_WINDOW
 
-    docs = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    docs = _read(spark, DOCS_SCHEMA, src_dir, max_files_per_trigger)
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         append_batch(

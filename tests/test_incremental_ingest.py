@@ -469,6 +469,34 @@ def test_rebuild_bloom_resizes_and_preserves_admission(spark, tmp_path):
                   .filter(F.col("batch_id") == "b-c").collect()) == [32]
 
 
+def test_rebuild_bloom_abort_preserves_filter(spark, tmp_path, monkeypatch):
+    """A staged filter that lost a word fails the no-false-negative check
+    (some stored hash no longer probes all-hit), so rebuild_bloom raises
+    before the swap and leaves bloom and bloom_meta as they were."""
+    import pdf_extraction_spark.plans.incremental as inc
+
+    root = str(tmp_path / "w")
+    append_batch(spark, root, _df(spark, ADM_A), "b-a", window=W,
+                 admit_unique=True)
+    io = TableIO(spark, root)
+    before = {t: sorted(map(tuple, io.read(t).collect()))
+              for t in ("bloom", "bloom_meta")}
+
+    real = inc.bloom_words
+
+    def lossy(hashes, m_bits):
+        words = real(hashes, m_bits)
+        lost = words.agg(F.min("word_idx")).collect()[0][0]
+        return words.filter(F.col("word_idx") != lost)
+
+    monkeypatch.setattr(inc, "bloom_words", lossy)
+    with pytest.raises(ValueError, match=r"rebuilt filter misses [1-9]\d* stored hashes"):
+        inc.rebuild_bloom(spark, root)
+    monkeypatch.undo()
+    assert {t: sorted(map(tuple, io.read(t).collect())) for t in before} == before
+    assert not io.exists("bloom__tmp")
+
+
 def test_rebuild_bloom_meta_crash_window_is_safe(spark, tmp_path):
     """r7 ADVICE fix: a crash BETWEEN the bloom rewrite and the bloom_meta
     overwrite must not leave probes reading the old m_bits against words

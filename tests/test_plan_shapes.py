@@ -501,6 +501,40 @@ def test_quantization_is_written_once():
                      ("sql", "similarity.py", "_qd_sql")}, found
 
 
+def test_no_lazy_udf_singletons():
+    """CI guard: every stateless pandas UDF is defined once at module level
+    with a ``pyspark.sql.types`` return type, so no kernel hides behind a
+    lazily filled module global: no ``global`` statement in the package."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    found = {(p.name, node.lineno, tuple(node.names))
+             for p in root.rglob("*.py")
+             for node in ast.walk(ast.parse(p.read_text()))
+             if isinstance(node, ast.Global)}
+    assert not found, found
+
+
+def test_shingles_are_written_once():
+    """CI guard: the word n-gram rule (the ``w[i : i + n]`` slice joined by
+    ' ') is written once in Python, in dedup.word_shingles; the SQL twin
+    ``_grams_col`` and the oracle strings spell it in SQL."""
+    import ast
+    import pathlib
+    import re
+
+    gram = re.compile(r"\.join\(\s*\w+\[\s*\w+\s*:\s*\w+\s*\+")
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    found = set()
+    for p in root.rglob("*.py"):
+        src = p.read_text()
+        for fn in ast.walk(ast.parse(src)):
+            if isinstance(fn, ast.FunctionDef) and gram.search(ast.get_source_segment(src, fn)):
+                found.add((p.name, fn.name))
+    assert found == {("dedup.py", "word_shingles")}, found
+
+
 def test_ann_cosine_topk_evaluates_one_udf_per_row(spark):
     """The scoring kernel returns qdot and cos as one struct: the executed
     plan of ann_cosine_topk evaluates ONE Python UDF per row (ranked by

@@ -239,3 +239,60 @@ def test_int8_quant_stats_roundtrip_and_zero_vector(spark):
     assert rows[1]["scale_micro"] == scale_micro == 1_000_000
     assert rows[1]["sum_abs_err_nano"] == int(err.sum())
     assert rows[1]["max_abs_err_nano"] == int(err.max())
+
+
+def test_zero_vector_scores_null_cosine_without_warning(spark):
+    """A zero-norm vector scores qdot 0 and a NULL cos against any vector,
+    as DuckDB's 0.0/0.0 and 1.0/0.0 are NULL, and the kernel's numpy body
+    (the code the Python worker runs) emits no RuntimeWarning for it."""
+    import warnings
+
+    import duckdb
+    import pandas as pd
+
+    from pdf_extraction_spark.operators.similarity import DIM, quantized_scores
+
+    zero, unit = [0.0] * DIM, [0.5] * DIM
+    df = spark.createDataFrame(
+        [(0, zero, zero), (1, zero, unit), (2, unit, unit)],
+        "id long, a array<float>, b array<float>",
+    )
+    got = {r["id"]: tuple(r["s"]) for r in
+           df.select("id", quantized_scores(F.col("a"), F.col("b")).alias("s")).collect()}
+    assert got == {0: (0, None), 1: (0, None), 2: (DIM * 5000 * 5000, 1.0)}
+    assert duckdb.sql("SELECT 0.0 / 0.0, 1.0 / 0.0").fetchall() == [(None, None)]
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = quantized_scores.func(pd.Series([zero, zero]), pd.Series([zero, unit]))
+    assert out["qdot"].tolist() == [0, 0] and out["cos"].isna().all()
+
+
+def test_hard_negatives_rank_zero_vector_last_as_oracle(spark, tmp_path):
+    """A zero-norm candidate scores a NULL cos_micro: ann_hard_negatives
+    ranks it after every scored candidate, as its DuckDB oracle's
+    ``ORDER BY cos_micro DESC`` (NULLS LAST) does."""
+    import duckdb
+    import numpy as np
+
+    from pdf_extraction_spark.operators.similarity import (
+        _SQL_HARD_NEG,
+        DIM,
+        K_NEG,
+        N_ANCHORS,
+        q_ann_hard_negatives,
+    )
+
+    rng = np.random.RandomState(0)
+    rows = [(i, rng.uniform(-1, 1, DIM).astype(np.float32).tolist(), int(i >= N_ANCHORS))
+            for i in range(N_ANCHORS + K_NEG - 1)]
+    rows += [(N_ANCHORS + K_NEG - 1, [0.0] * DIM, 1)]
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int") \
+        .coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    got = [tuple(r) for r in q_ann_hard_negatives(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet/*.parquet')")
+    want = [tuple(r) for r in con.sql(_SQL_HARD_NEG).fetchall()]
+    assert got == want
+    assert [r[1:3] for r in got if r[4] is None] == [(K_NEG, N_ANCHORS + K_NEG - 1)] * N_ANCHORS
