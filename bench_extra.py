@@ -22,8 +22,10 @@ while the noop write runs the whole plan, as a real consumer of the
 result does.
 
 The JSON carries ``calib_1core_turns_per_sec``: ``bench.calib_single_core``
-taken before and after the sweep, so timings from runs on a machine whose
-speed drifts can be compared (or discarded) by the box speed they ran at.
+taken before and after the sweep, and each query's entry carries its own
+``calib_1core_turns_per_sec`` taken just before its trials. The box speed
+drifts within one sweep, so each query's timings can be scaled (or
+discarded) by the speed they ran at.
 """
 
 from __future__ import annotations
@@ -69,6 +71,7 @@ def main() -> None:
             with open(f"plans/r07/{name}_{tag}.txt", "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
+        query_calib = calib_single_core()
         best = float("inf")
         samples = []
         for _ in range(trials):
@@ -77,7 +80,8 @@ def main() -> None:
             dt = time.monotonic() - t0
             samples.append(round(dt, 3))
             best = min(best, dt)
-        timings[name] = {"best": round(best, 3), "samples": samples}
+        timings[name] = {"best": round(best, 3), "samples": samples,
+                         "calib_1core_turns_per_sec": query_calib}
         print(f"# {name}: {samples}", file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
     calib.append(calib_single_core())

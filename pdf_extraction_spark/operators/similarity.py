@@ -74,8 +74,11 @@ def _np_quant(vectors) -> np.ndarray:
     int64 — the integer grid the scoring kernel, the LSH plane dots, the
     SemDeDup assignment and every SQL oracle share. ``vectors`` is one
     vector or any sequence of equal-length vectors (a list, or a pandas
-    Series of Arrow arrays)."""
-    return np.round(np.array(list(vectors), dtype=np.float64) * 10000.0).astype(np.int64)
+    Series of Arrow arrays). Ties round half away from zero, as DuckDB's
+    ``round`` and Spark's HALF_UP ``F.round`` do; 0.49999999999999994 stays 0."""
+    y = np.array(list(vectors), dtype=np.float64) * 10000.0
+    t = np.trunc(y)
+    return (t + np.copysign(np.abs(y - t) >= 0.5, y)).astype(np.int64)
 
 
 def _np_scores(A: np.ndarray, B: np.ndarray):

@@ -22,15 +22,14 @@ a table scan:
   ~36 bytes/doc. On a deployment this table is bucketed by ``h`` so the
   exact candidate check below is a bucket-local join, not a table
   shuffle.
-- ``bloom``      : (batch_id, word_idx, bits) — the Bloom dedup prefilter
-  AS A TABLE of 32-bit words (``operators/dedup`` q_bloom_prefilter's
-  representation), one partial filter per batch. bit_or is associative,
-  so readers OR-merge the per-batch rows exactly like gram_index readers
-  sum partial counts; ``rebuild_bloom`` is the compaction/resize
-  analogue of ``compact_gram_index``.
-- ``bloom_meta`` : 1 row (m_bits) — the filter size every batch's probe
-  arithmetic MUST share (bit positions are ``hash % m_bits``; OR-merging
-  filters of different sizes would be meaningless).
+- ``bloom``      : (batch_id, m_bits, word_idx, bits) — the Bloom dedup
+  prefilter AS A TABLE of 32-bit words (``operators/dedup``
+  q_bloom_prefilter's representation), one partial filter per batch.
+  bit_or is associative, so readers OR-merge the per-batch rows exactly
+  like gram_index readers sum partial counts; ``rebuild_bloom`` is the
+  compaction/resize analogue of ``compact_gram_index``. Every row carries
+  the filter size (bit positions are ``hash % m_bits``), so the size
+  commits with its words and a resumed batch's overwrite replaces both.
 - ``dup_report`` : (batch_id, doc_id, n_words, dup_words) — the batch's
   exact duplicated-token mass vs (indexed corpus ∪ batch), written LAST.
 
@@ -41,11 +40,12 @@ resume — never skipped, never double-counted. Batch completion is
 certified by a driver-written marker file (``_markers/<batch_id>.done``,
 created atomically AFTER the final table write; the parquet analogue of
 an Iceberg snapshot commit — on Iceberg the marker is the snapshot
-itself). Every recomputation on resume reads the store EXCLUDING the
-batch's own partitions, so the replay is a pure function of
-(pre-batch store state, batch input) and any resume converges on the
-byte-identical final state — pinned by tests/test_incremental_ingest.py
-including a crash DURING the dup_report write (partial partition).
+itself). Store reads see committed batches only (``_committed``: marked
+batches plus the ``__compacted__``/``__rebuilt__`` maintenance
+partitions), so a resume replays the batch against the pre-batch store
+and converges on the byte-identical final state, and a crashed batch's
+partial partitions are invisible to every other reader, maintenance
+included — pinned by tests/test_incremental_ingest.py.
 Retraction-free contract: an already-ingested document's dup mass is
 never updated by later batches (`operators/sarray.py` line ~384
 documents the tradeoff and the periodic batch recompute that reconciles
@@ -55,9 +55,11 @@ it).
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import StringType, StructField, StructType
 
 from pdf_extraction_spark.operators.dedup import (
     _BLOOM_WORD,
@@ -80,7 +82,6 @@ _INDEX_SCHEMA = "batch_id string, gram_key string, n_old bigint"
 # which `rebuild_bloom` resizes from the true corpus count.
 BLOOM_HEADROOM = 8
 BLOOM_MIN_BITS = 1 << 14
-
 
 def _marker_path(io: TableIO, batch_id: str) -> str:
     return os.path.join(io.root, "_markers", f"{batch_id}.done")
@@ -105,82 +106,57 @@ def _mark_done(io: TableIO, batch_id: str) -> None:
     os.replace(tmp, p)
 
 
-def _not_this_batch(df: DataFrame, batch_id: str) -> DataFrame:
-    """Exclude the batch's OWN partition from a store read: a resume after
-    a crash that already wrote this batch's rows must replay against the
-    pre-batch store, or novel docs gain phantom dup mass / every admitted
-    doc matches its own hash. No-op on a clean run, partition-pruned
-    either way. cast('string') pins the comparison against partition-
-    column type inference on numeric-looking ids."""
-    return df.filter(F.col("batch_id").cast("string") != batch_id)
-
-
-def _bloom_filter_words(io: TableIO, batch_id: str) -> DataFrame | None:
-    """OR-merged filter words from every prior batch's partial filter
-    (bit_or is associative — the gram_index partial-sum contract)."""
-    if not io.exists("bloom"):
+def _committed(io: TableIO, name: str) -> DataFrame | None:
+    """The rows of table ``name`` whose batch has a completion marker, plus
+    the partitions committed by compact_gram_index's / rebuild_bloom's
+    staged swap — a partition-pruned ``isin``; None if there are none.
+    batch_id is read as the string it was written as: partition-type
+    inference would read ``batch_id=007`` as 7, which misses ``007.done``."""
+    if not io.exists(name):
         return None
-    return (
-        _not_this_batch(io.read("bloom"), batch_id)
-        .groupBy("word_idx")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
+    markers = os.path.join(io.root, "_markers")
+    done = {f[: -len(".done")] for f in os.listdir(markers)
+            if f.endswith(".done")} if os.path.isdir(markers) else set()
+    keep = {unquote(d.split("=", 1)[1]) for d in os.listdir(io.path(name))
+            if d.startswith("batch_id=")} & (done | {"__compacted__", "__rebuilt__"})
+    if not keep:
+        return None
+    schema = StructType([StructField(f.name, StringType()) if f.name == "batch_id" else f
+                         for f in io.read(name).schema])
+    return io.spark.read.schema(schema).parquet(io.path(name)).filter(
+        F.col("batch_id").isin(*sorted(keep)))
 
 
-_REBUILT_STAMP_RE = r"^__rebuilt_m(\d+)__$"
+def _filter_bits(n_keys: int, headroom: int) -> int:
+    return max(BLOOM_MIN_BITS, BLOOM_BITS_PER_KEY * n_keys * headroom)
 
 
-def _bloom_meta(io: TableIO, n_batch: int) -> int:
-    """Read (or create, first admission batch) the shared filter size.
-
-    r7 ADVICE fix (atomicity): ``rebuild_bloom`` stamps the new m_bits INTO
-    the rebuilt partition's batch_id (``__rebuilt_m<bits>__``), so the bit
-    geometry travels atomically with the filter words in ONE staged swap.
-    A crash between that swap and the bloom_meta overwrite previously left
-    words built at the new m_bits while probes read the old m_bits —
-    misaligned bit positions ⇒ silent FALSE NEGATIVES (store duplicates
-    admitted). Now the stamp is authoritative: on mismatch (or missing
-    meta) the meta row is re-derived from the stamp and the probe geometry
-    always matches the words it probes."""
-    import re
-
-    stamp: int | None = None
-    if io.exists("bloom"):
-        for r in io.read("bloom").select("batch_id").distinct().collect():
-            m = re.match(_REBUILT_STAMP_RE, str(r["batch_id"]))
-            if m:
-                stamp = int(m.group(1))
-                break
-    meta: int | None = None
-    if io.exists("bloom_meta"):
-        meta = int(io.read("bloom_meta").collect()[0]["m_bits"])
-    if stamp is not None and stamp != meta:
-        io.write(
-            io.frame([(stamp,)], "m_bits bigint"),
-            "bloom_meta", mode="overwrite",
-        )
-        return stamp
-    if meta is not None:
-        return meta
-    m_bits = max(BLOOM_MIN_BITS, BLOOM_BITS_PER_KEY * n_batch * BLOOM_HEADROOM)
-    io.write(
-        io.frame([(m_bits,)], "m_bits bigint"),
-        "bloom_meta", mode="overwrite",
-    )
-    return m_bits
+def _bloom_filter(io: TableIO) -> tuple[int | None, DataFrame | None]:
+    """(m_bits, OR-merged words) of the committed filter, or (None, None)."""
+    bloom = _committed(io, "bloom")
+    if bloom is None:
+        return None, None
+    if "m_bits" not in bloom.columns:
+        raise ValueError("bloom predates its m_bits column: run rebuild_bloom once to migrate it")
+    sizes = bloom.select("m_bits").distinct().collect()
+    if len(sizes) != 1:  # a partition holds one size; a resize replaces them all
+        raise ValueError(f"committed bloom holds {len(sizes)} filter sizes: run rebuild_bloom")
+    # bit_or is associative — the gram_index partial-sum contract
+    return int(sizes[0][0]), bloom.groupBy("word_idx").agg(F.bit_or("bits").alias("bits"))
 
 
-def _admit(
-    io: TableIO, new_docs: DataFrame, batch_id: str
-) -> tuple[DataFrame, dict]:
+def _admit(io: TableIO, new_docs: DataFrame) -> tuple[DataFrame, dict, DataFrame | None]:
     """Admission gate: exact-duplicate documents (by md5(text)) are
     rejected against BOTH the batch itself (keep-first by doc_id) and the
-    already-ingested store. The store check runs the Bloom prefilter
-    FIRST: only documents whose k filter probes ALL hit become candidates
-    for the exact hash anti-join — the filter's no-false-negative
-    guarantee means non-candidates are admitted with zero join work, so
-    the exact check's probe side is |candidates| ≈ |true dups| + 0.2%·|batch|,
-    not |batch|. Returns (admitted docs with h, admission counts)."""
+    committed store. The store check runs the Bloom prefilter FIRST: only
+    documents whose k filter probes ALL hit become candidates for the
+    exact hash anti-join — the filter's no-false-negative guarantee means
+    non-candidates are admitted with zero join work, so the exact check's
+    probe side is |candidates| ≈ |true dups| + 0.2%·|batch|, not |batch|.
+    A store with no committed filter (bloom lost) sends every unique doc
+    to the exact check and returns its hashes as ``uncovered``, which the
+    batch's partial filter must hold too, sized as ``rebuild_bloom`` sizes
+    store ∪ batch. Returns (admitted docs with h, admission counts, uncovered or None)."""
     hashed = new_docs.select("doc_id", "text", F.md5("text").alias("h"))
     rk = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
     uniq = hashed.withColumn("is_batch_dup", rk > 1).localCheckpoint(eager=False)
@@ -190,12 +166,18 @@ def _admit(
     n_batch_dups = int(n_batch_dups or 0)
     batch_unique = uniq.filter(~F.col("is_batch_dup")).drop("is_batch_dup")
 
-    m_bits = _bloom_meta(io, int(n_in))
-    filt = _bloom_filter_words(io, batch_id)
-    if filt is None:
+    m_bits, filt = _bloom_filter(io)
+    store = _committed(io, "doc_hashes")
+    if m_bits is None:
+        m_bits = (_filter_bits(int(n_in), BLOOM_HEADROOM) if store is None
+                  else _filter_bits(store.count() + int(n_in), 2))
+    uncovered = None
+    if store is None:
         # first batch: no store yet — every unique doc is admitted
-        candidates = batch_unique.limit(0)
         n_candidates = 0
+    elif filt is None:
+        candidates, uncovered = batch_unique, store.select("h")
+        n_candidates = int(n_in) - n_batch_dups
     else:
         # store-sized word table: ≤ m_bits/32 (word_idx, bits) rows of 48 B
         hit_docs = (
@@ -207,12 +189,11 @@ def _admit(
         candidates = batch_unique.join(hit_docs, ["doc_id", "h"]).localCheckpoint(eager=False)
         n_candidates = candidates.count()
 
-    if n_candidates > 0 and io.exists("doc_hashes"):
+    if n_candidates > 0:
         # exact check over CANDIDATES ONLY — on a deployment doc_hashes is
         # bucketed by h, making this a bucket-local probe of the matched
         # buckets rather than a store-wide shuffle
-        store_h = _not_this_batch(io.read("doc_hashes"), batch_id).select("h")
-        store_dups = candidates.join(store_h, "h", "left_semi").select("doc_id")
+        store_dups = candidates.join(store.select("h"), "h", "left_semi").select("doc_id")
         admitted = batch_unique.join(store_dups, "doc_id", "left_anti")
         n_store_dups = store_dups.count()
     else:
@@ -227,7 +208,7 @@ def _admit(
         "n_admitted": int(n_in) - n_batch_dups - int(n_store_dups),
         "bloom_m_bits": m_bits,
     }
-    return admitted, counts
+    return admitted, counts, uncovered
 
 
 def append_batch(
@@ -260,17 +241,15 @@ def append_batch(
 
     counts: dict = {}
     if admit_unique:
-        docs, counts = _admit(io, new_docs, batch_id)
+        docs, counts, uncovered = _admit(io, new_docs)
         docs = docs.localCheckpoint(eager=False)
     else:
         docs = new_docs
 
-    if io.exists("gram_index"):
-        index = _not_this_batch(io.read("gram_index"), batch_id).select(
-            "gram_key", "n_old"
-        )
-    else:
-        index = spark.createDataFrame([], _INDEX_SCHEMA).select("gram_key", "n_old")
+    index = _committed(io, "gram_index")
+    if index is None:
+        index = spark.createDataFrame([], _INDEX_SCHEMA)
+    index = index.select("gram_key", "n_old")
 
     # ONE gram stage for the whole ingest: the same class rows feed the
     # delta mass AND the index adds (passing the frame down shares its one
@@ -312,9 +291,9 @@ def append_batch(
             docs.select(F.lit(batch_id).alias("batch_id"), "doc_id", "h"),
             "doc_hashes", mode="overwrite_partitions", partition_by=["batch_id"],
         )
-        part_filter = bloom_words(docs.select("h"), counts["bloom_m_bits"]).select(
-            F.lit(batch_id).alias("batch_id"), "word_idx", "bits"
-        )
+        m_bits, hashes = counts["bloom_m_bits"], docs.select("h")
+        part_filter = bloom_words(hashes if uncovered is None else hashes.union(uncovered), m_bits).select(
+            F.lit(batch_id).alias("batch_id"), F.lit(m_bits).alias("m_bits"), "word_idx", "bits")
         io.write(part_filter, "bloom", mode="overwrite_partitions",
                  partition_by=["batch_id"])
     io.write(report, "dup_report", mode="overwrite_partitions",
@@ -325,8 +304,8 @@ def append_batch(
     # aggregating the `report` plan would re-execute the entire coverage
     # computation a second time — the write is the only full pass.
     stats = (
-        io.read("dup_report")
-        .filter(F.col("batch_id").cast("string") == batch_id)
+        _committed(io, "dup_report")
+        .filter(F.col("batch_id") == batch_id)
         .agg(F.count("*").alias("n_docs"), F.sum("dup_words").alias("dup_words"))
         .collect()[0]
     )
@@ -341,12 +320,16 @@ def append_batch(
 
 
 def compact_gram_index(spark: SparkSession, root: str) -> dict:
-    """Re-sum the gram_index to one row per gram (batch_id collapses to
-    the marker '__compacted__'). Counts are associative, so delta results
-    are identical before and after (pinned in tests); the rewrite is
-    verified against total-count preservation BEFORE the swap."""
+    """Re-sum the committed gram_index to one row per gram (batch_id
+    collapses to '__compacted__'). Counts are associative, so delta
+    results are identical before and after (pinned in tests); the rewrite
+    is verified against total-count preservation BEFORE the swap. The
+    swap replaces the whole table, so an unfinished batch's partial
+    partition is dropped; that batch rewrites it when it resumes."""
     io = TableIO(spark, root)
-    before = io.read("gram_index")
+    before = _committed(io, "gram_index")
+    if before is None:
+        return {"rows": 0, "total_count": 0}
     total = before.agg(F.sum("n_old")).collect()[0][0] or 0
     compacted = (
         before.groupBy("gram_key")
@@ -360,28 +343,29 @@ def compact_gram_index(spark: SparkSession, root: str) -> dict:
             raise ValueError(f"compaction lost counts: {got} != {total}")
 
     io.rewrite(compacted, "gram_index", partition_by=["batch_id"], verify=verify)
-    n = io.read("gram_index").count()
+    n = _committed(io, "gram_index").count()
     return {"rows": int(n), "total_count": int(total)}
 
 
 def rebuild_bloom(spark: SparkSession, root: str) -> dict:
-    """Resize + compact the Bloom filter from the TRUE store size: m =
-    BLOOM_BITS_PER_KEY · |doc_hashes| · 2 (headroom for the next doubling
+    """Resize + compact the Bloom filter from the TRUE committed store size:
+    m = BLOOM_BITS_PER_KEY · |doc_hashes| · 2 (headroom for the next doubling
     — the scalable-Bloom growth step; probe positions are hash % m, so a
-    resize must rebuild every word, it cannot OR old filters). Verified
+    resize must rebuild every word, it cannot OR old filters). ONE
+    '__rebuilt__' partition replaces the table, words and m_bits together;
+    this also migrates a bloom written before m_bits was a column. Verified
     BEFORE the swap: every stored hash must probe all-hit against the
-    staged filter (the no-false-negative invariant), or the rewrite
-    aborts with the old filter untouched."""
+    staged filter (the no-false-negative invariant), or the rewrite aborts
+    with the old filter untouched."""
     io = TableIO(spark, root)
-    n_store = io.read("doc_hashes").count()
-    m_bits = max(BLOOM_MIN_BITS, BLOOM_BITS_PER_KEY * n_store * 2)
-    hashes = io.read("doc_hashes").select("h")
-    rebuilt = (
-        bloom_words(hashes, m_bits)
-        # the m_bits stamp in the partition value makes filter words and
-        # bit geometry atomic under the single staged swap (see _bloom_meta)
-        .select(F.lit(f"__rebuilt_m{m_bits}__").alias("batch_id"), "word_idx", "bits")
-    )
+    store = _committed(io, "doc_hashes")
+    if store is None:
+        raise ValueError("no committed doc_hashes to rebuild the bloom filter from")
+    hashes = store.select("h")
+    n_store = hashes.count()
+    m_bits = _filter_bits(n_store, 2)
+    rebuilt = bloom_words(hashes, m_bits).select(
+        F.lit("__rebuilt__").alias("batch_id"), F.lit(m_bits).alias("m_bits"), "word_idx", "bits")
 
     def verify(staged: DataFrame) -> None:
         misses = (
@@ -393,10 +377,6 @@ def rebuild_bloom(spark: SparkSession, root: str) -> dict:
             raise ValueError(f"rebuilt filter misses {misses} stored hashes")
 
     io.rewrite(rebuilt, "bloom", partition_by=["batch_id"], verify=verify)
-    io.write(
-        io.frame([(m_bits,)], "m_bits bigint"),
-        "bloom_meta", mode="overwrite",
-    )
-    words = io.read("bloom").count()
+    words = _committed(io, "bloom").count()
     return {"m_bits": int(m_bits), "n_filter_words": int(words),
             "n_store": int(n_store)}

@@ -18,6 +18,7 @@ app/db/extractions.py:98-104).
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Any, List, Optional, Sequence
 
 import pyarrow as pa
@@ -42,6 +43,7 @@ class TableIO:
         return os.path.join(self.root, name)
 
     def exists(self, name: str) -> bool:
+        self._finish_swap(name)
         p = self.path(name)
         return os.path.isdir(p) and any(
             f.endswith(".parquet") or not f.startswith("_")
@@ -55,6 +57,7 @@ class TableIO:
         file's footer nondeterministically and could drop the newer
         columns. Off by default: merging reads every footer, pointless
         cost for big single-schema data tables."""
+        self._finish_swap(name)
         r = self.spark.read
         if merge_schema:
             r = r.option("mergeSchema", "true")
@@ -84,6 +87,7 @@ class TableIO:
         partition_by: Optional[List[str]] = None,
     ) -> None:
         """mode: append | overwrite | overwrite_partitions (dynamic)."""
+        self._finish_swap(name)
         w = df.write
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -109,18 +113,17 @@ class TableIO:
         may be DERIVED FROM the current table contents (read → transform →
         rewrite). Spark cannot overwrite a path an active plan still reads
         from, so the parquet fallback stages to ``<name>__tmp`` and swaps
-        directories. On Iceberg this whole method is a single MERGE INTO /
-        REPLACE snapshot commit (atomic, no staging dir) — the parquet swap
-        is the closest filesystem analogue (one non-atomic window between
-        remove and rename, acceptable for single-writer maintenance jobs).
+        directories (``name → <name>__old``, ``<name>__tmp → name``, drop
+        the old copy; ``_finish_swap`` completes a swap a crash cut). On
+        Iceberg this whole method is a single MERGE INTO / REPLACE snapshot
+        commit (atomic, no staging dir).
 
         ``verify`` (optional): callback receiving the STAGED table as a
         DataFrame, called BEFORE the swap — raise to abort with the
         original untouched and the staged dir removed (how compaction
         proves content preservation without risking the known-good copy).
         """
-        import shutil
-
+        self._finish_swap(name)
         tmp = f"{name}__tmp"
         w = df.write
         if partition_by:
@@ -133,8 +136,20 @@ class TableIO:
                 shutil.rmtree(self.path(tmp), ignore_errors=True)
                 raise
         if os.path.isdir(self.path(name)):
-            shutil.rmtree(self.path(name))
+            os.rename(self.path(name), self.path(f"{name}__old"))
         os.rename(self.path(tmp), self.path(name))
+        shutil.rmtree(self.path(f"{name}__old"), ignore_errors=True)
+
+    def _finish_swap(self, name: str) -> None:
+        """With ``<name>__old`` (renamed aside after ``verify`` passed) beside
+        ``<name>__tmp``, a swap was cut before its second rename: move the
+        verified copy into place, then drop the old one."""
+        old, tmp = self.path(f"{name}__old"), self.path(f"{name}__tmp")
+        if not os.path.isdir(old):
+            return
+        if os.path.isdir(tmp):
+            os.rename(tmp, self.path(name))
+        shutil.rmtree(old)
 
 
 def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

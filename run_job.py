@@ -100,7 +100,9 @@ def main(argv=None) -> int:
     ap.add_argument(
         "--rebuild-bloom", action="store_true",
         help="with --ingest --admit-unique: after the append, resize the "
-             "Bloom filter from the true store size (verified staged swap)",
+             "Bloom filter from the true store size (verified staged swap); "
+             "also the one-time migration of a bloom table written before "
+             "the filter size became its m_bits column",
     )
     args = ap.parse_args(argv)
 

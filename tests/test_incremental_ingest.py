@@ -102,8 +102,8 @@ def test_crash_between_writes_resumes_to_same_state(spark, tmp_path, crash_after
     without double-writing, and the final state equals an uncrashed run.
     The gram_index crash point is the sharp one: the resumed delta must
     NOT count the batch against its own already-written index rows
-    (novel docs would gain phantom dup mass — caught in review, now
-    excluded by the batch_id != current filter on the index read)."""
+    (novel docs would gain phantom dup mass); the running batch has no
+    marker, so its rows are not committed and no store read sees them."""
     crash_root = str(tmp_path / "crash")
     clean_root = str(tmp_path / "clean")
     for root in (crash_root, clean_root):
@@ -260,6 +260,16 @@ def test_idempotency_probe_is_partition_pruned(spark, tmp_path):
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "batch_id" in m.group(1), plan
     assert probe.count() == 1
+
+    # every store read keeps committed batches through the same pruning
+    from pdf_extraction_spark.plans.incremental import _committed
+
+    store = _committed(io, "gram_index")
+    plan = store._sc._jvm.PythonSQLUtils.explainString(
+        store._jdf.queryExecution(), "formatted"
+    )
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert m and "batch_id" in m.group(1), plan
 
 
 def test_stream_ingest_matches_sequential_appends(spark, tmp_path):
@@ -457,7 +467,10 @@ def test_rebuild_bloom_resizes_and_preserves_admission(spark, tmp_path):
     io = TableIO(spark, root)
     n_store = io.read("doc_hashes").count()
     assert out["n_store"] == n_store == 5
-    assert out["m_bits"] == int(io.read("bloom_meta").collect()[0]["m_bits"])
+    # the size is the partition value of the one rebuilt partition
+    parts = {(r["m_bits"], r["batch_id"])
+             for r in io.read("bloom").select("m_bits", "batch_id").distinct().collect()}
+    assert parts == {(out["m_bits"], "__rebuilt__")}
     # post-rebuild batch: one dup of each earlier batch + one novel doc
     s = append_batch(
         spark, root,
@@ -472,15 +485,14 @@ def test_rebuild_bloom_resizes_and_preserves_admission(spark, tmp_path):
 def test_rebuild_bloom_abort_preserves_filter(spark, tmp_path, monkeypatch):
     """A staged filter that lost a word fails the no-false-negative check
     (some stored hash no longer probes all-hit), so rebuild_bloom raises
-    before the swap and leaves bloom and bloom_meta as they were."""
+    before the swap and leaves bloom as it was."""
     import pdf_extraction_spark.plans.incremental as inc
 
     root = str(tmp_path / "w")
     append_batch(spark, root, _df(spark, ADM_A), "b-a", window=W,
                  admit_unique=True)
     io = TableIO(spark, root)
-    before = {t: sorted(map(tuple, io.read(t).collect()))
-              for t in ("bloom", "bloom_meta")}
+    before = {"bloom": sorted(map(tuple, io.read("bloom").collect()))}
 
     real = inc.bloom_words
 
@@ -495,43 +507,6 @@ def test_rebuild_bloom_abort_preserves_filter(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert {t: sorted(map(tuple, io.read(t).collect())) for t in before} == before
     assert not io.exists("bloom__tmp")
-
-
-def test_rebuild_bloom_meta_crash_window_is_safe(spark, tmp_path):
-    """r7 ADVICE fix: a crash BETWEEN the bloom rewrite and the bloom_meta
-    overwrite must not leave probes reading the old m_bits against words
-    built at the new m_bits (silent false negatives). The rebuilt
-    partition's batch_id stamps the new m_bits atomically with the words;
-    _bloom_meta re-derives (heals) the meta row from the stamp."""
-    import shutil
-
-    from pdf_extraction_spark.plans.incremental import _bloom_meta, rebuild_bloom
-
-    root = str(tmp_path / "w")
-    append_batch(spark, root, _df(spark, ADM_A), "b-a", window=W,
-                 admit_unique=True)
-    append_batch(spark, root, _df(spark, ADM_B), "b-b", window=W,
-                 admit_unique=True)
-    io = TableIO(spark, root)
-    out = rebuild_bloom(spark, root)
-    # simulate the crash window: meta still holds a PRE-RESIZE size that
-    # does not match the rebuilt words' geometry (at this corpus size the
-    # natural rebuild lands on the BLOOM_MIN_BITS floor, so the stale
-    # value is injected rather than produced by a real doubling)
-    stale_m = out["m_bits"] // 2
-    shutil.rmtree(io.path("bloom_meta"))
-    io.write(spark.createDataFrame([(stale_m,)], "m_bits bigint"),
-             "bloom_meta", mode="overwrite")
-    # the stamp is authoritative: meta heals to the rebuilt size
-    assert _bloom_meta(io, 1) == out["m_bits"]
-    assert int(io.read("bloom_meta").collect()[0]["m_bits"]) == out["m_bits"]
-    # and admission still rejects every store duplicate (no false negatives)
-    s = append_batch(
-        spark, root,
-        _df(spark, [(40, "alpha beta gamma"), (41, "kappa lambda mu"),
-                    (42, "totally new sentence")]),
-        "b-d", window=W, admit_unique=True)
-    assert s["n_store_dups"] == 2 and s["n_admitted"] == 1
 
 
 def test_stream_ingest_admit_unique_rejects_cross_epoch_dups(spark, tmp_path):
@@ -570,3 +545,210 @@ def test_stream_ingest_admit_unique_rejects_cross_epoch_dups(spark, tmp_path):
         got = sorted(map(tuple, io_s.read(t).select(*cols).collect()))
         want = sorted(map(tuple, io_b.read(t).select(*cols).collect()))
         assert got == want, t
+
+
+# ------------------------------------------------- committed-state reads
+
+
+def test_compaction_skips_unfinished_batch_and_resume_matches_clean(spark, tmp_path):
+    """Compaction sums committed rows only: an unfinished batch's gram_index
+    partition (written, no marker) is dropped by the staged swap, and the
+    resumed batch rewrites it against the compacted index — the final
+    gram_index and the batch's report equal an uncrashed run."""
+    crash_root = str(tmp_path / "crash")
+    clean_root = str(tmp_path / "clean")
+    for root in (crash_root, clean_root):
+        append_batch(spark, root, _df(spark, BATCH_A), "b-a", window=W)
+
+    from pdf_extraction_spark.operators.sarray import gram_classes
+
+    io = TableIO(spark, crash_root)
+    adds = (
+        gram_classes(_df(spark, BATCH_B), window=W)
+        .groupBy("gram_key")
+        .agg(F.sum("n_local").alias("n_old"))
+        .select(F.lit("b-b").alias("batch_id"), "gram_key", "n_old")
+    )
+    io.write(adds, "gram_index", mode="append", partition_by=["batch_id"])
+    compact_gram_index(spark, crash_root)
+    append_batch(spark, crash_root, _df(spark, BATCH_B), "b-b", window=W)
+
+    compact_gram_index(spark, clean_root)
+    append_batch(spark, clean_root, _df(spark, BATCH_B), "b-b", window=W)
+    clean = TableIO(spark, clean_root)
+    assert sorted(map(tuple, io.read("gram_index").collect())) \
+        == sorted(map(tuple, clean.read("gram_index").collect()))
+    assert _report(io, "b-b") == _report(clean, "b-b")
+    assert 13 not in _report(io, "b-b")
+
+
+def test_admission_without_committed_filter_checks_every_doc(spark, tmp_path):
+    """A store whose bloom table is gone still rejects store duplicates:
+    every unique doc goes to the exact check (doc 10 copies doc 1), and
+    that batch's filter covers the whole store, so a later copy of a
+    batch-A doc is still a candidate (doc 40 copies doc 2)."""
+    import shutil
+
+    root = str(tmp_path / "w")
+    append_batch(spark, root, _df(spark, BATCH_A), "b-a", window=W,
+                 admit_unique=True)
+    shutil.rmtree(TableIO(spark, root).path("bloom"))
+    s = append_batch(spark, root, _df(spark, BATCH_B), "b-b", window=W,
+                     admit_unique=True)
+    assert (s["n_bloom_candidates"], s["n_store_dups"], s["n_admitted"]) == (4, 1, 3)
+    s = append_batch(spark, root, _df(spark, [(40, BATCH_A[1][1]), (41, "brand new words here")]),
+                     "b-c", window=W, admit_unique=True)
+    assert (s["n_store_dups"], s["n_admitted"]) == (1, 1)
+
+
+def test_lost_filter_is_sized_for_store_and_batch(spark, tmp_path):
+    """A batch that writes its partial filter over a whole store whose
+    filter is gone sizes it as rebuild_bloom does, for store ∪ batch — not
+    for its own count: a large store's keys in a batch-sized filter drive
+    the false-positive rate toward 1 and every later doc to the exact
+    check."""
+    import shutil
+
+    from pdf_extraction_spark.plans.incremental import BLOOM_BITS_PER_KEY
+
+    root = str(tmp_path / "w")
+    store_rows = [(i, f"store doc number {i} unique words") for i in range(600)]
+    append_batch(spark, root, _df(spark, store_rows), "b-0", window=W, admit_unique=True)
+    shutil.rmtree(TableIO(spark, root).path("bloom"))
+    s = append_batch(spark, root, _df(spark, BATCH_B), "b-1", window=W, admit_unique=True)
+    assert s["bloom_m_bits"] == BLOOM_BITS_PER_KEY * (600 + 4) * 2
+    batch = [(1000 + j, f"store doc number {j} unique words") for j in range(5)]
+    batch += [(2000 + j, f"novel text {j} nothing shared") for j in range(95)]
+    s = append_batch(spark, root, _df(spark, batch), "b-2", window=W, admit_unique=True)
+    assert s["n_store_dups"] == 5 and s["n_bloom_candidates"] <= 15, s
+
+
+@pytest.mark.parametrize("then", ["read", "append"])
+def test_rewrite_crash_between_renames_keeps_table(spark, tmp_path, monkeypatch, then):
+    """A crash after the staged swap's first rename (the old table moved
+    aside, the verified copy not yet in place) loses nothing: the next
+    read, or an append before any read, finishes the swap first, so the
+    table holds the compacted rows (plus the appended one)."""
+    import os
+
+    root = str(tmp_path / "w")
+    append_batch(spark, root, _df(spark, BATCH_A), "b-a", window=W)
+    append_batch(spark, root, _df(spark, BATCH_B), "b-b", window=W)
+    io = TableIO(spark, root)
+    want = {(r["gram_key"], r["n_old"]) for r in io.read("gram_index")
+            .groupBy("gram_key").agg(F.sum("n_old").alias("n_old")).collect()}
+
+    real_rename = os.rename
+
+    def crashing(src, dst):
+        if dst == io.path("gram_index"):
+            monkeypatch.setattr(os, "rename", real_rename)
+            raise OSError("simulated crash between the swap's renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing)
+    with pytest.raises(OSError, match="simulated crash"):
+        compact_gram_index(spark, root)
+    monkeypatch.undo()
+    assert not os.path.isdir(io.path("gram_index"))
+
+    batches = {"__compacted__"}
+    if then == "append":
+        io.write(spark.createDataFrame([("b-x", "zz zz zz", 1)], "batch_id string, gram_key string, n_old bigint"),
+                 "gram_index", mode="append", partition_by=["batch_id"])
+        want.add(("zz zz zz", 1))
+        batches.add("b-x")
+    got = io.read("gram_index").collect()
+    assert {r["batch_id"] for r in got} == batches
+    assert {(r["gram_key"], r["n_old"]) for r in got} == want
+    assert not any(os.path.isdir(io.path(f"gram_index__{s}")) for s in ("tmp", "old"))
+
+
+def test_first_batch_resume_after_another_keeps_one_bloom_size(spark, tmp_path):
+    """The filter size commits with its words, so probes never mix
+    geometries: a first batch that crashed after its bloom write (sized
+    from its own 200 docs) and resumes after another first batch sized
+    the filter from 4 docs overwrites its whole partition under the
+    committed size, and admission keeps working without a rebuild."""
+    import os
+
+    root = str(tmp_path / "w")
+    big = [(100 + i, f"bulk doc {i} words") for i in range(200)]
+    io = TableIO(spark, root)
+    # a crash just before the marker: every table written, nothing committed
+    append_batch(spark, root, _df(spark, big), "b-big", window=W, admit_unique=True)
+    os.remove(os.path.join(root, "_markers", "b-big.done"))
+    s = append_batch(spark, root, _df(spark, ADM_A), "b-a", window=W, admit_unique=True)
+    assert s["n_admitted"] == 3
+    s = append_batch(spark, root, _df(spark, big), "b-big", window=W, admit_unique=True)
+    assert s["bloom_m_bits"] == 1 << 14
+    sizes = {r["m_bits"] for r in io.read("bloom").select("m_bits").distinct().collect()}
+    assert sizes == {1 << 14}
+
+    s = append_batch(spark, root, _df(spark, ADM_B + [(15, "bulk doc 7 words")]),
+                     "b-b", window=W, admit_unique=True)
+    assert (s["n_store_dups"], s["n_admitted"]) == (3, 2)
+
+
+def test_resumed_first_admission_batch_matches_clean(spark, tmp_path):
+    """A first admission batch that crashed before its marker left
+    doc_hashes rows but no committed ones: the resume takes the no-store
+    path, as a clean first batch does, instead of checking every doc
+    against an empty store."""
+    import os
+
+    crash_root = str(tmp_path / "crash")
+    clean_root = str(tmp_path / "clean")
+    append_batch(spark, crash_root, _df(spark, ADM_A), "b-a", window=W, admit_unique=True)
+    os.remove(os.path.join(crash_root, "_markers", "b-a.done"))
+    got = append_batch(spark, crash_root, _df(spark, ADM_A), "b-a", window=W, admit_unique=True)
+    want = append_batch(spark, clean_root, _df(spark, ADM_A), "b-a", window=W, admit_unique=True)
+    assert got == want and got["n_bloom_candidates"] == 0
+
+
+def test_numeric_looking_batch_ids_stay_committed(spark, tmp_path):
+    """Partition-type inference reads batch_id=001 back as the int 1;
+    store reads pin batch_id to its written string, so batches "001" and
+    "002" stay committed: admission rejects "001"'s copies in "002", and
+    compaction keeps every gram count and the rebuild every stored hash."""
+    from pdf_extraction_spark.plans.incremental import rebuild_bloom
+
+    num_root = str(tmp_path / "num")
+    ref_root = str(tmp_path / "ref")
+    runs = {}
+    for root, ids in ((num_root, ("001", "002")), (ref_root, ("b-a", "b-b"))):
+        s1 = append_batch(spark, root, _df(spark, ADM_A), ids[0], window=W, admit_unique=True)
+        s2 = append_batch(spark, root, _df(spark, ADM_B), ids[1], window=W, admit_unique=True)
+        runs[root] = [{k: v for k, v in s.items() if k != "batch_id"} for s in (s1, s2)]
+    assert runs[num_root] == runs[ref_root]
+    assert runs[num_root][1]["n_store_dups"] == 2 and runs[num_root][1]["n_docs"] == 2
+
+    comp = {root: compact_gram_index(spark, root) for root in (num_root, ref_root)}
+    assert comp[num_root] == comp[ref_root] and comp[num_root]["total_count"] > 0
+    grams = {root: sorted(map(tuple, TableIO(spark, root).read("gram_index").collect()))
+             for root in (num_root, ref_root)}
+    assert grams[num_root] == grams[ref_root]
+    assert rebuild_bloom(spark, num_root)["n_store"] == 5
+
+
+def test_old_bloom_layout_raises_until_rebuild_migrates(spark, tmp_path):
+    """A bloom table written before m_bits became a column of its rows
+    (the size kept in a side table) is refused with a message naming
+    rebuild_bloom; the rebuild rewrites it in the new layout and
+    admission then rejects every store duplicate."""
+    from pdf_extraction_spark.plans.incremental import rebuild_bloom
+
+    root = str(tmp_path / "w")
+    append_batch(spark, root, _df(spark, ADM_A), "b-a", window=W, admit_unique=True)
+    io = TableIO(spark, root)
+    io.rewrite(io.read("bloom").drop("m_bits"), "bloom", partition_by=["batch_id"])
+    assert "m_bits" not in io.read("bloom").columns
+
+    with pytest.raises(ValueError, match="rebuild_bloom"):
+        append_batch(spark, root, _df(spark, ADM_B), "b-b", window=W, admit_unique=True)
+    out = rebuild_bloom(spark, root)
+    assert {(r["m_bits"], r["batch_id"]) for r in
+            io.read("bloom").select("m_bits", "batch_id").distinct().collect()} \
+        == {(out["m_bits"], "__rebuilt__")}
+    s = append_batch(spark, root, _df(spark, ADM_B), "b-b", window=W, admit_unique=True)
+    assert (s["n_store_dups"], s["n_admitted"]) == (2, 2)

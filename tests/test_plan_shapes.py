@@ -535,6 +535,38 @@ def test_shingles_are_written_once():
     assert found == {("dedup.py", "word_shingles")}, found
 
 
+def test_store_reads_are_committed():
+    """CI guard: the completion marker is the ingest warehouse's only
+    commit record, so every store read in plans/incremental.py goes
+    through ``_committed`` (marked batches plus the maintenance
+    partitions): no literal ``io.read`` of a store table."""
+    import ast
+    import pathlib
+
+    p = (pathlib.Path(__file__).resolve().parent.parent
+         / "pdf_extraction_spark" / "plans" / "incremental.py")
+    store = {"corpus", "gram_index", "doc_hashes", "bloom"}
+    found = {(node.lineno, node.args[0].value)
+             for node in ast.walk(ast.parse(p.read_text()))
+             if isinstance(node, ast.Call)
+             and isinstance(node.func, ast.Attribute) and node.func.attr == "read"
+             and isinstance(node.func.value, ast.Name) and node.func.value.id == "io"
+             and node.args and isinstance(node.args[0], ast.Constant)
+             and node.args[0].value in store}
+    assert not found, found
+
+
+def test_bloom_size_has_no_side_table():
+    """CI guard: the Bloom filter size is the ``m_bits`` column of the
+    bloom table's rows, committed with its words — no ``bloom_meta`` table
+    is written or read anywhere in the package."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+    found = [p.name for p in root.rglob("*.py") if "bloom_meta" in p.read_text()]
+    assert not found, found
+
+
 def test_ann_cosine_topk_evaluates_one_udf_per_row(spark):
     """The scoring kernel returns qdot and cos as one struct: the executed
     plan of ann_cosine_topk evaluates ONE Python UDF per row (ranked by

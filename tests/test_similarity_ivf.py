@@ -75,14 +75,22 @@ def test_numpy_scoring_matches_hof_sql_twin(spark):
     interpreted higher-order-function column form kept as the SQL-twin
     documentation (_qdot_hof / _qnorm2_hof) — every quantized
     intermediate is an exact int64, so equality is exact, not
-    approximate."""
+    approximate. A tie vector (every x·10⁴ on .5: components i/64 with
+    i ≡ 2 mod 4) pins the rounding: half away from zero, as Spark's
+    HALF_UP round and DuckDB's round."""
     from pdf_extraction_spark.operators.similarity import (
+        DIM,
         _qdot_hof,
         _qnorm2_hof,
         quantized_scores,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    tie = [(-1) ** j * (2 + 4 * (j % 16)) / 64 for j in range(DIM)]
+    emb = (
+        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .unionByName(spark.createDataFrame([(-1, tie)], "vec_id long, embedding array<float>"))
+    )
     qv = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("embedding").alias("qe"))
     both = (
         emb.join(F.broadcast(qv))
